@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // InferFiltersFromGenerate duplicates the generator input into a
-      // pre-Generate filter (size(e)>0 AND isnotnull(e)); when the input
-      // is an interpreted higher-order transform (bigrams, shingles,
-      // n-grams) the whole lambda pipeline is re-evaluated 2 extra times
-      // per row — measured 3-5x slowdown on the explode-based ops. The
-      // inferred filters are redundant for semantics (pure pruning aid),
-      // so drop the rule on the throughput path.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(LocalSession.envCores)
     // warm-up off the clock: codec/JIT/parquet-footer init otherwise lands
     // on whichever query happens to run first
     try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).count())
@@ -39,18 +24,22 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    val results = selected.map { case (name, fn) =>
-      val runs = (1 to 2).map { _ =>
+    // a query that throws is an error, never a timing
+    val runs = selected.map { case (name, fn) =>
+      name -> Try((1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
-      }
-      name -> runs.min
+      }.min)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","protocol":"per-query min of 2 runs (warm steady-state)","queries":$qs,"sf":"$sfDir"}""")
+    val results = runs.collect { case (k, Success(s)) => k -> s }
+    val errors = runs.collect { case (k, Failure(e)) => k -> String.valueOf(e) }
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Verify.json(k)}:$v" }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) => k -> v.toString })
+    val es = obj(errors.map { case (k, v) => k -> Verify.json(v) })
+    println(s"""{"metric":"total","value":${results.values.sum},"unit":"sec","protocol":"per-query min of 2 runs (warm steady-state)","queries":$qs,"errors":$es,"sf":"$sfDir"}""")
     spark.stop()
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -296,7 +296,7 @@ object Compiler {
             .reduceLeft(join(_, _, "inner"))
       }
 
-    case PathPattern(s, path, o) => compPath(g, s, path, o, None)
+    case pp: PathPattern => compPath(PathEval.Terms(g), pp, None)
 
     case Project(vars, in) =>
       val c = comp(in, g)
@@ -334,10 +334,10 @@ object Compiler {
       (l, r) match {
         case (_, pp: PathPattern) if seedablePath(pp) =>
           val cl = comp(l, g)
-          join(cl, compPath(g, pp.s, pp.path, pp.o, Some(cl)), "inner")
+          join(cl, compPath(PathEval.Terms(g), pp, Some(cl)), "inner")
         case (pp: PathPattern, _) if seedablePath(pp) =>
           val cr = comp(r, g)
-          join(compPath(g, pp.s, pp.path, pp.o, Some(cr)), cr, "inner")
+          join(compPath(PathEval.Terms(g), pp, Some(cr)), cr, "inner")
         case _ => join(comp(l, g), comp(r, g), "inner")
       }
 
@@ -345,7 +345,7 @@ object Compiler {
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          leftJoin(cl, compPath(g, pp.s, pp.path, pp.o, Some(cl)), cond)
+          leftJoin(cl, compPath(PathEval.Terms(g), pp, Some(cl)), cond)
         case _ => leftJoin(comp(l, g), comp(r, g), cond)
       }
 
@@ -353,7 +353,7 @@ object Compiler {
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          halfJoin(cl, compPath(g, pp.s, pp.path, pp.o, Some(cl)), "left_semi")
+          halfJoin(cl, compPath(PathEval.Terms(g), pp, Some(cl)), "left_semi")
         case _ => halfJoin(comp(l, g), comp(r, g), "left_semi")
       }
 
@@ -412,7 +412,7 @@ object Compiler {
         else out
       }
 
-    case Lateral(l, r) => lateral(comp(l, g), r, g)
+    case Lateral(l, r) => lateral(comp(l, g), r, g, comp)
 
     case Unfold(listVar, outVar, idxVar, in) =>
       unfoldC(comp(in, g), listVar, outVar, idxVar)
@@ -805,36 +805,8 @@ object Compiler {
       require(patterns.nonEmpty, "empty BGP")
       comp(QuadBgp(TVar(AGV), patterns), g)
 
-    case PathPattern(s0, path, o0) =>
-      val nq = namedQuadsDf(g)
-      // seeded per-graph evaluation for constant endpoints (the GRAPH
-      // ?var twin of compPath's ALP seeding): the seed set is
-      // (graph, const) for every named graph — the packed closure walks
-      // only each graph's cone from the constant
-      val seedOnG = g.spark.conf
-        .getOption("graft.pathSeededEval").forall(_ != "off")
-      def constSeeds(t: Term): DataFrame =
-        namedGraphNamesDf(g).select(col("g"), TermCols.const(t).as("n"))
-      var prs: DataFrame =
-        if (!seedOnG || !PathEval.containsClosure(path)) PathEval.pairsG(nq, path)
-        else (s0, o0) match {
-          case (TConst(t), _) => PathEval.pairsGFrom(nq, path, constSeeds(t))
-          case (_, TConst(t)) =>
-            PathEval.pairsGFrom(nq, PathEval.inverse(path), constSeeds(t))
-              .select(col("g"), col("dst").as("src"), col("src").as("dst"))
-          case _ => PathEval.pairsG(nq, path)
-        }
-      if (PathEval.allowsZero(path)) {
-        // zero-length const endpoints match themselves in EVERY named
-        // graph (per-graph twin of the PathPattern zero augmentation)
-        val consts = Seq(s0, o0).collect { case TConst(t) => t }.distinct
-        consts.foreach { t =>
-          prs = prs.union(namedGraphNamesDf(g).select(col("g"),
-            TermCols.const(t).as("src"), TermCols.const(t).as("dst")))
-        }
-        if (consts.nonEmpty) prs = prs.distinct()
-      }
-      bindPairG(prs, s0, o0)
+    // per-graph pairs keep their graph as the hidden column
+    case pp: PathPattern => compPath(PathEval.PerGraph(namedQuadsDf(g)), pp, None)
 
     case Table(vars, rows) =>
       // VALUES is graph-independent: per-graph semantics yield the table
@@ -1019,38 +991,6 @@ object Compiler {
     }
   }
 
-  /** Bind a (g, src, dst) pair frame against a path pattern's s/o slots,
-   * keeping the graph column as [[AGV]] — the per-graph twin of
-   * [[bindPair]] (same bag semantics). */
-  private def bindPairG(pairs: DataFrame, s: TermPat, o: TermPat): Compiled = {
-    var df = pairs
-    s match {
-      case TConst(t) => df = df.filter(col("src") === TermCols.const(t))
-      case _ =>
-    }
-    o match {
-      case TConst(t) => df = df.filter(col("dst") === TermCols.const(t))
-      case _ =>
-    }
-    val ag = col("g").as(AGV)
-    (s, o) match {
-      case (TVar(a), TVar(b)) if a == b =>
-        Compiled(df.filter(col("src") === col("dst"))
-            .select(ag, col("src").as(a)), Set(AGV, a), Set.empty)
-      case (TVar(a), TVar(b)) =>
-        Compiled(df.select(ag, col("src").as(a), col("dst").as(b)),
-          Set(AGV, a, b), Set.empty)
-      case (TVar(a), _) =>
-        Compiled(df.select(ag, col("src").as(a)), Set(AGV, a), Set.empty)
-      case (_, TVar(b)) =>
-        Compiled(df.select(ag, col("dst").as(b)), Set(AGV, b), Set.empty)
-      case _ =>
-        // both const: per-graph existence gate — one row per graph where
-        // the pair holds (the per-graph twin of bindPair's limit(1))
-        Compiled(df.select(ag).distinct(), Set(AGV), Set.empty)
-    }
-  }
-
   /** SPARQL bag union with unbound padding for one-sided vars. */
   private def unionPad(cl: Compiled, cr: Compiled): Compiled = {
     val all = (cl.vars ++ cr.vars).toSeq.sorted
@@ -1092,60 +1032,67 @@ object Compiler {
     PathEval.containsClosure(pp.path) &&
       (pp.s.isInstanceOf[TVar] || pp.o.isInstanceOf[TVar])
 
-  /** Compile one path pattern. For closure-bearing paths with a bound
-   * endpoint — a CONSTANT subject/object, or (when `leftSeeds` carries the
-   * join partner's compilation) a variable endpoint the partner binds
+  /** Compile one path pattern in a [[PathEval.Space]]: the active graph's
+   * terms, or every named graph at once for the single-plan GRAPH ?var
+   * (the graph key binds as [[AGV]]). For closure-bearing paths with a
+   * bound endpoint — a CONSTANT subject/object, or (when `partner` carries
+   * the join partner's compilation) a variable endpoint the partner binds
    * certainly — evaluation is SEEDED: the closure frontier starts from the
    * bound node set and walks only the reachable cone (the ALP algorithm,
    * PathEngine.java:49–122), instead of materializing the global closure
-   * and post-filtering. Non-closure paths keep the global plan: Catalyst
-   * pushes endpoint filters through scan/join chains by itself; only the
-   * iterative loop (a localCheckpoint pushdown barrier) needs help. */
-  private def compPath(g: GraphSource, s: TermPat, path: Path, o: TermPat,
-                       leftSeeds: Option[Compiled]): Compiled = {
-    def seedDfFor(p: TermPat): Option[DataFrame] = p match {
-      case TVar(v) => leftSeeds.filter(_.certain(v))
-        .map(_.df.select(col(v).as("n")))
+   * and post-filtering. Constants go first, the subject before the object;
+   * a bound object seeds the inverse walk. Non-closure paths keep the
+   * global plan: Catalyst pushes endpoint filters through scan/join chains
+   * by itself; only the iterative loop (a localCheckpoint pushdown
+   * barrier) needs help. */
+  private def compPath(sp: PathEval.Space, pp: PathPattern,
+                       partner: Option[Compiled]): Compiled = {
+    val PathPattern(s, path, o) = pp
+    def const(p: TermPat) = p match {
+      case TConst(t) => Some(Left(t))
+      case _ => None
+    }
+    def bound(p: TermPat) = p match {
+      case TVar(v) =>
+        partner.filter(_.certain(v)).map(c => Right(c.df.select(col(v).as("n"))))
       case _ => None
     }
     // escape hatch (and the honest A/B lever for the seeded-vs-global
     // closure benchmark): graft.pathSeededEval=off forces the pre-r5
     // global-closure-then-filter plan
-    val seedOn = g.spark.conf
-      .getOption("graft.pathSeededEval").forall(_ != "off")
-    var pairs: DataFrame =
-      if (!PathEval.containsClosure(path) || !seedOn) PathEval.pairs(g, path)
-      else (s, o) match {
-        case (TConst(t), _) => PathEval.pairsFromConst(g, path, t)
-        case (_, TConst(t)) => PathEval.pairsFromConst(g, PathEval.inverse(path), t)
-          .select(col("dst").as("src"), col("src").as("dst"))
-        case _ => seedDfFor(s) match {
-          case Some(sd) => PathEval.pairsFromSeeds(g, path, sd)
-          case None => seedDfFor(o) match {
-            case Some(sd) => PathEval.pairsFromSeeds(g, PathEval.inverse(path), sd)
-              .select(col("dst").as("src"), col("src").as("dst"))
-            case None => PathEval.pairs(g, path)
-          }
-        }
-      }
+    val seedOn = PathEval.containsClosure(path) &&
+      sp.spark.conf.getOption("graft.pathSeededEval").forall(_ != "off")
+    val seeds: Option[(Either[Term, DataFrame], Boolean)] =
+      if (!seedOn) None
+      else const(s).map(_ -> false).orElse(const(o).map(_ -> true))
+        .orElse(bound(s).map(_ -> false)).orElse(bound(o).map(_ -> true))
+    var pairs = seeds match {
+      case None => PathEval.eval(sp, path, None)
+      case Some((sd, false)) => PathEval.seeded(sp, path, sd)
+      case Some((sd, true)) =>
+        PathEval.swap(sp, PathEval.seeded(sp, PathEval.inverse(path), sd))
+    }
     // A zero-length-matching path with a CONSTANT endpoint matches that
     // constant against itself even when the term is absent from the
     // graph ({ ?s :p* :o } on the empty graph binds ?s = :o — SPARQL
     // 18.4 ZeroLengthPath over the evaluation's term universe; the W3C
-    // empty-dataset cases pin this).
+    // empty-dataset cases pin this). Per graph, it matches in EVERY
+    // named graph.
     if (PathEval.allowsZero(path)) {
       val consts = Seq(s, o).collect { case TConst(t) => t }.distinct
       consts.foreach { t =>
-        pairs = pairs.union(g.spark.range(1)
-          .select(TermCols.const(t).as("src"), TermCols.const(t).as("dst")))
+        pairs = pairs.union(sp.constSeeds(t).select(
+          sp.keys.map(col) :+ col("n").as("src") :+ col("n").as("dst"): _*))
       }
       if (consts.nonEmpty) pairs = pairs.distinct()
     }
-    bindPair(pairs, s, o)
+    bindPair(pairs, sp.keys.map(col(_).as(AGV)), s, o)
   }
 
-  /** Bind a (src, dst) pair table against the s/o slots of a path pattern. */
-  private def bindPair(pairs: DataFrame, s: TermPat, o: TermPat): Compiled = {
+  /** Bind a (keys…, src, dst) pair table against the s/o slots of a path
+   * pattern; `keys` are the key columns to keep (the per-graph [[AGV]]). */
+  private def bindPair(pairs: DataFrame, keys: Seq[Column],
+                       s: TermPat, o: TermPat): Compiled = {
     var df = pairs
     s match {
       case TConst(t) => df = df.filter(col("src") === TermCols.const(t))
@@ -1156,16 +1103,20 @@ object Compiler {
       case _ =>
     }
     // bag semantics here; arbitrary-length paths are already distinct at
-    // the pairs() level (the ALP visited-set contract), fixed-shape paths
+    // the pairs level (the ALP visited-set contract), fixed-shape paths
     // keep duplicates like their BGP flattening would.
+    val kv = if (keys.isEmpty) Set.empty[String] else Set(AGV)
+    def bind(cv: (String, String)*) = Compiled(
+      df.select(keys ++ cv.map { case (c, v) => col(c).as(v) }: _*),
+      kv ++ cv.map(_._2), Set.empty)
     (s, o) match {
       case (TVar(a), TVar(b)) if a == b =>
-        Compiled(df.filter(col("src") === col("dst")).select(col("src").as(a)),
-          Set(a), Set.empty)
-      case (TVar(a), TVar(b)) =>
-        Compiled(df.select(col("src").as(a), col("dst").as(b)), Set(a, b), Set.empty)
-      case (TVar(a), _) => Compiled(df.select(col("src").as(a)), Set(a), Set.empty)
-      case (_, TVar(b)) => Compiled(df.select(col("dst").as(b)), Set(b), Set.empty)
+        df = df.filter(col("src") === col("dst")); bind("src" -> a)
+      case (TVar(a), TVar(b)) => bind("src" -> a, "dst" -> b)
+      case (TVar(a), _) => bind("src" -> a)
+      case (_, TVar(b)) => bind("dst" -> b)
+      // both const: an existence gate — per graph, one row where the pair holds
+      case _ if keys.nonEmpty => Compiled(df.select(keys: _*).distinct(), kv, Set.empty)
       case _ => Compiled(df.select(lit(1).as("__unit")).limit(1), Set.empty, Set.empty)
     }
   }
@@ -1347,7 +1298,7 @@ object Compiler {
    * tag + checkpoint are paid only when [[perRowSensitive]] says the RHS
    * needs them — a plain RHS stays the old single-join plan. */
   private def lateral(l: Compiled, r: Op, g: GraphSource,
-                      leaf: (Op, GraphSource) => Compiled = comp): Compiled =
+                      leaf: (Op, GraphSource) => Compiled): Compiled =
     if (!perRowSensitive(r)) lat(l, r, g, tag = "", leaf)
     else {
       val t = freshTag()
@@ -1444,7 +1395,7 @@ object Compiler {
    * per-row-sensitive); the result holds left + RHS columns with the
    * substitution semantics applied. */
   private def lat(l: Compiled, r: Op, g: GraphSource, tag: String,
-                  leaf: (Op, GraphSource) => Compiled = comp): Compiled = r match {
+                  leaf: (Op, GraphSource) => Compiled): Compiled = r match {
     case Filter(cond, in) =>
       // RHS filters see the LEFT bindings (lateral-3 "filter scope")
       val c = lat(l, in, g, tag, leaf)
@@ -1454,7 +1405,7 @@ object Compiler {
       require(!c.vars.contains(name), s"Extend onto bound var $name")
       Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
         c.certain, c.maybe + name)
-    case Join(a, b) => lat(lat(l, a, g, tag, leaf), b, g, tag)
+    case Join(a, b) => lat(lat(l, a, g, tag, leaf), b, g, tag, leaf)
     case Union(a, b) => unionPad(lat(l, a, g, tag, leaf), lat(l, b, g, tag, leaf))
     case Distinct(in) =>
       // per-left-row dedup: the tag keeps duplicate left rows distinct
@@ -1667,16 +1618,28 @@ object Compiler {
 }
 
 /**
- * Property-path evaluation over the triple DataFrame — set-at-a-time
- * replacement for the reference's per-binding ALP BFS
- * (PathEngine.java:96–129). Closure operators reuse the semi-naive
- * frontier-delta loop (graft.ops.Graphs), whose per-round work is
- * proportional to the new-pairs delta and whose lineage is truncated by
+ * Property-path evaluation — the set-at-a-time replacement for the
+ * reference's per-binding ALP BFS (PathEngine.java:96–129). ONE recursion
+ * over [[Path]], [[eval]], serves three spaces; a [[Space]] supplies only
+ * its key columns, its leaf scans and its zero-length node set:
+ *  - [[Terms]]: term structs over a GraphSource's ACTIVE graph;
+ *  - [[Ids]]: LONG ids over an id-encoded snapshot's layouts — closure
+ *    joins move 16-byte rows, and the dictionary joins in exactly once per
+ *    endpoint, at the projection edge;
+ *  - [[PerGraph]]: term structs within each named graph of a (g, s, p, o)
+ *    frame, for the single-plan GRAPH ?var — every join and closure keys
+ *    on g, so a walk never crosses graphs.
+ * GLOBAL evaluation (no seeds) yields every (src, dst) pair. SEEDED
+ * evaluation — a bound endpoint, the ALP analog (PathEngine.java:49–122
+ * seeds a BFS at the bound node) — yields the pairs whose src is a seed
+ * and walks only the seeds' cones: the same frontier-delta loop as the
+ * global closure (graft.ops.Graphs), started from the seeds' out-edges
+ * instead of every edge. Closure rounds are lineage-truncated by
  * localCheckpoint — the property the north rule's CC pass also relies on.
  */
 object PathEval {
 
-  import Compiler.{GraphSource, SnapshotGraph}
+  import Compiler.{EncodedSnapshotGraph, GraphSource, SnapshotGraph}
 
   /** Can `path` match with zero steps? (Drives the constant-endpoint
    * zero-length augmentation in the PathPattern compile.) */
@@ -1730,213 +1693,118 @@ object PathEval {
     case _ => false
   }
 
-  /** The ACTIVE graph's triples: paths evaluate in the active graph
-   * exactly like BGPs, so on a quad table only default-graph rows (and no
-   * empty-graph marker rows) participate — without this filter a
+  /** Where a path walks. Every pair frame of a space is (keys…, src, dst);
+   * a seed frame is (keys…, n). */
+  sealed trait Space {
+    def spark: SparkSession
+    def keys: Seq[String]
+    /** (keys…, src, dst) of one predicate's edges. */
+    def link(iri: String): DataFrame
+    /** Edges whose predicate is an IRI not in `excluded`, optionally
+     * reversed. */
+    def negSet(excluded: Seq[String], reversed: Boolean): DataFrame
+    /** (keys…, n, n) for every subject/object node: the zero-length set. */
+    def nodes: DataFrame
+    /** The seed frame of a constant endpoint. */
+    def constSeeds(t: Term): DataFrame
+  }
+
+  /** Term structs over the ACTIVE graph: paths evaluate in the active
+   * graph exactly like BGPs, so on a quad table only default-graph rows
+   * (and no empty-graph marker rows) participate — without this filter a
    * top-level path would traverse NAMED-graph edges (caught by the quad
-   * differential gate). Shares the Bgp scan's definition. */
-  private def activeTriples(g: GraphSource): DataFrame =
-    Compiler.defaultGraphTriples(g.df)
-
-  /** All (src, dst) term pairs connected by `path`. Over a store snapshot,
-   * a plain link scans the POS layout with the predicate pushed down (the
-   * hot case — every closure's per-round probe); composite paths fall back
-   * to the struct view. Over an ID-ENCODED snapshot, id-expressible paths
-   * evaluate entirely on LONG columns ([[pairsId]]) — closure joins move
-   * 16-byte rows, the dictionary joins in exactly once per endpoint at
-   * the projection edge. */
-  def pairs(g: GraphSource, path: Path): DataFrame = g match {
-    case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-      decodeIdPairs(esg, pairsId(esg, path))
-    case _ => pairs0(g, path)
-  }
-
-  // ---- seeded (bound-endpoint) evaluation — the ALP analog ------------
-  //
-  // Jena's path engine never closes the whole relation when an endpoint
-  // is known: ALP seeds a BFS at the bound node and visits its cone
-  // (path/eval/PathEngine.java:49–122, PathEngineSPARQL.java:36). The
-  // distributed analog: the SAME frontier-delta loop as the global
-  // closure, with the first frontier = the seed set's out-edges instead
-  // of every edge (Graphs.reachableFrom). Results equal
-  // pairs(g, path) restricted to src ∈ seeds, bag semantics per shape.
-
-  /** Seeded pairs for one CONSTANT endpoint term (seed the inverse path
-   * and swap for a bound object). Over an encoded snapshot the walk stays
-   * in id space: one driver dictionary probe for the seed, closure joins
-   * on LONGs, decode at the projection edge. */
-  def pairsFromConst(g: GraphSource, path: Path, t: graft.model.Term): DataFrame =
-    g match {
-      case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-        val seedIds = esg.idsOf(Seq(t)).get(t) match {
-          case Some(id) => esg.spark.range(1).select(lit(id).as("n"))
-          case None => esg.spark.range(0).select(col("id").as("n"))
-        }
-        decodeIdPairs(esg, pairsIdFrom(esg, path, seedIds))
+   * differential gate). Over a store snapshot a link scans the POS layout
+   * with the predicate pushed down (the hot case — every closure's
+   * per-round probe). Over an ID-ENCODED snapshot every id-expressible
+   * subtree of a global walk evaluates in [[Ids]] ([[eval]]). */
+  final case class Terms(g: GraphSource) extends Space {
+    def spark: SparkSession = g.spark
+    def keys: Seq[String] = Nil
+    private def active: DataFrame = Compiler.defaultGraphTriples(g.df)
+    def link(iri: String): DataFrame = g match {
+      case sg: SnapshotGraph =>
+        sg.scanPattern(TriplePattern(TVar("src"), TConst(Term.iri(iri)), TVar("dst"))).df
       case _ =>
-        pairsFrom0(g, path,
-          g.spark.range(1).select(TermCols.const(t).as("n")))
+        active.filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
+          .select(col("s").as("src"), col("o").as("dst"))
     }
-
-  /** Seeded pairs for a join-bound endpoint: `seeds` is a one-column frame
-   * of term structs (the join partner's certain values for the endpoint
-   * var). Over an encoded snapshot the seeds encode through one dictionary
-   * join, then the walk stays in id space. */
-  def pairsFromSeeds(g: GraphSource, path: Path, seeds: DataFrame): DataFrame =
-    g match {
-      case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-        val sd = seeds.toDF("n").distinct()
-        val idSeeds = sd.join(esg.terms,
-            col("n.kind") === col("kind") && col("n.lex") === col("lex") &&
-              col("n.dt") === col("dt") && col("n.lang") === col("lang"))
-          .select(col("id").as("n"))
-        decodeIdPairs(esg, pairsIdFrom(esg, path, idSeeds))
-      case _ => pairsFrom0(g, path, seeds)
+    def negSet(excluded: Seq[String], reversed: Boolean): DataFrame = {
+      val base = active.filter(TermCols.isIri(col("p")) &&
+        !TermCols.lex(col("p")).isin(excluded: _*))
+      if (reversed) base.select(col("o").as("src"), col("s").as("dst"))
+      else base.select(col("s").as("src"), col("o").as("dst"))
     }
-
-  /** Identity pairs over seeds ∩ graph nodes (the restricted zero-length
-   * set: global allNodes ∩ src∈seeds). */
-  private def seedIdentity(nodes: DataFrame, seeds: DataFrame): DataFrame =
-    nodes.join(seeds.toDF("n").distinct(), col("src") === col("n"), "left_semi")
-
-  private def pairsFrom0(g: GraphSource, path: Path, seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("n").distinct()
-    path match {
-      // leaves: a single scan — restrict src by a semi-join against the
-      // (small, broadcastable) seed frame; Catalyst keeps the predicate
-      // pushdown of the underlying scan
-      case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) =>
-        pairs(g, path).join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(q) => pairsFrom0(g, inverse(q), seeds)
-      case PSeq(a, b) =>
-        val l = pairsFrom0(g, a, seeds)
-        val r = pairsFrom0(g, b, l.select(col("dst").as("n")))
-        l.select(col("src"), col("dst").as("__mid"))
-          .join(r.select(col("src").as("__mid2"), col("dst")),
-            col("__mid") === col("__mid2"))
-          .select(col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsFrom0(g, a, seeds).union(pairsFrom0(g, b, seeds))
-      case POneOrMore(q) =>
-        // inner pairs stay global (they ARE the edge relation the cone
-        // walks); the closure itself is seeded. Select by NAME first:
-        // reachableFrom renames positionally and scan output order is
-        // not guaranteed (same guard as the global closure callers).
-        Graphs.reachableFrom(pairs(g, q).select(col("src"), col("dst")), seeds)
-      case PZeroOrMore(q) =>
-        Graphs.reachableFrom(pairs(g, q).select(col("src"), col("dst")), seeds)
-          .union(seedIdentity(allNodes(g), seeds)).distinct()
-      case PZeroOrOne(q) =>
-        pairsFrom0(g, q, seeds)
-          .union(seedIdentity(allNodes(g), seeds)).distinct()
-      case PFixedLength(q, n) =>
-        require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsFrom0(g, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsFrom0(g, q, acc.select(col("dst").as("n")))
-          acc = acc.select(col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst"))
-        }
-        acc
-      case PMod(q, min, max) =>
-        require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-        if (max < 0) {
-          val head =
-            if (min == 0) seedIdentity(allNodes(g), seeds)
-            else pairsFrom0(g, PFixedLength(q, min), seeds)
-          val star = pairsFrom0(g, PZeroOrMore(q), head.select(col("dst").as("n")))
-          head.select(col("src"), col("dst").as("__m"))
-            .join(star.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst")).distinct()
-        } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsFrom0(g, PFixedLength(q, k), seeds))
-          val fixed =
-            if (parts.isEmpty) seedIdentity(allNodes(g), seeds)
-            else parts.reduce(_ union _)
-          val withZero =
-            if (min == 0) fixed.union(seedIdentity(allNodes(g), seeds)) else fixed
-          withZero.distinct()
-        }
-      case PDistinct(q) => pairsFrom0(g, q, seeds).distinct()
-      case PMulti(q) => pairsFrom0(g, q, seeds)
-      case PShortest(q) =>
-        throw new UnsupportedOperationException(
-          s"P_Shortest is not implemented (matching the reference): $q")
+    def nodes: DataFrame = {
+      val n = active.select(col("s").as("n")).union(active.select(col("o").as("n")))
+        .filter(col("n").isNotNull).distinct()
+      n.select(col("n").as("src"), col("n").as("dst"))
     }
+    def constSeeds(t: Term): DataFrame = spark.range(1).select(TermCols.const(t).as("n"))
   }
 
-  /** Id-space twin of [[pairsFrom0]] (seeds: one LONG column "n"). */
-  private def pairsIdFrom(esg: Compiler.EncodedSnapshotGraph, path: Path,
-                          seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("n").distinct()
-    def idIdentity: DataFrame =
-      allNodeIds(esg).join(seeds, col("src") === col("n"), "left_semi")
-    path match {
-      case PLink(_) =>
-        pairsId(esg, path).join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(PLink(i)) =>
-        pairsId(esg, PInverse(PLink(i)))
-          .join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(q) => pairsIdFrom(esg, inverse(q), seeds)
-      case PSeq(a, b) =>
-        val l = pairsIdFrom(esg, a, seeds)
-        val r = pairsIdFrom(esg, b, l.select(col("dst").as("n")))
-        l.select(col("src"), col("dst").as("__mid"))
-          .join(r.select(col("src").as("__mid2"), col("dst")),
-            col("__mid") === col("__mid2"))
-          .select(col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsIdFrom(esg, a, seeds).union(pairsIdFrom(esg, b, seeds))
-      case POneOrMore(q) =>
-        Graphs.reachableFrom(pairsId(esg, q).select(col("src"), col("dst")), seeds)
-      case PZeroOrMore(q) =>
-        Graphs.reachableFrom(pairsId(esg, q).select(col("src"), col("dst")), seeds)
-          .union(idIdentity).distinct()
-      case PZeroOrOne(q) =>
-        pairsIdFrom(esg, q, seeds).union(idIdentity).distinct()
-      case PFixedLength(q, n) =>
-        require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsIdFrom(esg, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsIdFrom(esg, q, acc.select(col("dst").as("n")))
-          acc = acc.select(col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst"))
-        }
-        acc
-      case PMod(q, min, max) =>
-        require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-        if (max < 0) {
-          val head =
-            if (min == 0) idIdentity
-            else pairsIdFrom(esg, PFixedLength(q, min), seeds)
-          val star = pairsIdFrom(esg, PZeroOrMore(q), head.select(col("dst").as("n")))
-          head.select(col("src"), col("dst").as("__m"))
-            .join(star.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst")).distinct()
-        } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsIdFrom(esg, PFixedLength(q, k), seeds))
-          val fixed = if (parts.isEmpty) idIdentity else parts.reduce(_ union _)
-          val withZero = if (min == 0) fixed.union(idIdentity) else fixed
-          withZero.distinct()
-        }
-      case PDistinct(q) => pairsIdFrom(esg, q, seeds).distinct()
-      case PMulti(q) => pairsIdFrom(esg, q, seeds)
-      case other => throw new IllegalStateException(
-        s"pairsIdFrom: $other is not id-expressible (idExpressible out of sync)")
+  /** LONG ids over an id-encoded snapshot's layouts. A negated property
+   * set needs per-predicate KIND checks (a dictionary join per scan), so
+   * it is not id-expressible and keeps the [[Terms]] face. */
+  final case class Ids(esg: EncodedSnapshotGraph) extends Space {
+    def spark: SparkSession = esg.spark
+    def keys: Seq[String] = Nil
+    def link(iri: String): DataFrame = {
+      val scan = esg.idLayout("pos")
+      (esg.idsOf(Seq(Term.iri(iri))).values.headOption match {
+        case Some(pid) => scan.where(col("p_id") === pid)
+        case None => scan.limit(0)
+      }).select(col("s_id").as("src"), col("o_id").as("dst"))
     }
+    def negSet(excluded: Seq[String], reversed: Boolean): DataFrame =
+      throw new IllegalStateException("a negated property set is not id-expressible")
+    def nodes: DataFrame = {
+      val spo = esg.idLayout("spo")
+      spo.select(col("s_id").as("n")).union(spo.select(col("o_id").as("n")))
+        .distinct().select(col("n").as("src"), col("n").as("dst"))
+    }
+    /** One driver dictionary probe; a term not in the dictionary seeds
+     * nothing. */
+    def constSeeds(t: Term): DataFrame = esg.idsOf(Seq(t)).get(t) match {
+      case Some(id) => spark.range(1).select(lit(id).as("n"))
+      case None => spark.range(0).select(col("id").as("n"))
+    }
+    /** Term-struct seeds to ids: one dictionary join. */
+    def encode(seeds: DataFrame): DataFrame =
+      seeds.toDF("n").distinct().join(esg.terms,
+          col("n.kind") === col("kind") && col("n.lex") === col("lex") &&
+            col("n.dt") === col("dt") && col("n.lang") === col("lang"))
+        .select(col("id").as("n"))
   }
 
-  /** Paths the id-space evaluator covers. PNegPropSet needs per-predicate
-   * KIND checks (a dictionary join per scan) — it keeps the decoded
-   * fallback; PShortest raises either way. */
+  /** Term structs within each named graph of `nq`, a (g, s, p, o) frame of
+   * named quads (marker rows tolerated: every scan filters on p or s).
+   * One plan for ALL graphs — the shape that survives one-graph-per-
+   * document scale, where per-graph plan enumeration cannot. */
+  final case class PerGraph(nq: DataFrame) extends Space {
+    def spark: SparkSession = nq.sparkSession
+    def keys: Seq[String] = Seq("g")
+    def link(iri: String): DataFrame =
+      nq.filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
+        .select(col("g"), col("s").as("src"), col("o").as("dst"))
+    def negSet(excluded: Seq[String], reversed: Boolean): DataFrame = {
+      val base = nq.filter(TermCols.isIri(col("p")) &&
+        !TermCols.lex(col("p")).isin(excluded: _*))
+      if (reversed) base.select(col("g"), col("o").as("src"), col("s").as("dst"))
+      else base.select(col("g"), col("s").as("src"), col("o").as("dst"))
+    }
+    def nodes: DataFrame = {
+      val t = nq.filter(col("s").isNotNull)
+      val n = t.select(col("g"), col("s").as("n")).union(t.select(col("g"), col("o").as("n")))
+        .filter(col("n").isNotNull).distinct()
+      n.select(col("g"), col("n").as("src"), col("n").as("dst"))
+    }
+    /** The constant in EVERY named graph. */
+    def constSeeds(t: Term): DataFrame =
+      nq.select(col("g")).distinct().select(col("g"), TermCols.const(t).as("n"))
+  }
+
+  /** Paths [[Ids]] covers: all but negated property sets (and PShortest,
+   * which raises either way). */
   private def idExpressible(p: Path): Boolean = p match {
     case PLink(_) => true
     case PInverse(q) => idExpressible(q)
@@ -1952,352 +1820,144 @@ object PathEval {
     case _ => false
   }
 
-  /** (src, dst) LONG id pairs connected by `path` over the encoded
-   * layouts — the same recursion as [[pairs0]] with joins/closures on
-   * 8-byte ids. */
-  private[graft] def pairsId(esg: Compiler.EncodedSnapshotGraph,
-                             path: Path): DataFrame = path match {
-    case PLink(iri) =>
-      val ids = esg.idsOf(Seq(graft.model.Term.iri(iri)))
-      val scan = esg.idLayout("pos")
-      ids.values.headOption match {
-        case Some(pid) => scan.where(col("p_id") === pid)
-          .select(col("s_id").as("src"), col("o_id").as("dst"))
-        case None => scan.limit(0)
-          .select(col("s_id").as("src"), col("o_id").as("dst"))
+  /** The (keys…, src, dst) pairs connected by `path` in `sp`: all of them
+   * (`seeds` None), or those whose (keys…, src) is in the seed frame. On an
+   * encoded snapshot's [[Terms]] face an id-expressible global subtree
+   * hands off to [[Ids]], decoding at the edge — also beside a negated
+   * property set and inside a seeded walk. Bag semantics per shape: the
+   * arbitrary-length forms are sets (the ALP visited-set contract), the
+   * fixed shapes keep duplicates like their BGP flattening would. */
+  def eval(sp: Space, path: Path, seeds0: Option[DataFrame]): DataFrame = sp match {
+    case Terms(esg: EncodedSnapshotGraph) if seeds0.isEmpty && idExpressible(path) =>
+      decodeIdPairs(esg, eval(Ids(esg), path, None))
+    case _ =>
+      val seeds = seeds0.map(_.toDF(sp.keys.map("__s" + _) :+ "n": _*).distinct())
+      def nodes = seeds.fold(sp.nodes)(restrict(sp, sp.nodes, _))
+      def same(p: Path) = eval(sp, p, seeds)
+      // a seeded walk's next step starts where `d` ends
+      def from(d: DataFrame, p: Path) = eval(sp, p, seeds.map(_ => reseed(sp, d)))
+      path match {
+        // leaves: a single scan; a seeded one restricts src by a semi-join
+        // against the (small, broadcastable) seed frame, and Catalyst keeps
+        // the predicate pushdown of the underlying scan
+        case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) if seeds.nonEmpty =>
+          restrict(sp, eval(sp, path, None), seeds.get)
+        case PLink(iri) => sp.link(iri)
+        case PNegPropSet(fwd, inv) =>
+          // SPARQL 1.1 §9.1 NPS translation: !(p…|^q…) =
+          //   NPS(fwd)  ∪  ^NPS(inv) — each direction present only when its
+          // member list is (P_NegPropSet.java fwd/bwd split)
+          (fwd.nonEmpty, inv.nonEmpty) match {
+            case (_, false) => sp.negSet(fwd, reversed = false)
+            case (false, true) => sp.negSet(inv, reversed = true)
+            case (true, true) =>
+              sp.negSet(fwd, reversed = false).union(sp.negSet(inv, reversed = true))
+          }
+        // a seeded inverse walks the structural inverse forward
+        case PInverse(q) if seeds.nonEmpty => same(inverse(q))
+        case PInverse(q) => swap(sp, eval(sp, q, None))
+        case PAlt(a, b) => same(a).union(same(b)) // bag union (SPARQL alt)
+        case PSeq(a, b) =>
+          // bag semantics — one pair per intermediate node, matching the
+          // reference's TransformPathFlatten rewrite of p1/p2 into a BGP
+          val l = same(a)
+          compose(sp, l, from(l, b))
+        // the closure's inner pairs stay global: they ARE the edge relation
+        // the cone walks
+        case POneOrMore(q) => closure(sp, eval(sp, q, None), seeds)
+        case PZeroOrMore(q) =>
+          closure(sp, eval(sp, q, None), seeds).union(nodes).distinct()
+        case PZeroOrOne(q) => same(q).union(nodes).distinct()
+        case PFixedLength(q, n) =>
+          require(n >= 1, "PFixedLength n must be >= 1")
+          // global: one step relation, re-joined; seeded: each step walks
+          // on from the previous step's ends
+          val first = same(q)
+          (2 to n).foldLeft(first)((acc, _) =>
+            compose(sp, acc, if (seeds.isEmpty) first else from(acc, q)))
+        case PMod(q, min, max) =>
+          require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
+          if (max < 0) {
+            // p{n,} = p{n} then p* — the closure handles the unbounded tail
+            val head = if (min == 0) nodes else same(PFixedLength(q, min))
+            compose(sp, head, from(head, PZeroOrMore(q))).distinct()
+          } else {
+            // bounded: union of the fixed lengths, distinct pairs (the ALP
+            // visited-set contract applies to mod paths in the reference)
+            val parts = (math.max(min, 1) to max).map(k => same(PFixedLength(q, k)))
+            val fixed = if (parts.isEmpty) nodes else parts.reduce(_ union _)
+            (if (min == 0) fixed.union(nodes) else fixed).distinct()
+          }
+        // ARQ algebra-level extensions (PathEvaluator.java:142-160):
+        case PDistinct(q) => same(q).distinct()
+        case PMulti(q) => same(q) // bag pass-through; see PMulti scaladoc
+        case PShortest(q) =>
+          // the reference throws ARQNotImplemented here (PathEvaluator.java:158)
+          throw new UnsupportedOperationException(
+            s"P_Shortest is not implemented (matching the reference): $q")
       }
-    case PInverse(p) =>
-      pairsId(esg, p).select(col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairsId(esg, a).union(pairsId(esg, b))
-    case PSeq(a, b) =>
-      val l = pairsId(esg, a).select(col("src"), col("dst").as("__mid"))
-      val r = pairsId(esg, b).select(col("src").as("__mid2"), col("dst"))
-      l.join(r, col("__mid") === col("__mid2")).select(col("src"), col("dst"))
-    case POneOrMore(p) =>
-      Graphs.transitiveClosure(pairsId(esg, p))
-    case PZeroOrMore(p) =>
-      Graphs.transitiveClosure(pairsId(esg, p)).union(allNodeIds(esg)).distinct()
-    case PZeroOrOne(p) =>
-      pairsId(esg, p).union(allNodeIds(esg)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairsId(esg, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("src"), col("dst").as("__m"))
-          .join(base.select(col("src").as("__m2"), col("dst")),
-            col("__m") === col("__m2"))
-          .select(col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        val head =
-          if (min == 0) allNodeIds(esg)
-          else pairsId(esg, PFixedLength(p, min))
-        val star = pairsId(esg, PZeroOrMore(p))
-        head.select(col("src"), col("dst").as("__m"))
-          .join(star.select(col("src").as("__m2"), col("dst")),
-            col("__m") === col("__m2"))
-          .select(col("src"), col("dst")).distinct()
-      } else {
-        val parts = (math.max(min, 1) to max).map(k => pairsId(esg, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodeIds(esg)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodeIds(esg)) else fixed
-        withZero.distinct()
-      }
-    case PDistinct(p) => pairsId(esg, p).distinct()
-    case PMulti(p) => pairsId(esg, p)
-    case other => throw new IllegalStateException(
-      s"pairsId: $other is not id-expressible (idExpressible out of sync)")
   }
 
-  /** Identity (id, id) pairs over every subject/object id. */
-  private def allNodeIds(esg: Compiler.EncodedSnapshotGraph): DataFrame = {
-    val spo = esg.idLayout("spo")
-    spo.select(col("s_id").as("n")).union(spo.select(col("o_id").as("n")))
-      .distinct().select(col("n").as("src"), col("n").as("dst"))
+  /** Pairs of `path` whose src is a bound endpoint: a constant (Left), or
+   * the values a join partner binds (Right: a seed frame, one term column
+   * under [[Terms]]). On an encoded snapshot an id-expressible walk runs
+   * in id space: the seeds encode by one driver dictionary probe or one
+   * dictionary join, and the pairs decode at the edge. */
+  def seeded(sp: Space, path: Path, seeds: Either[Term, DataFrame]): DataFrame = sp match {
+    case Terms(esg: EncodedSnapshotGraph) if idExpressible(path) =>
+      val ids = Ids(esg)
+      decodeIdPairs(esg, eval(ids, path, Some(seeds.fold(ids.constSeeds, ids.encode))))
+    case _ => eval(sp, path, Some(seeds.fold(sp.constSeeds, identity)))
   }
+
+  /** (keys…, dst as src, src as dst). */
+  private[algebra] def swap(sp: Space, d: DataFrame): DataFrame =
+    d.select(sp.keys.map(col) :+ col("dst").as("src") :+ col("src").as("dst"): _*)
+
+  /** Keep the pairs whose (keys…, src) is a seed. */
+  private def restrict(sp: Space, d: DataFrame, seeds: DataFrame): DataFrame =
+    d.join(seeds, (sp.keys.map(k => col(k) === col("__s" + k)) :+
+      (col("src") === col("n"))).reduce(_ && _), "left_semi")
+
+  /** The ends of `d` as a seed frame. */
+  private def reseed(sp: Space, d: DataFrame): DataFrame =
+    d.select(sp.keys.map(col) :+ col("dst").as("n"): _*)
+
+  /** l.dst = r.src within the same keys: one pair per intermediate node. */
+  private def compose(sp: Space, l: DataFrame, r: DataFrame): DataFrame =
+    l.select(sp.keys.map(col) :+ col("src") :+ col("dst").as("__m"): _*)
+      .join(r.select(sp.keys.map(k => col(k).as(s"__${k}2")) :+
+          col("src").as("__m2") :+ col("dst"): _*),
+        (sp.keys.map(k => col(k) === col(s"__${k}2")) :+
+          (col("__m") === col("__m2"))).reduce(_ && _))
+      .select(sp.keys.map(col) :+ col("src") :+ col("dst"): _*)
+
+  /** Transitive closure of `edges` — global, or from the seeds only. With
+   * keys, each node packs as struct(keys…, n), so frontier joins only
+   * extend a walk within its own key (graph). Select by NAME first: the
+   * loops rename positionally and scan output order is not guaranteed. */
+  private def closure(sp: Space, edges: DataFrame, seeds: Option[DataFrame]): DataFrame =
+    if (sp.keys.isEmpty) {
+      val e = edges.select(col("src"), col("dst"))
+      seeds.fold(Graphs.transitiveClosure(e))(Graphs.reachableFrom(e, _))
+    } else {
+      def pack(ks: Seq[String], n: String) =
+        struct(sp.keys.zip(ks).map { case (k, c) => col(c).as(k) } :+ col(n).as("n"): _*)
+      val packed = edges.select(pack(sp.keys, "src").as("src"), pack(sp.keys, "dst").as("dst"))
+      seeds.fold(Graphs.transitiveClosure(packed))(s =>
+          Graphs.reachableFrom(packed, s.select(pack(sp.keys.map("__s" + _), "n").as("n"))))
+        .select(sp.keys.map(k => col(s"src.$k").as(k)) :+
+          col("src.n").as("src") :+ col("dst.n").as("dst"): _*)
+    }
 
   /** Decode an id-pair frame to term structs: ONE dictionary join per
    * endpoint, at the projection edge (SURVEY §1.6). */
-  private def decodeIdPairs(esg: Compiler.EncodedSnapshotGraph,
-                            idPairs: DataFrame): DataFrame = {
+  private def decodeIdPairs(esg: EncodedSnapshotGraph, idPairs: DataFrame): DataFrame = {
     def dict(tag: String) = esg.terms.select(col("id").as(s"__id_$tag"),
       struct(col("kind"), col("lex"), col("dt"), col("lang")).as(tag))
     idPairs
       .join(dict("__src_t"), col("src") === col("__id___src_t"))
       .join(dict("__dst_t"), col("dst") === col("__id___dst_t"))
       .select(col("__src_t").as("src"), col("__dst_t").as("dst"))
-  }
-
-  private def pairs0(g: GraphSource, path: Path): DataFrame = path match {
-    case PLink(iri) => g match {
-      case sg: SnapshotGraph =>
-        sg.scanPattern(TriplePattern(TVar("src"),
-          TConst(graft.model.Term.iri(iri)), TVar("dst"))).df
-      case _ =>
-        activeTriples(g).filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
-          .select(col("s").as("src"), col("o").as("dst"))
-    }
-    case PNegPropSet(fwd, inv) =>
-      // SPARQL 1.1 §9.1 NPS translation: !(p…|^q…) =
-      //   NPS(fwd)  ∪  ^NPS(inv) — each direction present only when its
-      // member list is (P_NegPropSet.java fwd/bwd split)
-      def dirScan(excluded: Seq[String], reversed: Boolean): DataFrame = {
-        val base = activeTriples(g).filter(TermCols.isIri(col("p")) &&
-          !TermCols.lex(col("p")).isin(excluded: _*))
-        if (reversed) base.select(col("o").as("src"), col("s").as("dst"))
-        else base.select(col("s").as("src"), col("o").as("dst"))
-      }
-      (fwd.nonEmpty, inv.nonEmpty) match {
-        case (_, false) => dirScan(fwd, reversed = false)
-        case (false, true) => dirScan(inv, reversed = true)
-        case (true, true) =>
-          dirScan(fwd, reversed = false).union(dirScan(inv, reversed = true))
-      }
-    case PInverse(p) =>
-      pairs(g, p).select(col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairs(g, a).union(pairs(g, b)) // bag union (SPARQL alt)
-    case PSeq(a, b) =>
-      // bag semantics — one pair per intermediate node, matching the
-      // reference's TransformPathFlatten rewrite of p1/p2 into a BGP
-      val l = pairs(g, a).select(col("src"), col("dst").as("__mid"))
-      val r = pairs(g, b).select(col("src").as("__mid2"), col("dst"))
-      l.join(r, col("__mid") === col("__mid2"))
-        .select(col("src"), col("dst"))
-    case POneOrMore(p) =>
-      Graphs.transitiveClosure(pairs(g, p).select(col("src"), col("dst")))
-    case PZeroOrMore(p) =>
-      Graphs.transitiveClosure(pairs(g, p).select(col("src"), col("dst")))
-        .union(allNodes(g)).distinct()
-    case PZeroOrOne(p) =>
-      pairs(g, p).union(allNodes(g)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairs(g, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("src"), col("dst").as("__m"))
-          .join(base.select(col("src").as("__m2"), col("dst")), col("__m") === col("__m2"))
-          .select(col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        // p{n,} = p{n} then p* — the closure handles the unbounded tail
-        val head =
-          if (min == 0) allNodes(g)
-          else pairs(g, PFixedLength(p, min))
-        val star = pairs(g, PZeroOrMore(p))
-        head.select(col("src"), col("dst").as("__m"))
-          .join(star.select(col("src").as("__m2"), col("dst")), col("__m") === col("__m2"))
-          .select(col("src"), col("dst")).distinct()
-      } else {
-        // bounded: union of the fixed lengths, distinct pairs (the ALP
-        // visited-set contract applies to mod paths in the reference)
-        val parts = (math.max(min, 1) to max).map(k => pairs(g, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodes(g)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodes(g)) else fixed
-        withZero.distinct()
-      }
-    // ARQ algebra-level extensions (PathEvaluator.java:142-160):
-    case PDistinct(p) => pairs(g, p).distinct()
-    case PMulti(p) => pairs(g, p) // bag pass-through; see PMulti scaladoc
-    case PShortest(p) =>
-      // the reference throws ARQNotImplemented here (PathEvaluator.java:158)
-      throw new UnsupportedOperationException(
-        s"P_Shortest is not implemented (matching the reference): $p")
-  }
-
-  /** Identity pairs over every term occurring as subject or object of the
-   * ACTIVE graph — SPARQL's zero-length-path node set. */
-  private def allNodes(g: GraphSource): DataFrame = {
-    val at = activeTriples(g)
-    val n = at.select(col("s").as("n"))
-      .union(at.select(col("o").as("n")))
-      .filter(col("n").isNotNull).distinct()
-    n.select(col("n").as("src"), col("n").as("dst"))
-  }
-
-  // ---- graph-threaded variant (single-plan GRAPH ?var) ----------------
-
-  /** All (g, src, dst) pairs connected by `path` WITHIN each named graph
-   * of `nq` (a (g, s, p, o) named-quads frame — marker rows tolerated:
-   * every case filters on p or s). One plan for ALL graphs: joins key on
-   * (g, node), closures pack (g, node) into the closure's node so a walk
-   * can never cross graphs — the shape that survives one-graph-per-
-   * document scale, where per-graph plan enumeration cannot. */
-  def pairsG(nq: DataFrame, path: Path): DataFrame = path match {
-    case PLink(iri) =>
-      nq.filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
-        .select(col("g"), col("s").as("src"), col("o").as("dst"))
-    case PNegPropSet(fwd, inv) =>
-      def dirScan(excluded: Seq[String], reversed: Boolean): DataFrame = {
-        val base = nq.filter(TermCols.isIri(col("p")) &&
-          !TermCols.lex(col("p")).isin(excluded: _*))
-        if (reversed) base.select(col("g"), col("o").as("src"), col("s").as("dst"))
-        else base.select(col("g"), col("s").as("src"), col("o").as("dst"))
-      }
-      (fwd.nonEmpty, inv.nonEmpty) match {
-        case (_, false) => dirScan(fwd, reversed = false)
-        case (false, true) => dirScan(inv, reversed = true)
-        case (true, true) =>
-          dirScan(fwd, reversed = false).union(dirScan(inv, reversed = true))
-      }
-    case PInverse(p) =>
-      pairsG(nq, p).select(col("g"), col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairsG(nq, a).union(pairsG(nq, b))
-    case PSeq(a, b) =>
-      val l = pairsG(nq, a).select(col("g"), col("src"), col("dst").as("__mid"))
-      val r = pairsG(nq, b)
-        .select(col("g").as("__g2"), col("src").as("__mid2"), col("dst"))
-      l.join(r, col("g") === col("__g2") && col("__mid") === col("__mid2"))
-        .select(col("g"), col("src"), col("dst"))
-    case POneOrMore(p) => closureG(pairsG(nq, p))
-    case PZeroOrMore(p) =>
-      closureG(pairsG(nq, p)).union(allNodesG(nq)).distinct()
-    case PZeroOrOne(p) =>
-      pairsG(nq, p).union(allNodesG(nq)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairsG(nq, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("g"), col("src"), col("dst").as("__m"))
-          .join(base.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-            col("g") === col("__g2") && col("__m") === col("__m2"))
-          .select(col("g"), col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        val head =
-          if (min == 0) allNodesG(nq)
-          else pairsG(nq, PFixedLength(p, min))
-        val star = pairsG(nq, PZeroOrMore(p))
-        head.select(col("g"), col("src"), col("dst").as("__m"))
-          .join(star.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-            col("g") === col("__g2") && col("__m") === col("__m2"))
-          .select(col("g"), col("src"), col("dst")).distinct()
-      } else {
-        val parts = (math.max(min, 1) to max).map(k => pairsG(nq, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodesG(nq)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodesG(nq)) else fixed
-        withZero.distinct()
-      }
-    case PDistinct(p) => pairsG(nq, p).distinct()
-    case PMulti(p) => pairsG(nq, p)
-    case PShortest(p) =>
-      throw new UnsupportedOperationException(
-        s"P_Shortest is not implemented (matching the reference): $p")
-  }
-
-  /** Per-graph transitive closure in ONE distributed loop: the graph name
-   * rides inside the closure's node — struct(g, n) — so frontier joins
-   * can only extend walks within a single graph. */
-  private def closureG(edges: DataFrame): DataFrame = {
-    val packed = edges.select(
-      struct(col("g").as("g"), col("src").as("n")).as("src"),
-      struct(col("g").as("g"), col("dst").as("n")).as("dst"))
-    Graphs.transitiveClosure(packed)
-      .select(col("src.g").as("g"), col("src.n").as("src"), col("dst.n").as("dst"))
-  }
-
-  /** Per-graph SEEDED reachability (the GRAPH ?var twin of the ALP
-   * seeding): seeds are (g, n) rows; nodes pack as struct(g, n) exactly
-   * like [[closureG]], so the frontier walks each graph's cone from its
-   * own seeds and never crosses graphs. */
-  private def reachableFromG(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val packed = edges.select(
-      struct(col("g").as("g"), col("src").as("n")).as("src"),
-      struct(col("g").as("g"), col("dst").as("n")).as("dst"))
-    val packedSeeds = seeds.toDF("g", "n")
-      .select(struct(col("g").as("g"), col("n").as("n")).as("n"))
-    Graphs.reachableFrom(packed, packedSeeds)
-      .select(col("src.g").as("g"), col("src.n").as("src"), col("dst.n").as("dst"))
-  }
-
-  /** Per-graph seeded pairs — [[pairsFrom0]] with the graph name threaded
-   * through every join/closure key. `seeds0`: (g, n) rows. Returns the
-   * (g, src, dst) rows of [[pairsG]] restricted to src ∈ that graph's
-   * seeds, walking only the seeded cones. */
-  def pairsGFrom(nq: DataFrame, path: Path, seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("__sg", "__sn").distinct()
-    def restrict(d: DataFrame): DataFrame =
-      d.join(seeds, col("g") === col("__sg") && col("src") === col("__sn"),
-        "left_semi")
-    def identity: DataFrame = restrict(allNodesG(nq))
-    def reseed(d: DataFrame): DataFrame =
-      d.select(col("g"), col("dst").as("n"))
-    path match {
-      case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) =>
-        restrict(pairsG(nq, path))
-      case PInverse(q) => pairsGFrom(nq, inverse(q), seeds)
-      case PSeq(a, b) =>
-        val l = pairsGFrom(nq, a, seeds)
-        val r = pairsGFrom(nq, b, reseed(l))
-        l.select(col("g"), col("src"), col("dst").as("__mid"))
-          .join(r.select(col("g").as("__g2"), col("src").as("__mid2"), col("dst")),
-            col("g") === col("__g2") && col("__mid") === col("__mid2"))
-          .select(col("g"), col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsGFrom(nq, a, seeds).union(pairsGFrom(nq, b, seeds))
-      case POneOrMore(q) =>
-        reachableFromG(pairsG(nq, q).select(col("g"), col("src"), col("dst")),
-          seeds)
-      case PZeroOrMore(q) =>
-        reachableFromG(pairsG(nq, q).select(col("g"), col("src"), col("dst")),
-          seeds).union(identity).distinct()
-      case PZeroOrOne(q) =>
-        pairsGFrom(nq, q, seeds).union(identity).distinct()
-      case PFixedLength(q, n) =>
-        require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsGFrom(nq, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsGFrom(nq, q, reseed(acc))
-          acc = acc.select(col("g"), col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-              col("g") === col("__g2") && col("__m") === col("__m2"))
-            .select(col("g"), col("src"), col("dst"))
-        }
-        acc
-      case PMod(q, min, max) =>
-        require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-        if (max < 0) {
-          val head =
-            if (min == 0) identity
-            else pairsGFrom(nq, PFixedLength(q, min), seeds)
-          val star = pairsGFrom(nq, PZeroOrMore(q), reseed(head))
-          head.select(col("g"), col("src"), col("dst").as("__m"))
-            .join(star.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-              col("g") === col("__g2") && col("__m") === col("__m2"))
-            .select(col("g"), col("src"), col("dst")).distinct()
-        } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsGFrom(nq, PFixedLength(q, k), seeds))
-          val fixed = if (parts.isEmpty) identity else parts.reduce(_ union _)
-          val withZero = if (min == 0) fixed.union(identity) else fixed
-          withZero.distinct()
-        }
-      case PDistinct(q) => pairsGFrom(nq, q, seeds).distinct()
-      case PMulti(q) => pairsGFrom(nq, q, seeds)
-      case PShortest(q) =>
-        throw new UnsupportedOperationException(
-          s"P_Shortest is not implemented (matching the reference): $q")
-    }
-  }
-
-  /** Per-graph zero-length node set: (g, n, n) for every term occurring
-   * as subject or object in graph g. */
-  private def allNodesG(nq: DataFrame): DataFrame = {
-    val t = nq.filter(col("s").isNotNull)
-    val n = t.select(col("g"), col("s").as("n"))
-      .union(t.select(col("g"), col("o").as("n")))
-      .filter(col("n").isNotNull).distinct()
-    n.select(col("g"), col("n").as("src"), col("n").as("dst"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** A/B for the r5 seeded path evaluator: runs r28 (constant-root `dep+`
  * over 80×50-cycles + a 10-node root chain) with seeding ON (default)
  * and OFF (`graft.pathSeededEval=off` → the pre-r5 global-closure-then-
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PathSeedAB {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build(graft.LocalSession.envCores)
     def run(label: String): Unit = {
       val t0 = System.nanoTime()
       val n = graft.queries.SparqlQueries.r28_seeded_path(spark, sf).count()

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Pipeline
 
 /**
@@ -26,15 +24,7 @@ object ScalingBench {
   }
 
   def runAt(cpus: Int, nRepos: Int, filesPerRepo: Int, outDir: String): RunResult = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build(cpus)
     try {
       val t0 = System.nanoTime()
       val triples = Pipeline.runFused(spark, nRepos, filesPerRepo, outDir)

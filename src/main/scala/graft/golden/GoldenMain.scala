@@ -1,7 +1,5 @@
 package graft.golden
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * CLI over the manifest-driven golden runner: `runMain graft.golden.GoldenMain
  * <manifest.ttl> [testName]` prints one line per case (PASS/FAIL/SKIP + the
@@ -12,15 +10,11 @@ import org.apache.spark.sql.SparkSession
 object GoldenMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: GoldenMain <manifest.ttl> [testName]")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.codegen.wholeStage", "false")
-      .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      .config("spark.sql.optimizer.expression.nestedPruning.enabled", "false")
-      .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.build(4,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.optimizer.expression.nestedPruning.enabled" -> "false",
+      "spark.sql.optimizer.nestedSchemaPruning.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val (manifests, onlyArg) = args.partition(_.endsWith(".ttl"))
     val only = onlyArg.headOption

@@ -240,16 +240,7 @@ object Pipeline {
         "<nRepos> <filesPerRepo> <outDir> [--salted F]")
     val saltFactor = args.sliding(2).collectFirst {
       case Array("--salted", f) => f.toInt }.getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build(graft.LocalSession.envCores)
     val t0 = System.nanoTime()
     val rs = run(spark, nRepos, filesPerRepo, outDir, saltFactor)
     val wall = (System.nanoTime() - t0) / 1e9

@@ -91,7 +91,7 @@ object SparqlQueries {
   }
 
   /** r24's `{1,2}` alt-path evaluated against the ID-ENCODED snapshot:
-   * PathEval.pairsId runs the per-hop scans, the alt union and the
+   * PathEval.eval in the Ids space runs the per-hop scans, the alt union and the
    * fixed-length joins entirely on LONG id columns (16-byte rows through
    * every shuffle), decoding via the dictionary exactly once per
    * endpoint at the projection edge — the TDB2 "ids until the result

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan-audit harness (the brief's ".explain and iterate" loop): prints
  * the formatted physical plan of named `SparkEntry.queries` entries so
@@ -14,12 +12,7 @@ object PlanAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("t11_text_indexed", "x3_geo_intersects", "r28_seeded_path")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.build(graft.LocalSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)

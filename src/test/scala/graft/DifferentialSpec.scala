@@ -111,8 +111,26 @@ class DifferentialSpec extends AnyFunSuite {
       case POneOrMore(q) => tc(pathRel(g, q))
       case PZeroOrMore(q) => (tc(pathRel(g, q)) ++ allNodes(g)).distinct
       case PZeroOrOne(q) => (pathRel(g, q) ++ allNodes(g)).distinct
+      case PFixedLength(q, n) => fixed(pathRel(g, q), n)
+      case PMod(q, min, max) =>
+        // SET semantics like the other closure forms: p{n,} = p{n}/p*,
+        // p{n,m} = the union of the fixed lengths n..m (p{0} = identity)
+        val r = pathRel(g, q)
+        val zero = if (min == 0) allNodes(g) else Nil
+        if (max < 0) {
+          val star = (tc(r) ++ allNodes(g)).distinct
+          val head = if (min == 0) allNodes(g) else fixed(r, min)
+          (for ((x1, m) <- head; (m2, y) <- star if m == m2) yield (x1, y)).distinct
+        } else
+          ((math.max(min, 1) to max).flatMap(fixed(r, _)) ++ zero).distinct
+      case PDistinct(q) => pathRel(g, q).distinct
       case other => sys.error(s"RefEval: unsupported path $other")
     }
+
+    /** p{n}: n-fold bag composition of a pair relation. */
+    def fixed(r: Seq[(Term, Term)], n: Int): Seq[(Term, Term)] =
+      (2 to n).foldLeft(r)((acc, _) =>
+        for ((x1, m) <- acc; (m2, y) <- r if m == m2) yield (x1, y))
 
     /** 4-slot unification for QuadBgp: the graph slot joins exactly like
      * s/p/o (Compiler extraSlots); GRAPH never matches the default graph. */
@@ -361,13 +379,21 @@ class DifferentialSpec extends AnyFunSuite {
         if (fwd.isEmpty && inv.isEmpty) PNegPropSet(Seq(EX + "p0"), Nil)
         else PNegPropSet(fwd, inv)
       } else link()
-    } else rnd.nextInt(7) match {
+    } else rnd.nextInt(10) match {
       case 0 => PInverse(genPath(rnd, depth - 1))
       case 1 => PSeq(genPath(rnd, depth - 1), genPath(rnd, depth - 1))
       case 2 => PAlt(genPath(rnd, depth - 1), genPath(rnd, depth - 1))
       case 3 => POneOrMore(genPath(rnd, depth - 1))
       case 4 => PZeroOrMore(genPath(rnd, depth - 1))
       case 5 => PZeroOrOne(genPath(rnd, depth - 1))
+      case 6 => PFixedLength(genPath(rnd, depth - 1), 2 + rnd.nextInt(2))
+      case 7 =>
+        // p{n,}, p{n,m} and p{0,0}
+        val min = rnd.nextInt(3)
+        val max = if (rnd.nextBoolean()) -1 else min + rnd.nextInt(3)
+        PMod(genPath(rnd, depth - 1), min, max)
+      // DISTINCT(path) has no SPARQL surface syntax
+      case 8 if !textMode => PDistinct(genPath(rnd, depth - 1))
       case _ => genPath(rnd, 0)
     }
   }
@@ -380,6 +406,9 @@ class DifferentialSpec extends AnyFunSuite {
     case POneOrMore(q) => s"(${showPath(q)})+"
     case PZeroOrMore(q) => s"(${showPath(q)})*"
     case PZeroOrOne(q) => s"(${showPath(q)})?"
+    case PFixedLength(q, n) => s"(${showPath(q)}){$n}"
+    case PMod(q, min, max) => s"(${showPath(q)}){$min,${if (max < 0) "" else max}}"
+    case PDistinct(q) => s"DISTINCT(${showPath(q)})"
     case PNegPropSet(f, i) =>
       s"!(${(f.map(_.stripPrefix(EX)) ++ i.map("^" + _.stripPrefix(EX))).mkString("|")})"
     case other => other.toString
@@ -733,6 +762,8 @@ class DifferentialSpec extends AnyFunSuite {
     case POneOrMore(q) => s"(${rPath(q)})+"
     case PZeroOrMore(q) => s"(${rPath(q)})*"
     case PZeroOrOne(q) => s"(${rPath(q)})?"
+    case PFixedLength(q, n) => s"(${rPath(q)}){$n}"
+    case PMod(q, min, max) => s"(${rPath(q)}){$min,${if (max < 0) "" else max}}"
     case PNegPropSet(f, i) =>
       s"!(${(f.map(x => s"<$x>") ++ i.map(x => s"^<$x>")).mkString("|")})"
     case other => sys.error(s"no syntax for $other")
@@ -1023,8 +1054,11 @@ class DifferentialSpec extends AnyFunSuite {
           // LATERAL threads the hidden graph column through the
           // correlated leaf compiler (r5); per-row-sensitive (Distinct)
           // and plain RHSs both exercised
-          case 7 => Lateral(body(depth - 1),
-            if (rnd.nextBoolean()) Distinct(leaf()) else leaf())
+          case 7 => Lateral(body(depth - 1), rnd.nextInt(3) match {
+            case 0 => Distinct(leaf())
+            case 1 => Join(leaf(), leaf())
+            case _ => leaf()
+          })
           case _ => leaf()
         }
       val v = varPool(rnd.nextInt(varPool.size))
@@ -1049,6 +1083,30 @@ class DifferentialSpec extends AnyFunSuite {
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} GRAPH-?var-single-plan failures:\n" +
       fs.take(6).mkString("\n"))
+  }
+
+  /** The random bodies above draw a LATERAL Join RHS too rarely with
+   * non-empty operands to pin its graph threading; this fixed case does:
+   * each named graph and the default graph bind ?w differently, so a Join
+   * operand compiled outside the active graph shows as extra rows. */
+  test("differential: GRAPH ?var LATERAL with a Join RHS stays in the active graph") {
+    import graft.model.Quad
+    val named = Seq(Quad(iri("s0"), iri("p0"), iri("o1"), iri("g1")),
+      Quad(iri("s1"), iri("p0"), iri("o1"), iri("g1")),
+      Quad(iri("s0"), iri("p0"), iri("o2"), iri("g2")))
+    val defG = Seq(Triple(iri("s0"), iri("p0"), iri("o0")),
+      Triple(iri("s1"), iri("p0"), iri("o2")))
+    val qdf = spark.createDataset(
+      defG.map(t => Quad(t.s, t.p, t.o, Term.defaultGraph)) ++ named)(
+      org.apache.spark.sql.Encoders.product[Quad]).toDF()
+    def tp(o: String) = Bgp(Seq(TriplePattern(TVar("a"), TConst(iri("p0")), TVar(o))))
+    val op = GraphVarEnum("g", Lateral(tp("b"), Join(tp("c"), tp("d"))))
+    spark.conf.set("graft.graphVarEnumMax", "0") // single-plan only
+    try {
+      val expected = bag(RefEval.eval(op, GData(defG, named), new DExprs))
+      assert(expected.values.sum == 3)
+      assert(bag(collectSols(Compiler.compile(op, qdf))) == expected)
+    } finally spark.conf.unset("graft.graphVarEnumMax")
   }
 
   /** SPARQL TEXT differential: render each random plan as query text,

@@ -135,7 +135,7 @@ class PlanSpec extends AnyFunSuite {
       "subject-bound pattern must scan SPO:\n" + p2)
     // a path link over the snapshot probes POS too (the closure itself
     // checkpoints, so inspect the base pair scan)
-    val p3 = plan(PathEval.pairs(sg, PLink(EX + "p3")))
+    val p3 = plan(PathEval.eval(PathEval.Terms(sg), PLink(EX + "p3"), None))
     assert(p3.contains("/pos"), "path link base scan must use POS:\n" + p3)
   }
 
@@ -345,7 +345,8 @@ class PlanSpec extends AnyFunSuite {
     val esg = Compiler.EncodedSnapshotGraph(spark, dir)
     // the id-space pair frame: only LONG columns, POS scan with the
     // predicate pushed as an ID filter — no struct decode inside the walk
-    val idPairs = PathEval.pairsId(esg, PSeq(PLink(EX + "p"), PLink(EX + "p")))
+    val idPairs =
+      PathEval.eval(PathEval.Ids(esg), PSeq(PLink(EX + "p"), PLink(EX + "p")), None)
     assert(idPairs.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType),
       "id-space path frame must be all LONG columns")

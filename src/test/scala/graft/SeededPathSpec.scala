@@ -16,9 +16,10 @@ import graft.ops.Graphs
  *  1. TRACE: a constant-root `+` query over a graph with a large far
  *     component finishes in cone-depth closure rounds and materializes
  *     only the cone's pairs — never the global closure.
- *  2. EQUIVALENCE: for every closure-bearing path shape, the seeded
- *     result equals the global pairs() restricted to the endpoint —
- *     const-subject, const-object, and join-bound variants.
+ *  2. EQUIVALENCE: for every closure-bearing path shape, on the struct,
+ *     id-encoded and per-graph (GRAPH ?var) faces, the seeded result
+ *     equals the global pairs restricted to the endpoint — const-subject,
+ *     const-object, and join-bound variants.
  *  3. ENCODED: the id-space seeded walk (EncodedSnapshotGraph) matches
  *     the struct-space result.
  */
@@ -46,21 +47,48 @@ class SeededPathSpec extends AnyFunSuite {
 
   /** A denser random-ish graph for the equivalence sweep: 60 nodes, edges
    * n_k -p-> n_{(k*7+3)%60} and n_k -q-> n_{(k*13+5)%60} for k % 3 != 0. */
-  private lazy val randomGraph: DataFrame = {
-    val es = (0 until 60).flatMap { k =>
-      val base = Seq(Triple(i(s"n$k"), i("p"), i(s"n${(k * 7 + 3) % 60}")))
-      if (k % 3 != 0) base :+ Triple(i(s"n$k"), i("q"), i(s"n${(k * 13 + 5) % 60}"))
-      else base
+  private lazy val randomEdges: Seq[Triple] = (0 until 60).flatMap { k =>
+    val base = Seq(Triple(i(s"n$k"), i("p"), i(s"n${(k * 7 + 3) % 60}")))
+    if (k % 3 != 0) base :+ Triple(i(s"n$k"), i("q"), i(s"n${(k * 13 + 5) % 60}"))
+    else base
+  }
+  private lazy val randomGraph: DataFrame = spark.createDataset(randomEdges).toDF()
+
+  /** [[randomGraph]] as an id-encoded store snapshot. */
+  private lazy val randomEncoded: Compiler.EncodedSnapshotGraph = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_seeded_enc")
+      .toString + "/snap"
+    graft.store.TripleStore.materializeEncoded(
+      randomGraph.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
+      dir, None, partitions = 2)
+    Compiler.EncodedSnapshotGraph(spark, dir)
+  }
+
+  /** [[randomEdges]] spread over two named graphs, every third edge in
+   * both, as a (g, s, p, o) frame: a walk that crossed graphs would reach
+   * pairs that neither graph holds alone. */
+  private lazy val randomQuads: DataFrame = {
+    import graft.model.Quad
+    val qs = randomEdges.zipWithIndex.flatMap { case (t, k) =>
+      val home = Quad(t.s, t.p, t.o, i(s"g${k % 2}"))
+      if (k % 3 == 0) Seq(home, home.copy(g = i(s"g${(k + 1) % 2}"))) else Seq(home)
     }
-    spark.createDataset(es).toDF()
+    spark.createDataset(qs).toDF().select("g", "s", "p", "o")
   }
 
   private def lexSet(df: DataFrame, col0: String): Set[String] =
     df.select(col(col0).getField("lex")).collect().map(_.getString(0)).toSet
 
-  private def pairSet(df: DataFrame): Set[(String, String)] =
-    df.select(col("src").getField("lex"), col("dst").getField("lex"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+  /** (graph, src, dst) lexical forms of a pair frame; graph "" without g. */
+  private def pairSet(df: DataFrame): Set[(String, String, String)] = {
+    val g = if (df.columns.contains("g")) col("g").getField("lex") else lit("")
+    df.select(g, col("src").getField("lex"), col("dst").getField("lex"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+  }
+
+  private def swapped(df: DataFrame): DataFrame =
+    df.select(df.columns.filter(_ == "g").map(col) ++
+      Seq(col("dst").as("src"), col("src").as("dst")): _*)
 
   test("trace: constant-root p+ walks the cone, not the global closure") {
     val out = Compiler.compile(
@@ -100,35 +128,59 @@ class SeededPathSpec extends AnyFunSuite {
     assert(Graphs.lastClosureRounds <= 4)
   }
 
+  /** The path evaluator's three spaces over the same edges, each with the
+   * seed frame of a set of terms. */
+  private def faces: Seq[(String, PathEval.Space, Seq[Term] => DataFrame)] = {
+    def terms(ts: Seq[Term]): DataFrame = ts.map(t => spark.range(1)
+      .select(TermCols.const(t).as("n"))).reduce(_ union _)
+    // per-graph seeds: (g, n) for every named graph and seed term
+    def perGraph(ts: Seq[Term]): DataFrame =
+      randomQuads.select(col("g")).distinct().crossJoin(terms(ts))
+    Seq(
+      ("struct", PathEval.Terms(Compiler.DfGraph(randomGraph)), terms),
+      ("encoded", PathEval.Terms(randomEncoded), terms),
+      ("per-graph", PathEval.PerGraph(randomQuads), perGraph))
+  }
+
   test("equivalence: seeded == global-filtered for every closure shape") {
-    val g = Compiler.DfGraph(randomGraph)
+    val Q = EX + "q"
     val shapes: Seq[Path] = Seq(
       POneOrMore(PLink(P)),
       PZeroOrMore(PLink(P)),
-      PSeq(PLink(EX + "q"), POneOrMore(PLink(P))),
-      PSeq(POneOrMore(PLink(P)), PLink(EX + "q")),
-      PAlt(POneOrMore(PLink(P)), PLink(EX + "q")),
+      PSeq(PLink(Q), POneOrMore(PLink(P))),
+      PSeq(POneOrMore(PLink(P)), PLink(Q)),
+      PAlt(POneOrMore(PLink(P)), PLink(Q)),
       PMod(PLink(P), 2, -1),
-      PMod(PAlt(PLink(P), PLink(EX + "q")), 0, -1),
+      PMod(PAlt(PLink(P), PLink(Q)), 0, -1),
       PInverse(POneOrMore(PLink(P))),
-      PDistinct(PSeq(POneOrMore(PLink(P)), PZeroOrOne(PLink(EX + "q")))),
+      PDistinct(PSeq(POneOrMore(PLink(P)), PZeroOrOne(PLink(Q)))),
       // nested closure: the inner closure's checkpointed output unions
       // with a scan and feeds the OUTER closure's input materialization —
       // the UnionBase.rewriteConstraints hazard shape (materializeGuarded)
-      POneOrMore(PAlt(POneOrMore(PLink(P)), PLink(EX + "q"))))
+      POneOrMore(PAlt(POneOrMore(PLink(P)), PLink(Q))),
+      PFixedLength(POneOrMore(PLink(Q)), 2),
+      PMod(PLink(Q), 1, 3),
+      PMulti(PZeroOrMore(PLink(Q))),
+      // a negated property set is not id-expressible: on the encoded
+      // snapshot the closure beside it still evaluates in id space
+      PSeq(PNegPropSet(Seq(P), Nil), PZeroOrMore(PLink(Q))))
     val roots = Seq("n0", "n7", "n31")
-    for (path <- shapes; r <- roots) {
-      val global = PathEval.pairs(g, path)
-      val rootT = TermCols.const(i(r))
-      // const subject
-      val expS = global.filter(col("src") === rootT)
-      val gotS = PathEval.pairsFromConst(g, path, i(r))
-      assert(pairSet(gotS) == pairSet(expS), s"src-seeded $path from $r")
-      // const object (seed the inverse, swap)
-      val expO = global.filter(col("dst") === rootT)
-      val gotO = PathEval.pairsFromConst(g, PathEval.inverse(path), i(r))
-        .select(col("dst").as("src"), col("src").as("dst"))
-      assert(pairSet(gotO) == pairSet(expO), s"dst-seeded $path into $r")
+    for ((face, sp, frame) <- faces; path <- shapes) {
+      val global = pairSet(PathEval.eval(sp, path, None))
+      for (r <- roots) {
+        // const subject
+        val gotS = PathEval.seeded(sp, path, Left(i(r)))
+        assert(pairSet(gotS) == global.filter(_._2 == EX + r),
+          s"$face: src-seeded $path from $r")
+        // const object (seed the inverse, swap)
+        val gotO = swapped(PathEval.seeded(sp, PathEval.inverse(path), Left(i(r))))
+        assert(pairSet(gotO) == global.filter(_._3 == EX + r),
+          s"$face: dst-seeded $path into $r")
+      }
+      // a join-bound seed frame
+      val rootLex = roots.map(EX + _).toSet
+      assert(pairSet(PathEval.seeded(sp, path, Right(frame(roots.map(i))))) ==
+        global.filter(t => rootLex(t._2)), s"$face: frame-seeded $path")
     }
   }
 
@@ -144,7 +196,8 @@ class SeededPathSpec extends AnyFunSuite {
 
     val qEdges = Compiler.compile(
       PathPattern(v("s"), PLink(EX + "q"), v("o")), randomGraph)
-    val closure = PathEval.pairs(Compiler.DfGraph(randomGraph), POneOrMore(PLink(P)))
+    val closure = PathEval.eval(PathEval.Terms(Compiler.DfGraph(randomGraph)),
+      POneOrMore(PLink(P)), None)
     val exp = qEdges.select(col("o").as("xv"))
       .join(closure, col("xv") === col("src"))
       .select(col("xv").getField("lex").as("x"), col("dst").getField("lex").as("y"))
@@ -235,12 +288,7 @@ class SeededPathSpec extends AnyFunSuite {
   }
 
   test("encoded snapshot: id-space seeded walk matches struct result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_seeded_enc")
-      .toString + "/snap"
-    graft.store.TripleStore.materializeEncoded(
-      randomGraph.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
-      dir, None, partitions = 2)
-    val esg = Compiler.EncodedSnapshotGraph(spark, dir)
+    val esg = randomEncoded
     val out = Compiler.compile(
       PathPattern(c(i("n0")), POneOrMore(PLink(P)), v("x")), esg)
     val expected = Compiler.compile(
