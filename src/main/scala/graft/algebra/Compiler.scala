@@ -261,10 +261,31 @@ object Compiler {
         col("s").isNotNull)
     else df
 
+  /** Compile `op` in the scope `g`. ONE compiler serves both scopes the
+   * reference's OpExecutor knows (OpExecutor.java:139–157 evaluates
+   * GRAPH ?g with the same executor over a re-scoped active graph):
+   *  - an active graph (any other [[GraphSource]]);
+   *  - [[NamedGraphs]], every named graph at once — the body of a
+   *    single-plan GRAPH ?var. Every result then carries the hidden
+   *    certain column [[AGV]], so the shared-var join machinery scopes
+   *    joins, OPTIONAL, EXISTS and LATERAL to one graph by itself.
+   * Only the cases whose per-graph semantics differ branch on the scope:
+   * a BGP scans the named quads with the graph slot bound to [[AGV]]; a
+   * path walks in [[PathEval.PerGraph]]; VALUES repeats per graph and
+   * Null carries the column; Project keeps [[AGV]] and DropVars never
+   * drops it; Group keys on it and pads keyless aggregates for empty
+   * graphs; Slice ranks within each graph; MINUS keys on it without
+   * counting it as a shared variable. Every other case runs unchanged in
+   * both scopes. */
   private[algebra] def comp(op: Op, g: GraphSource): Compiled = op match {
+    case _ if g.isInstanceOf[NamedGraphs] && !graphLocal(op) =>
+      throw new IllegalStateException(
+        s"$op is not graph-local — graphVarSinglePlan admits no such GRAPH ?var body")
+
     case Bgp(patterns) =>
       require(patterns.nonEmpty, "empty BGP")
       g match {
+        case NamedGraphs(dataset) => comp(QuadBgp(TVar(AGV), patterns), dataset)
         case sg: SnapshotGraph =>
           patterns.map(sg.scanPattern).reduceLeft(join(_, _, "inner"))
         case esg: EncodedSnapshotGraph => esg.scanBgp(patterns)
@@ -296,15 +317,16 @@ object Compiler {
             .reduceLeft(join(_, _, "inner"))
       }
 
-    case pp: PathPattern => compPath(PathEval.Terms(g), pp, None)
+    case pp: PathPattern => compPath(pathSpace(g), pp, None)
 
     case Project(vars, in) =>
       val c = comp(in, g)
+      val keep = vars ++ graphKey(g)
       // projecting a var the pattern never binds is legal SPARQL — it is
       // simply unbound in every row (ARQ ValueTesting, pfunc ASK shapes)
-      Compiled(c.df.select(vars.map(v =>
+      Compiled(c.df.select(keep.map(v =>
           if (c.vars(v)) col(v) else lit(null).cast(TermCols.schema).as(v)): _*),
-        c.certain.intersect(vars.toSet),
+        c.certain.intersect(keep.toSet),
         vars.toSet -- c.certain)
 
     case Filter(cond, in) =>
@@ -319,7 +341,15 @@ object Compiler {
         c.certain, c.maybe + name)
 
     case Table(vars, rows) =>
-      valuesTable(g.spark, vars, rows)
+      val vt = valuesTable(g.spark, vars, rows)
+      g match {
+        // VALUES is graph-independent: per graph it yields the table once
+        // PER named graph — the tiny table broadcasts over the distributed
+        // name frame (never a driver enumeration)
+        case ng: NamedGraphs =>
+          Compiled(ng.names.crossJoin(broadcast(vt.df)), vt.certain + AGV, vt.maybe)
+        case _ => vt
+      }
 
     // Join family: when one side is a closure-bearing path pattern whose
     // endpoint variable the OTHER side binds certainly, evaluate the path
@@ -334,10 +364,10 @@ object Compiler {
       (l, r) match {
         case (_, pp: PathPattern) if seedablePath(pp) =>
           val cl = comp(l, g)
-          join(cl, compPath(PathEval.Terms(g), pp, Some(cl)), "inner")
+          join(cl, compPath(pathSpace(g), pp, Some(cl)), "inner")
         case (pp: PathPattern, _) if seedablePath(pp) =>
           val cr = comp(r, g)
-          join(compPath(PathEval.Terms(g), pp, Some(cr)), cr, "inner")
+          join(compPath(pathSpace(g), pp, Some(cr)), cr, "inner")
         case _ => join(comp(l, g), comp(r, g), "inner")
       }
 
@@ -345,7 +375,7 @@ object Compiler {
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          leftJoin(cl, compPath(PathEval.Terms(g), pp, Some(cl)), cond)
+          leftJoin(cl, compPath(pathSpace(g), pp, Some(cl)), cond)
         case _ => leftJoin(comp(l, g), comp(r, g), cond)
       }
 
@@ -353,7 +383,7 @@ object Compiler {
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          halfJoin(cl, compPath(PathEval.Terms(g), pp, Some(cl)), "left_semi")
+          halfJoin(cl, compPath(pathSpace(g), pp, Some(cl)), "left_semi")
         case _ => halfJoin(comp(l, g), comp(r, g), "left_semi")
       }
 
@@ -361,10 +391,34 @@ object Compiler {
 
     case Minus(l, r) => minusJoin(comp(l, g), comp(r, g))
 
-    case ExistsFlag(v, r, in) => existsFlagC(comp(in, g), comp(r, g), v)
+    case ExistsFlag(v, r, in) =>
+      // expression-level EXISTS: flag each left row that has a compatible
+      // right row (per graph, [[AGV]] is a certain shared var on both sides)
+      val l = comp(in, g)
+      val rc = comp(r, g)
+      val rr = renamedRight(rc)
+      val shared = l.vars.intersect(rc.vars).toSeq.sorted
+      val mv = maybeShared(l, rc, shared)
+      val lid = tagged(l.df)
+      val matched =
+        if (mv.size <= MaxDecomposedVars)
+          compatMatches(lid, rr, l.certain, rc.certain,
+            shared.filterNot(mv.contains), mv)
+        else {
+          val cond = shared.map { sv =>
+            (col(sv) <=> col(RP + sv)) || col(sv).isNull || col(RP + sv).isNull
+          }.foldLeft(lit(true))(_ && _)
+          lid.join(rr, cond, "inner")
+        }
+      val ids = matched.select(col(LID)).distinct().withColumn("__exm", lit(true))
+      val df = lid.join(ids, Seq(LID), "left_outer")
+        .withColumn(v, TermCols.boolTerm(coalesce(col("__exm"), lit(false))))
+        .drop(LID, "__exm")
+      Compiled(df, l.certain + v, l.maybe)
 
-    case DropVars(vs, in) =>
+    case DropVars(vs0, in) =>
       val c = comp(in, g)
+      val vs = vs0.filterNot(graphKey(g).contains)
       Compiled(c.df.drop(vs.filter(c.vars.contains): _*),
         c.certain -- vs, c.maybe -- vs)
 
@@ -380,9 +434,7 @@ object Compiler {
       // survives. The var is NOT visible inside the body (W3C
       // graph-variable-scope); a body that itself binds the var joins at
       // the boundary.
-      val singlePlanOn = g.spark.conf
-        .getOption("graft.graphVarSinglePlan").forall(_ != "off")
-      if (singlePlanOn && graphVarSinglePlan(body)) compGraphVar(gv, body, g)
+      if (graphVarSinglePlan(body)) compGraphVar(gv, body, g)
       else {
         // fallback: driver-side enumeration, one GraphScope plan per
         // graph, unioned — kept ONLY for bodies the single-plan compile
@@ -412,35 +464,121 @@ object Compiler {
         else out
       }
 
-    case Lateral(l, r) => lateral(comp(l, g), r, g, comp)
+    case Lateral(l, r) => lateral(comp(l, g), r, g)
 
     case Unfold(listVar, outVar, idxVar, in) =>
-      unfoldC(comp(in, g), listVar, outVar, idxVar)
+      val c = comp(in, g)
+      require(c.vars.contains(listVar), s"Unfold of unknown var $listVar")
+      val isArray = c.df.schema(listVar).dataType
+        .isInstanceOf[org.apache.spark.sql.types.ArrayType]
+      val exploded =
+        if (isArray) idxVar match {
+          case Some(iv) =>
+            c.df.select(col("*"), posexplode_outer(col(listVar)).as(Seq("__i", outVar)))
+              .withColumn(iv, TermCols.intTerm(col("__i") + 1)).drop("__i")
+          case None =>
+            c.df.select(col("*"), explode_outer(col(listVar)).as(outVar))
+        } else {
+          // cdt:List / cdt:Map LITERAL (SPARQL-CDTs UNFOLD): one row per
+          // element (v, 1-based idx) or map entry (key, value); a non-CDT
+          // or malformed operand contributes no rows (plain explode)
+          val pairs = c.df.select(col("*"),
+            explode(graft.cdt.CdtFunctions.unfoldUdf(col(listVar))).as("__u"))
+          val withV1 = pairs.withColumn(outVar, col("__u._1"))
+          (idxVar match {
+            case Some(iv) => withV1.withColumn(iv, col("__u._2"))
+            case None => withV1
+          }).drop("__u")
+        }
+      Compiled(exploded.drop(listVar), c.certain - listVar,
+        c.maybe - listVar ++ Set(outVar) ++ idxVar.toSet)
 
     case Union(l, r) => unionPad(comp(l, g), comp(r, g))
 
-    case Group(keys, aggs, in) => groupC(comp(in, g), keys, aggs)
+    case Group(groupKeys, aggs, in) =>
+      val c = comp(in, g)
+      // per graph, the graph is always a key
+      val keys = groupKeys ++ graphKey(g)
+      if (aggs.isEmpty) {
+        // GROUP BY with no aggregates in scope — one row per group, keys
+        // only (SELECT ?s { … } GROUP BY ?s ≡ projected distinct)
+        Compiled(c.df.select(keys.map(col): _*).dropDuplicates(),
+          c.certain.intersect(keys.toSet), keys.toSet -- c.certain)
+      } else {
+        // "*" resolves to the whole visible row — COUNT(DISTINCT *)
+        // (AggCountDistinct over bindings, not a single var)
+        def res(v: String): Column =
+          if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
+        val aggCols = aggs.map { case (name, e) => e(res).as(name) }
+        val out =
+          if (keys.isEmpty) c.df.agg(aggCols.head, aggCols.tail: _*)
+          else c.df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+        val df = g match {
+          // a keyless aggregate yields EXACTLY ONE row per named graph,
+          // also for graphs whose body result is empty (COUNT() = 0 over
+          // the empty group; W3C aggregates "singleton" case)
+          case ng: NamedGraphs if groupKeys.isEmpty =>
+            padEmptyGroups(out, ng.names, AGV, c.df, aggCols)
+          case _ => out
+        }
+        Compiled(df, c.certain.intersect(keys.toSet),
+          aggs.map(_._1).toSet ++ c.maybe.intersect(keys.toSet))
+      }
 
     case Order(keys, in) =>
       val c = comp(in, g)
-      val sortCols = keys.map { k =>
-        val sk = TermCols.sortKey(resolve(c, k.v))
-        if (k.ascending) sk.asc else sk.desc
-      }
-      Compiled(c.df.orderBy(sortCols: _*), c.certain, c.maybe)
+      Compiled(c.df.orderBy(orderCols(c, keys): _*), c.certain, c.maybe)
+
+    // Per graph, Slice commutes with per-row shapes (projection keeps rows
+    // 1:1), so push it inside before looking for the ORDER BY: the parser
+    // emits sub-selects as Slice(Project(Order(...))), and without this
+    // rewrite the ordered per-graph LIMIT would rest on an UNSPECIFIED
+    // physical-ordering accident.
+    case Slice(offset, limit, Project(vs, in)) if g.isInstanceOf[NamedGraphs] =>
+      comp(Project(vs, Slice(offset, limit, in)), g)
+    case Slice(offset, limit, Label(_, in)) if g.isInstanceOf[NamedGraphs] =>
+      comp(Slice(offset, limit, in), g)
 
     case Slice(offset, limit, in) =>
-      val c = comp(in, g)
-      // Spark's native Offset keeps the preceding Sort's order — only
-      // deterministic after Order, same caveat as QueryIterSlice.java.
-      // limit == Long.MaxValue means OFFSET-without-LIMIT (parser contract)
-      // — no limit node at all (Long.MaxValue.toInt would be -1).
       require(offset <= Int.MaxValue, s"OFFSET $offset exceeds supported range")
       require(limit == Long.MaxValue || limit <= Int.MaxValue,
         s"LIMIT $limit exceeds supported range")
-      val off = if (offset <= 0) c.df else c.df.offset(offset.toInt)
-      val df = if (limit == Long.MaxValue) off else off.limit(limit.toInt)
-      Compiled(df, c.certain, c.maybe)
+      g match {
+        case _: NamedGraphs =>
+          // per-graph LIMIT/OFFSET (sub-SELECT inside GRAPH ?var): a rank
+          // window partitioned by the active graph. Ordered by the inner
+          // ORDER BY's keys when present (deterministic); otherwise by an
+          // arbitrary stable id (any n rows per graph, the same freedom the
+          // per-graph enumeration has).
+          val (sortCols, inner) = in match {
+            case Order(keys, i2) =>
+              val c0 = comp(i2, g)
+              (orderCols(c0, keys), c0)
+            case _ => (Seq.empty[Column], comp(in, g))
+          }
+          // the UNORDERED branch picks "any n rows per graph" — a specified
+          // freedom, but monotonically_increasing_id is partition-order-
+          // dependent, so under a task retry (or between two consumers of
+          // this plan) the chosen rows could differ. localCheckpoint pins
+          // the assignment exactly like tagged() pins LID rows — retry-
+          // stable for one materialization's cost on this rare branch only.
+          val (order, df) =
+            if (sortCols.nonEmpty) (sortCols, inner.df)
+            else (Seq(col("__gslid")),
+              inner.df.withColumn("__gslid", monotonically_increasing_id())
+                .localCheckpoint(true))
+          Compiled(rankSlice(df, AGV, order, offset, limit).drop("__gslid"),
+            inner.certain, inner.maybe)
+        case _ =>
+          val c = comp(in, g)
+          // Spark's native Offset keeps the preceding Sort's order — only
+          // deterministic after Order, same caveat as QueryIterSlice.java.
+          // limit == Long.MaxValue means OFFSET-without-LIMIT (parser
+          // contract) — no limit node at all (Long.MaxValue.toInt is -1).
+          val off = if (offset <= 0) c.df else c.df.offset(offset.toInt)
+          val df = if (limit == Long.MaxValue) off else off.limit(limit.toInt)
+          Compiled(df, c.certain, c.maybe)
+      }
 
     case Distinct(in) =>
       val c = comp(in, g); Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
@@ -558,8 +696,9 @@ object Compiler {
       }
 
     case Null =>
-      Compiled(g.spark.range(0).select(lit(1).as("__unit")),
-        Set.empty, Set.empty)
+      Compiled(g.spark.range(0).select(graphKey(g).map(k =>
+          lit(null).cast(TermCols.schema).as(k)) :+ lit(1).as("__unit"): _*),
+        graphKey(g).toSet, Set.empty)
 
     case DatasetNames(gp) =>
       // named graph names only (never the default graph) — OpDatasetNames
@@ -625,81 +764,36 @@ object Compiler {
   private def resolve(c: Compiled, v: String): Column =
     if (c.vars(v)) col(v) else lit(null).cast(TermCols.schema)
 
-  /** Group compile over an already-compiled input (shared by [[comp]] and
-   * the single-plan GRAPH ?var body compiler [[compG]]). */
-  private def groupC(c: Compiled, keys: Seq[String],
-                     aggs: Seq[(String, RowExpr)]): Compiled =
-    if (aggs.isEmpty) {
-      // GROUP BY with no aggregates in scope — one row per group, keys
-      // only (SELECT ?s { … } GROUP BY ?s ≡ projected distinct)
-      Compiled(c.df.select(keys.map(col): _*).dropDuplicates(),
-        c.certain.intersect(keys.toSet), keys.toSet -- c.certain)
-    } else {
-      // "*" resolves to the whole visible row — COUNT(DISTINCT *)
-      // (AggCountDistinct over bindings, not a single var)
-      def res(v: String): Column =
-        if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
-      val aggCols = aggs.map { case (name, e) => e(res).as(name) }
-      val out =
-        if (keys.isEmpty) c.df.agg(aggCols.head, aggCols.tail: _*)
-        else c.df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
-      Compiled(out, c.certain.intersect(keys.toSet),
-        aggs.map(_._1).toSet ++ c.maybe.intersect(keys.toSet))
+  /** Sort columns of ORDER BY keys over a compiled input. */
+  private def orderCols(c: Compiled, keys: Seq[SortKey]): Seq[Column] =
+    keys.map { k =>
+      val sk = TermCols.sortKey(resolve(c, k.v))
+      if (k.ascending) sk.asc else sk.desc
     }
 
-  /** UNFOLD compile over an already-compiled input (shared by [[comp]]
-   * and [[compG]]). */
-  private def unfoldC(c: Compiled, listVar: String, outVar: String,
-                      idxVar: Option[String]): Compiled = {
-    require(c.vars.contains(listVar), s"Unfold of unknown var $listVar")
-    val isArray = c.df.schema(listVar).dataType
-      .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    val exploded =
-      if (isArray) idxVar match {
-        case Some(iv) =>
-          c.df.select(col("*"), posexplode_outer(col(listVar)).as(Seq("__i", outVar)))
-            .withColumn(iv, TermCols.intTerm(col("__i") + 1)).drop("__i")
-        case None =>
-          c.df.select(col("*"), explode_outer(col(listVar)).as(outVar))
-      } else {
-        // cdt:List / cdt:Map LITERAL (SPARQL-CDTs UNFOLD): one row per
-        // element (v, 1-based idx) or map entry (key, value); a non-CDT
-        // or malformed operand contributes no rows (plain explode)
-        val pairs = c.df.select(col("*"),
-          explode(graft.cdt.CdtFunctions.unfoldUdf(col(listVar))).as("__u"))
-        val withV1 = pairs.withColumn(outVar, col("__u._1"))
-        (idxVar match {
-          case Some(iv) => withV1.withColumn(iv, col("__u._2"))
-          case None => withV1
-        }).drop("__u")
-      }
-    Compiled(exploded.drop(listVar), c.certain - listVar,
-      c.maybe - listVar ++ Set(outVar) ++ idxVar.toSet)
+  /** Rows offset+1 … offset+limit of each `part` partition of `df` in
+   * `order` (limit Long.MaxValue: no upper bound) — a row_number window. */
+  private def rankSlice(df: DataFrame, part: String, order: Seq[Column],
+                        offset: Long, limit: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(part)).orderBy(order: _*)
+    val keep =
+      if (limit == Long.MaxValue) col("__rn") > offset
+      else col("__rn") > offset && col("__rn") <= offset + limit
+    df.withColumn("__rn", row_number().over(w)).where(keep).drop("__rn")
   }
 
-  /** Expression-level EXISTS flag over compiled left/right (shared by
-   * [[comp]] and [[compG]] — in the latter both sides carry the hidden
-   * graph column as a certain shared var, scoping the match per graph). */
-  private def existsFlagC(l: Compiled, rc: Compiled, v: String): Compiled = {
-    val rr = renamedRight(rc)
-    val shared = l.vars.intersect(rc.vars).toSeq.sorted
-    val mv = maybeShared(l, rc, shared)
-    val lid = tagged(l.df)
-    val matched =
-      if (mv.size <= MaxDecomposedVars)
-        compatMatches(lid, rr, l.certain, rc.certain,
-          shared.filterNot(mv.contains), mv)
-      else {
-        val cond = shared.map { sv =>
-          (col(sv) <=> col(RP + sv)) || col(sv).isNull || col(RP + sv).isNull
-        }.foldLeft(lit(true))(_ && _)
-        lid.join(rr, cond, "inner")
-      }
-    val ids = matched.select(col(LID)).distinct().withColumn("__exm", lit(true))
-    val df = lid.join(ids, Seq(LID), "left_outer")
-      .withColumn(v, TermCols.boolTerm(coalesce(col("__exm"), lit(false))))
-      .drop(LID, "__exm")
-    Compiled(df, l.certain + v, l.maybe)
+  /** `grouped` plus, for each `parts` row whose `key` no group has, the
+   * aggregates `aggCols` over the EMPTY input: a keyless aggregate yields
+   * one row per partition (COUNT = 0 …) even where the partition's input
+   * is empty. */
+  private def padEmptyGroups(grouped: DataFrame, parts: DataFrame, key: String,
+                             input: DataFrame, aggCols: Seq[Column]): DataFrame = {
+    val zero = input.where(lit(false)).agg(aggCols.head, aggCols.tail: _*)
+    val missing = parts
+      .join(grouped.select(col(key)).distinct(), Seq(key), "left_anti")
+      .crossJoin(zero)
+    grouped.unionByName(missing.select(grouped.columns.map(col): _*))
   }
 
   /** Distinct NAMED graph names of the dataset (driver-side; bounded by
@@ -722,10 +816,33 @@ object Compiler {
 
   // ---- single-plan GRAPH ?var compile (the scale path) ----------------
 
-  /** Hidden active-graph column threaded through [[compG]] — certain in
-   * every sub-result, never visible to the query (guarded in
-   * [[graphVarSinglePlan]]). */
+  /** Hidden active-graph column of every result compiled under
+   * [[NamedGraphs]] — certain in every sub-result, never visible to the
+   * query (guarded in [[graphVarSinglePlan]]). */
   private val AGV = "__activeg"
+
+  /** Every named graph of `dataset` at once: the scope a single-plan
+   * GRAPH ?var body compiles in ([[comp]]). `df` is the named quads
+   * (g, s, p, o). */
+  private[algebra] final case class NamedGraphs(dataset: GraphSource) extends GraphSource {
+    lazy val df: DataFrame = namedQuadsDf(dataset)
+    override def spark: SparkSession = dataset.spark
+    /** The distinct graph names, as an [[AGV]] column. */
+    def names: DataFrame = namedGraphNamesDf(dataset).select(col("g").as(AGV))
+  }
+
+  /** The hidden key columns a scope adds to every result: [[AGV]] per graph. */
+  private def graphKey(g: GraphSource): Seq[String] = g match {
+    case _: NamedGraphs => Seq(AGV)
+    case _ => Nil
+  }
+
+  /** Where a path pattern walks: within each graph under [[NamedGraphs]],
+   * else in the active graph. */
+  private def pathSpace(g: GraphSource): PathEval.Space = g match {
+    case ng: NamedGraphs => PathEval.PerGraph(ng.df)
+    case _ => PathEval.Terms(g)
+  }
 
   /** The dataset's NAMED quads as a (g, s, p, o) term-struct frame.
    * Empty-graph marker rows (s NULL) are KEPT — name enumeration needs
@@ -745,250 +862,42 @@ object Compiler {
   private def namedGraphNamesDf(g: GraphSource): DataFrame =
     namedQuadsDf(g).select(col("g")).distinct()
 
-  /** Is `body` expressible by the single-plan GRAPH ?var compile? True
-   * only for graph-local operators: scans bind the hidden graph column,
-   * binary ops key on it, per-row ops ignore it, grouping and Slice
-   * partition by it, LATERAL threads it through the correlated leaf
-   * compiler. Excluded (→ enumeration fallback): dataset re-access
-   * (nested GRAPH / QuadBgp / FROM / DatasetNames / SERVICE) and the
-   * escape hatches (ExtOp/GraphOp see raw frames). */
-  private def graphVarSinglePlan(op: Op): Boolean = {
-    def ok(o: Op): Boolean = o match {
-      case Bgp(_) | PathPattern(_, _, _) | Table(_, _) | Null => true
-      case Join(a, b) => ok(a) && ok(b)
-      case Lateral(a, b) => ok(a) && ok(b)
-      case LeftJoin(a, b, _) => ok(a) && ok(b)
-      case Union(a, b) => ok(a) && ok(b)
-      case SemiJoin(a, b) => ok(a) && ok(b)
-      case AntiJoin(a, b) => ok(a) && ok(b)
-      case Minus(a, b) => ok(a) && ok(b)
-      case ExistsFlag(_, r, in) => ok(r) && ok(in)
-      case Filter(_, in) => ok(in)
-      case Extend(_, _, in) => ok(in)
-      case Project(_, in) => ok(in)
-      case DropVars(_, in) => ok(in)
-      case Distinct(in) => ok(in)
-      case Reduced(in) => ok(in)
-      case Group(_, _, in) => ok(in)
-      case Order(_, in) => ok(in)
-      case Slice(_, _, in) => ok(in)
-      case Unfold(_, _, _, in) => ok(in)
-      case Label(_, in) => ok(in)
-      case _ => false
-    }
-    ok(op) && !opVisibleVars(op).contains(AGV)
+  /** Does this node compile under [[NamedGraphs]]? True only for the
+   * graph-local operators: scans bind the hidden graph column, binary ops
+   * key on it, per-row ops ignore it, grouping and Slice partition by it,
+   * LATERAL threads it through its correlated RHS. Excluded (→ enumeration
+   * fallback): dataset re-access (nested GRAPH / QuadBgp / FROM /
+   * DatasetNames / SERVICE) and the escape hatches (ExtOp/GraphOp see raw
+   * frames). */
+  private def graphLocal(op: Op): Boolean = op match {
+    case Bgp(_) | PathPattern(_, _, _) | Table(_, _) | Null | Join(_, _) |
+         Lateral(_, _) | LeftJoin(_, _, _) | Union(_, _) | SemiJoin(_, _) |
+         AntiJoin(_, _) | Minus(_, _) | ExistsFlag(_, _, _) | Filter(_, _) |
+         Extend(_, _, _) | Project(_, _) | DropVars(_, _) | Distinct(_) |
+         Reduced(_) | Group(_, _, _) | Order(_, _) | Slice(_, _, _) |
+         Unfold(_, _, _, _) | Label(_, _) => true
+    case _ => false
   }
 
-  /** GRAPH ?var as ONE plan: compile the body with [[compG]] (active
-   * graph = hidden certain column), then surface the column as the graph
-   * variable — joining when the body itself binds the var (SPARQL 18.5
-   * boundary restriction, same as the enumeration fallback). */
+  /** Is `body` expressible by the single-plan GRAPH ?var compile? Every
+   * node [[graphLocal]], and the hidden column not a query variable. */
+  private def graphVarSinglePlan(body: Op): Boolean = {
+    def local(o: Op): Boolean = graphLocal(o) && children(o).forall(local)
+    local(body) && !opVisibleVars(body).contains(AGV)
+  }
+
+  /** GRAPH ?var as ONE plan: compile the body under [[NamedGraphs]]
+   * (active graph = hidden certain column), then surface the column as
+   * the graph variable — joining when the body itself binds the var
+   * (SPARQL 18.5 boundary restriction, same as the enumeration fallback). */
   private def compGraphVar(gv: String, body: Op, g: GraphSource): Compiled = {
-    val c = compG(body, g)
+    val c = comp(body, NamedGraphs(g))
     if (c.vars(gv)) {
       val df = c.df.filter(col(gv).isNull || col(gv) === col(AGV))
         .withColumn(gv, coalesce(col(gv), col(AGV))).drop(AGV)
       Compiled(df, (c.certain - AGV) + gv, c.maybe - gv)
     } else
       Compiled(c.df.withColumnRenamed(AGV, gv), (c.certain - AGV) + gv, c.maybe)
-  }
-
-  /** Body compiler for the single-plan GRAPH ?var: mirrors [[comp]] over
-   * the supported subset with the invariant that EVERY result carries the
-   * hidden [[AGV]] column as a certain var — scans bind it from the quad
-   * frame, so the shared-var join machinery scopes joins / OPTIONAL /
-   * EXISTS / NOT EXISTS to the same graph automatically; grouping adds it
-   * as a key (per-graph aggregation); graph-independent leaves (VALUES)
-   * cross-join the distributed name frame (per-graph bag semantics). */
-  private def compG(op: Op, g: GraphSource): Compiled = op match {
-    case Bgp(patterns) =>
-      require(patterns.nonEmpty, "empty BGP")
-      comp(QuadBgp(TVar(AGV), patterns), g)
-
-    // per-graph pairs keep their graph as the hidden column
-    case pp: PathPattern => compPath(PathEval.PerGraph(namedQuadsDf(g)), pp, None)
-
-    case Table(vars, rows) =>
-      // VALUES is graph-independent: per-graph semantics yield the table
-      // once PER named graph — the tiny table broadcasts over the
-      // distributed name frame (never a driver enumeration)
-      val vt = valuesTable(g.spark, vars, rows)
-      Compiled(namedGraphNamesDf(g).select(col("g").as(AGV))
-          .crossJoin(broadcast(vt.df)),
-        vt.certain + AGV, vt.maybe)
-
-    case Null =>
-      Compiled(g.spark.range(0)
-          .select(lit(null).cast(TermCols.schema).as(AGV), lit(1).as("__unit")),
-        Set(AGV), Set.empty)
-
-    case Project(vars, in) =>
-      val c = compG(in, g)
-      val keep = vars :+ AGV
-      Compiled(c.df.select(keep.map(v =>
-          if (c.vars(v) || v == AGV) col(v)
-          else lit(null).cast(TermCols.schema).as(v)): _*),
-        c.certain.intersect(keep.toSet), vars.toSet -- c.certain)
-
-    case Filter(cond, in) =>
-      val c = compG(in, g)
-      Compiled(c.df.filter(cond(v => resolve(c, v))), c.certain, c.maybe)
-
-    case Extend(name, expr, in) =>
-      val c = compG(in, g)
-      require(!c.vars.contains(name), s"Extend onto bound var $name")
-      Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
-        c.certain, c.maybe + name)
-
-    case Join(l, r) => join(compG(l, g), compG(r, g), "inner")
-    // LATERAL inside GRAPH ?var: same correlated machinery, with the
-    // leaf compiler swapped to compG — every RHS leaf binds the hidden
-    // active-graph column, so the per-left-row correlation keys on it
-    // and the lateral evaluation never crosses graphs (one plan for ALL
-    // graphs; no enumeration fallback)
-    case Lateral(a, b) => lateral(compG(a, g), b, g, leaf = compG(_, _))
-    case LeftJoin(l, r, cond) => leftJoin(compG(l, g), compG(r, g), cond)
-    case SemiJoin(l, r) => halfJoin(compG(l, g), compG(r, g), "left_semi")
-    case AntiJoin(l, r) => halfJoin(compG(l, g), compG(r, g), "left_anti")
-    case Minus(l, r) => minusJoinG(compG(l, g), compG(r, g))
-    case ExistsFlag(v, r, in) => existsFlagC(compG(in, g), compG(r, g), v)
-    case Union(l, r) => unionPad(compG(l, g), compG(r, g))
-
-    case DropVars(vs, in) =>
-      val c = compG(in, g)
-      val safe = vs.filterNot(_ == AGV)
-      Compiled(c.df.drop(safe.filter(c.vars.contains): _*),
-        c.certain -- safe, c.maybe -- safe)
-
-    case Distinct(in) =>
-      val c = compG(in, g); Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
-    case Reduced(in) =>
-      val c = compG(in, g); Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
-
-    case Group(keys, aggs, in) =>
-      // per-graph grouping: the active graph is always a key
-      val c = compG(in, g)
-      val grouped = groupC(c, keys :+ AGV, aggs)
-      if (keys.nonEmpty || aggs.isEmpty) grouped
-      else {
-        // keyless aggregate: per-graph evaluation yields EXACTLY ONE row
-        // per named graph — including graphs whose body result is empty
-        // (COUNT()=0 over the empty group; W3C aggregates "singleton"
-        // case). groupBy(AGV) alone would drop those graphs, so pad the
-        // missing ones with the zero-group row: the same aggregate
-        // expressions evaluated over an EMPTY input (which is exactly
-        // what the top-level keyless Group compiles to).
-        val names = namedGraphNamesDf(g).select(col("g").as(AGV))
-        val empty = c.df.limit(0)
-        def res(v: String): Column =
-          if (v == "*") struct(empty.columns.map(col): _*)
-          else if (c.vars(v)) col(v) else lit(null).cast(TermCols.schema)
-        val zeroRow = empty.agg(aggs.head._2(res).as(aggs.head._1),
-          aggs.tail.map { case (n, e) => e(res).as(n) }: _*)
-        val missing = names
-          .join(grouped.df.select(col(AGV)), Seq(AGV), "left_anti")
-          .crossJoin(broadcast(zeroRow))
-        Compiled(grouped.df.unionByName(missing), grouped.certain, grouped.maybe)
-      }
-
-    case Order(keys, in) =>
-      val c = compG(in, g)
-      val sortCols = keys.map { k =>
-        val sk = TermCols.sortKey(resolve(c, k.v))
-        if (k.ascending) sk.asc else sk.desc
-      }
-      Compiled(c.df.orderBy(sortCols: _*), c.certain, c.maybe)
-
-    // Slice commutes with per-row shapes (projection keeps rows 1:1), so
-    // push it inside before looking for the ORDER BY: the parser emits
-    // sub-selects as Slice(Project(Order(...))), and without this rewrite
-    // the Order-unwrap below would never fire — the ordered per-graph
-    // LIMIT would then rest on an UNSPECIFIED physical-ordering accident
-    // (row_number over monotonically_increasing_id above a global Sort).
-    case Slice(offset, limit, Project(vs, in)) =>
-      compG(Project(vs, Slice(offset, limit, in)), g)
-    case Slice(offset, limit, Label(_, in)) =>
-      compG(Slice(offset, limit, in), g)
-
-    case Slice(offset, limit, in) =>
-      // per-graph LIMIT/OFFSET (sub-SELECT inside GRAPH ?var): a rank
-      // window partitioned by the active graph — the per-group twin of
-      // comp's global Slice. Ordered by the inner ORDER BY's keys when
-      // present (deterministic); otherwise by an arbitrary stable id
-      // (any n rows per graph, the same freedom the per-graph
-      // enumeration has).
-      require(offset <= Int.MaxValue, s"OFFSET $offset exceeds supported range")
-      require(limit == Long.MaxValue || limit <= Int.MaxValue,
-        s"LIMIT $limit exceeds supported range")
-      val (sortCols, inner) = in match {
-        case Order(keys, i2) =>
-          val c0 = compG(i2, g)
-          (keys.map { k =>
-            val sk = TermCols.sortKey(resolve(c0, k.v))
-            if (k.ascending) sk.asc else sk.desc
-          }, c0)
-        case _ => (Seq.empty[Column], compG(in, g))
-      }
-      import org.apache.spark.sql.expressions.Window
-      // the UNORDERED branch picks "any n rows per graph" — a specified
-      // freedom, but monotonically_increasing_id is partition-order-
-      // dependent, so under a task retry (or between two consumers of
-      // this plan) the chosen rows could differ. localCheckpoint pins the
-      // assignment exactly like tagged() pins LID rows — retry-stable for
-      // one materialization's cost on this rare branch only.
-      val (w, ranked0) =
-        if (sortCols.nonEmpty)
-          (Window.partitionBy(col(AGV)).orderBy(sortCols: _*), inner.df)
-        else
-          (Window.partitionBy(col(AGV)).orderBy(col("__gslid")),
-            inner.df.withColumn("__gslid", monotonically_increasing_id())
-              .localCheckpoint(true))
-      val hi = if (limit == Long.MaxValue) Long.MaxValue else offset + limit
-      val ranked = ranked0.withColumn("__gsl", row_number().over(w))
-      Compiled(ranked.filter(col("__gsl") > offset && col("__gsl") <= hi)
-          .drop("__gsl", "__gslid"),
-        inner.certain, inner.maybe)
-
-    case Unfold(listVar, outVar, idxVar, in) =>
-      unfoldC(compG(in, g), listVar, outVar, idxVar)
-
-    case Label(_, in) => compG(in, g)
-
-    case other => throw new IllegalStateException(
-      s"compG: unsupported node $other — graphVarSinglePlan out of sync")
-  }
-
-  /** Per-graph MINUS: [[AGV]] scopes the anti-join to the same graph but
-   * is NOT a query-shared var — the ≥1-both-bound-shared-var rule
-   * (OpExecutor.java:267–277) applies to the DATA vars only, so two
-   * patterns sharing no query variables still remove nothing. */
-  private def minusJoinG(l: Compiled, r: Compiled): Compiled = {
-    val shared = (l.vars.intersect(r.vars) - AGV).toSeq.sorted
-    if (shared.isEmpty) return l
-    val rr = renamedRight(r)
-    val mv = maybeShared(l, r, shared)
-    val agvEq = col(AGV) === col(RP + AGV)
-    if (mv.isEmpty) {
-      val cond = shared.map(v => col(v) === col(RP + v)).reduce(_ && _) && agvEq
-      Compiled(l.df.join(rr, cond, "left_anti"), l.certain, l.maybe)
-    } else if (mv.size <= MaxDecomposedVars) {
-      val lid = tagged(l.df)
-      val certainKeys = shared.filterNot(mv.contains)
-      val matchedIds = compatMatches(lid, rr, l.certain, r.certain,
-        certainKeys, mv, requireBothBound = true, extraKeys = Seq(AGV))
-        .select(col(LID)).distinct()
-      Compiled(lid.join(matchedIds, Seq(LID), "left_anti").drop(LID),
-        l.certain, l.maybe)
-    } else {
-      val compat = shared.map { v =>
-        (col(v) <=> col(RP + v)) || col(v).isNull || col(RP + v).isNull
-      }.reduce(_ && _)
-      val anyBothBound = shared.map { v =>
-        col(v).isNotNull && col(RP + v).isNotNull
-      }.reduce(_ || _)
-      Compiled(l.df.join(rr, compat && anyBothBound && agvEq, "left_anti"),
-        l.certain, l.maybe)
-    }
   }
 
   /** SPARQL bag union with unbound padding for one-sided vars. */
@@ -1052,9 +961,11 @@ object Compiler {
       case TConst(t) => Some(Left(t))
       case _ => None
     }
+    // a join-bound seed frame is (keys…, n): per graph, the partner's
+    // [[AGV]] keeps each seed in its own graph
     def bound(p: TermPat) = p match {
-      case TVar(v) =>
-        partner.filter(_.certain(v)).map(c => Right(c.df.select(col(v).as("n"))))
+      case TVar(v) => partner.filter(_.certain(v)).map(c =>
+        Right(c.df.select(sp.keys.map(_ => col(AGV)) :+ col(v).as("n"): _*)))
       case _ => None
     }
     // escape hatch (and the honest A/B lever for the seeded-vs-global
@@ -1297,13 +1208,12 @@ object Compiler {
    * per-left-row tag (row-stable: [[taggedAs]] checkpoints eagerly). The
    * tag + checkpoint are paid only when [[perRowSensitive]] says the RHS
    * needs them — a plain RHS stays the old single-join plan. */
-  private def lateral(l: Compiled, r: Op, g: GraphSource,
-                      leaf: (Op, GraphSource) => Compiled): Compiled =
-    if (!perRowSensitive(r)) lat(l, r, g, tag = "", leaf)
+  private def lateral(l: Compiled, r: Op, g: GraphSource): Compiled =
+    if (!perRowSensitive(r)) lat(l, r, g, tag = "")
     else {
       val t = freshTag()
       val lt = Compiled(taggedAs(l.df, t), l.certain + t, l.maybe)
-      val out = lat(lt, r, g, t, leaf)
+      val out = lat(lt, r, g, t)
       Compiled(out.df.drop(t), out.certain - t, out.maybe)
     }
 
@@ -1316,17 +1226,24 @@ object Compiler {
   private def usesDataset(op: Op): Boolean = op match {
     case QuadBgp(_, _) | GraphScope(_, _) | GraphVarEnum(_, _) |
          DatasetNames(_) | DatasetClause(_, _, _) => true
-    case p: Product =>
-      // walk ANY nested structure (tuples, Options, collections) so an Op
-      // child of a future algebra node is found no matter how it is
-      // stored — a missed child would silently under-scope GraphScope
-      def walk(x: Any): Boolean = x match {
-        case o: Op => usesDataset(o)
-        case q: Product => q.productIterator.exists(walk)
-        case it: Iterable[_] => it.exists(walk)
-        case _ => false
-      }
-      p.productIterator.exists(walk)
+    case _ => children(op).exists(usesDataset)
+  }
+
+  /** The child ops of a node, found by walking ANY nested structure
+   * (tuples, Options, collections) so an Op child of a future algebra
+   * node is found no matter how it is stored — a missed child would
+   * silently under-scope GraphScope or admit a non-graph-local body. */
+  private def children(op: Op): Iterator[Op] = {
+    def walk(x: Any): Iterator[Op] = x match {
+      case o: Op => Iterator.single(o)
+      case q: Product => q.productIterator.flatMap(walk)
+      case it: Iterable[_] => it.iterator.flatMap(walk)
+      case _ => Iterator.empty
+    }
+    op match {
+      case p: Product => p.productIterator.flatMap(walk)
+      case _ => Iterator.empty
+    }
   }
 
   /** Does this RHS shape observe per-left-row evaluation (vs evaluating
@@ -1394,39 +1311,38 @@ object Compiler {
    * columns (plus the per-left-row `tag` column when the RHS is
    * per-row-sensitive); the result holds left + RHS columns with the
    * substitution semantics applied. */
-  private def lat(l: Compiled, r: Op, g: GraphSource, tag: String,
-                  leaf: (Op, GraphSource) => Compiled): Compiled = r match {
+  private def lat(l: Compiled, r: Op, g: GraphSource, tag: String): Compiled = r match {
     case Filter(cond, in) =>
       // RHS filters see the LEFT bindings (lateral-3 "filter scope")
-      val c = lat(l, in, g, tag, leaf)
+      val c = lat(l, in, g, tag)
       Compiled(c.df.filter(cond(v => resolve(c, v))), c.certain, c.maybe)
     case Extend(name, expr, in) =>
-      val c = lat(l, in, g, tag, leaf)
+      val c = lat(l, in, g, tag)
       require(!c.vars.contains(name), s"Extend onto bound var $name")
       Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
         c.certain, c.maybe + name)
-    case Join(a, b) => lat(lat(l, a, g, tag, leaf), b, g, tag, leaf)
-    case Union(a, b) => unionPad(lat(l, a, g, tag, leaf), lat(l, b, g, tag, leaf))
+    case Join(a, b) => lat(lat(l, a, g, tag), b, g, tag)
+    case Union(a, b) => unionPad(lat(l, a, g, tag), lat(l, b, g, tag))
     case Distinct(in) =>
       // per-left-row dedup: the tag keeps duplicate left rows distinct
-      val c = lat(l, in, g, tag, leaf)
+      val c = lat(l, in, g, tag)
       Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
-    case Reduced(in) => lat(l, Distinct(in), g, tag, leaf)
+    case Reduced(in) => lat(l, Distinct(in), g, tag)
     case Order(_, in) =>
       // ordering without a slice has no observable effect on the multiset
-      lat(l, in, g, tag, leaf)
-    case Label(_, in) => lat(l, in, g, tag, leaf)
+      lat(l, in, g, tag)
+    case Label(_, in) => lat(l, in, g, tag)
     case DropVars(vs, in) =>
-      val c = lat(l, in, g, tag, leaf)
+      val c = lat(l, in, g, tag)
       Compiled(c.df.drop(vs: _*), c.certain -- vs, c.maybe -- vs)
     case LeftJoin(a, b, cond) =>
       // per-row OPTIONAL (optional-in-lateral): left' rows unmatched by
       // the correlated RHS survive with unbound RHS vars. Fresh tag —
       // left' may have multiplied the original left rows.
-      val l2 = lat(l, a, g, tag, leaf)
+      val l2 = lat(l, a, g, tag)
       val t2 = freshTag()
       val lt2 = Compiled(taggedAs(l2.df, t2), l2.certain + t2, l2.maybe)
-      val m0 = lat(lt2, b, g, t2, leaf)
+      val m0 = lat(lt2, b, g, t2)
       val matched = cond match {
         case Some(e) => Compiled(m0.df.filter(e(v => resolve(m0, v))), m0.certain, m0.maybe)
         case None => m0
@@ -1439,9 +1355,9 @@ object Compiler {
       val out = matched.df.unionByName(
         padded.select(matched.df.columns.map(col): _*)).drop(t2)
       Compiled(out, l2.certain, l2.maybe ++ rhsVars)
-    case SemiJoin(a, b) => halfJoin(lat(l, a, g, tag, leaf), leaf(b, g), "left_semi")
-    case AntiJoin(a, b) => halfJoin(lat(l, a, g, tag, leaf), leaf(b, g), "left_anti")
-    case Minus(a, b) => minusJoin(lat(l, a, g, tag, leaf), leaf(b, g))
+    case SemiJoin(a, b) => halfJoin(lat(l, a, g, tag), comp(b, g), "left_semi")
+    case AntiJoin(a, b) => halfJoin(lat(l, a, g, tag), comp(b, g), "left_anti")
+    case Minus(a, b) => minusJoin(lat(l, a, g, tag), comp(b, g))
     case Slice(offset, limit, inner) =>
       // per-left-row LIMIT/OFFSET: row_number window over the tag
       require(offset <= Int.MaxValue && (limit == Long.MaxValue || limit <= Int.MaxValue),
@@ -1464,20 +1380,9 @@ object Compiler {
             "collide with left-side bindings while using LIMIT/OFFSET — " +
             "rename the inner variables (scope rename is not implemented here)")
       }
-      val joined = lat(l, body, g, tag, leaf)
-      import org.apache.spark.sql.expressions.Window
-      val orderCols =
-        if (sortKeys.isEmpty) Seq(lit(1).asc)
-        else sortKeys.map { k =>
-          val sk = TermCols.sortKey(resolve(joined, k.v))
-          if (k.ascending) sk.asc else sk.desc
-        }
-      val w = Window.partitionBy(col(tag)).orderBy(orderCols: _*)
-      val keep =
-        if (limit == Long.MaxValue) col("__rn") > offset
-        else col("__rn") > offset && col("__rn") <= offset + limit
-      val limited = joined.df.withColumn("__rn", row_number().over(w)).where(keep)
-        .drop("__rn")
+      val joined = lat(l, body, g, tag)
+      val order = if (sortKeys.isEmpty) Seq(lit(1).asc) else orderCols(joined, sortKeys)
+      val limited = rankSlice(joined.df, tag, order, offset, limit)
       projOpt match {
         case Some(vs) =>
           val keepCols = (l.vars ++ vs.filter(joined.vars)).toSeq.sorted
@@ -1492,7 +1397,7 @@ object Compiler {
       // get the aggregate-over-empty values (COUNT=0 etc.), obtained from
       // one global empty-frame aggregation.
       require(tag.nonEmpty, "internal: per-row group without a lateral tag")
-      val c = lat(l, in, g, tag, leaf)
+      val c = lat(l, in, g, tag)
       require(aggs.nonEmpty, "LATERAL grouped subquery without aggregates")
       def res(v: String): Column =
         if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
@@ -1502,13 +1407,7 @@ object Compiler {
         .agg(aggCols.head, aggCols.tail: _*)
       val out =
         if (keys.nonEmpty) grouped
-        else {
-          val emptyVals = c.df.where(lit(false)).agg(aggCols.head, aggCols.tail: _*)
-          val missing = l.df.select(lCols.map(col): _*)
-            .join(grouped.select(col(tag)).distinct(), Seq(tag), "left_anti")
-            .crossJoin(emptyVals)
-          grouped.unionByName(missing.select(grouped.columns.map(col): _*))
-        }
+        else padEmptyGroups(grouped, l.df.select(lCols.map(col): _*), tag, c.df, aggCols)
       Compiled(out, l.certain ++ keys.filter(c.certain), // agg outputs may be null
         aggs.map(_._1).toSet ++ (l.maybe ++ keys.filterNot(c.certain)))
     case Project(vs, inner) =>
@@ -1518,14 +1417,14 @@ object Compiler {
       // globally — including its LIMIT (lateral-in-optional).
       val corr = vs.toSet.intersect(l.vars -- Set(tag))
       if (!perRowSensitive(inner) || corr.isEmpty)
-        join(l, leaf(Project(vs, inner), g), "inner")
+        join(l, comp(Project(vs, inner), g), "inner")
       else {
         val hidden = (opVisibleVars(inner) -- vs).intersect(l.vars - tag)
         require(hidden.isEmpty,
           s"LATERAL sub-SELECT hides variable(s) ${hidden.mkString(", ")} that " +
             "collide with left-side bindings while using per-row modifiers — " +
             "rename the inner variables (scope rename is not implemented here)")
-        val c = lat(l, inner, g, tag, leaf)
+        val c = lat(l, inner, g, tag)
         val keep = (l.vars ++ vs.filter(c.vars)).toSeq.sorted
         Compiled(c.df.select(keep.map(col): _*),
           l.certain ++ vs.toSet.intersect(c.certain),
@@ -1533,11 +1432,11 @@ object Compiler {
       }
     case _ =>
       // pattern leaves & everything shape-insensitive: the correlated
-      // re-execution IS the compatible-binding join (SURVEY §2.3). In
-      // GRAPH ?var single-plan mode `leaf` is [[compG]]: every leaf binds
-      // the hidden active-graph column, so the compatible-binding join
-      // keys on it and the correlated evaluation stays graph-scoped.
-      join(l, leaf(r, g), "inner")
+      // re-execution IS the compatible-binding join (SURVEY §2.3). Under
+      // [[NamedGraphs]] every leaf binds the hidden active-graph column,
+      // so the compatible-binding join keys on it and the correlated
+      // evaluation stays graph-scoped.
+      join(l, comp(r, g), "inner")
   }
 
   private val tagCtr = new java.util.concurrent.atomic.AtomicLong()
@@ -1572,18 +1471,22 @@ object Compiler {
    * no realistic query produces — falls back to the OR-condition
    * nested-loop join. */
   private def minusJoin(l: Compiled, r: Compiled): Compiled = {
-    val shared = l.vars.intersect(r.vars).toSeq.sorted
+    // per graph, [[AGV]] scopes the anti-join to one graph but is NOT a
+    // shared var: the ≥1-both-bound rule applies to the DATA vars only,
+    // so two patterns sharing no query variable still remove nothing
+    val keys = Seq(AGV).filter(k => l.vars(k) && r.vars(k))
+    val shared = (l.vars.intersect(r.vars) -- keys).toSeq.sorted
     if (shared.isEmpty) return l
     val rr = renamedRight(r)
     val mv = maybeShared(l, r, shared)
     if (mv.isEmpty) {
-      val cond = shared.map(v => col(v) === col(RP + v)).reduce(_ && _)
+      val cond = (shared ++ keys).map(v => col(v) === col(RP + v)).reduce(_ && _)
       Compiled(l.df.join(rr, cond, "left_anti"), l.certain, l.maybe)
     } else if (mv.size <= MaxDecomposedVars) {
       val lid = tagged(l.df)
       val certainKeys = shared.filterNot(mv.contains)
       val matchedIds = compatMatches(lid, rr, l.certain, r.certain,
-        certainKeys, mv, requireBothBound = true)
+        certainKeys, mv, requireBothBound = true, extraKeys = keys)
         .select(col(LID)).distinct()
       Compiled(lid.join(matchedIds, Seq(LID), "left_anti").drop(LID),
         l.certain, l.maybe)
@@ -1594,7 +1497,9 @@ object Compiler {
       val anyBothBound = shared.map { v =>
         col(v).isNotNull && col(RP + v).isNotNull
       }.reduce(_ || _)
-      Compiled(l.df.join(rr, compat && anyBothBound, "left_anti"), l.certain, l.maybe)
+      val keyEq = keys.map(k => col(k) === col(RP + k))
+      Compiled(l.df.join(rr, keyEq.foldLeft(compat && anyBothBound)(_ && _), "left_anti"),
+        l.certain, l.maybe)
     }
   }
 

@@ -56,13 +56,18 @@ object ServiceRegistry {
    * formats this repo parses). Constructed lazily and never connecting
    * until `execute`, so it is safe to instantiate in a zero-egress
    * environment; unit tests drive it against an in-process loopback
-   * server. Non-2xx responses throw (SERVICE SILENT maps them to the
-   * unit table upstream, QueryExecHTTP-style). */
+   * server. Non-2xx responses throw, and so does a body longer than
+   * `maxBodyBytes`: the endpoint is outside input, and the whole body is
+   * held in driver memory (SERVICE SILENT maps either to the unit table
+   * upstream, QueryExecHTTP-style). */
   final class HttpServiceTransport(
       timeoutSeconds: Long = 60,
       /** GET/POST switch on total URL length — QueryExecHTTP's urlLimit. */
-      urlLimit: Int = 2 * 1024) extends ServiceTransport {
+      urlLimit: Int = 2 * 1024,
+      maxBodyBytes: Int = 64 * 1024 * 1024) extends ServiceTransport {
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    require(maxBodyBytes >= 0 && maxBodyBytes < Int.MaxValue,
+      s"maxBodyBytes $maxBodyBytes out of range")
 
     private lazy val client: HttpClient = HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds))
@@ -88,14 +93,22 @@ object ServiceRegistry {
         .header("Accept", accept)
         .timeout(java.time.Duration.ofSeconds(timeoutSeconds))
         .build()
-      val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofInputStream())
+      // one byte past the cap tells an oversized body from one that fits
+      val bytes = {
+        val in = resp.body()
+        try in.readNBytes(maxBodyBytes + 1) finally in.close()
+      }
+      def body = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
       if (resp.statusCode() / 100 != 2)
         throw new RuntimeException(
-          s"SERVICE <$endpointIri> HTTP ${resp.statusCode()}: " +
-            resp.body().take(200))
+          s"SERVICE <$endpointIri> HTTP ${resp.statusCode()}: " + body.take(200))
+      if (bytes.length > maxBodyBytes)
+        throw new RuntimeException(
+          s"SERVICE <$endpointIri> response body exceeds the $maxBodyBytes-byte cap")
       val ct = resp.headers().firstValue("Content-Type")
         .orElse("application/sparql-results+json")
-      (ct, resp.body())
+      (ct, body)
     }
   }
 

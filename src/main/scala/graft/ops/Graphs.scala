@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
  * closure; localCheckpoint truncates lineage per round. */
 object Graphs {
 
-  /** Transitive closure of (src, dst): all reachable pairs (SPARQL `p+`).
-   * Iterates to the true fixpoint — `maxIter` is a runaway guard that
-   * THROWS rather than silently returning an incomplete closure (each
-   * round extends paths by one hop, so the default covers any graph of
-   * diameter ≤ 10^4; a legitimate deeper chain must raise the cap
-   * explicitly). */
   /** JVM-wide lock for SESSION-GLOBAL conf toggles. Graphs' own loops no
    * longer need it (they isolate via [[isolatedLoopSession]]); it remains
    * for Rules.closure, whose loop plans compiled rule queries against the
@@ -66,15 +60,14 @@ object Graphs {
     org.apache.spark.sql.graftbridge.SessionBridge.ofRows(
       target, df.queryExecution.analyzed)
 
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 10000): DataFrame = {
-    val spark = edges.sparkSession
-    // materialize the edge relation under the CALLER's session (full
-    // planning, no checkpointed unions yet), then loop isolated
-    val iso = isolatedLoopSession(spark)
-    val e0 = lift(iso, edges.toDF("src", "dst").distinct()).localCheckpoint(true)
-    val acc = transitiveClosure0(e0, maxIter)
-    lift(spark, acc)
-  }
+  /** Transitive closure of (src, dst): all reachable pairs (SPARQL `p+`).
+   * Iterates to the true fixpoint — `maxIter` is a runaway guard that
+   * THROWS rather than silently returning an incomplete closure (each
+   * round extends paths by one hop, so the default covers any graph of
+   * diameter ≤ 10^4; a legitimate deeper chain must raise the cap
+   * explicitly). */
+  def transitiveClosure(edges: DataFrame, maxIter: Int = 10000): DataFrame =
+    closure(edges, None, maxIter)
 
   /** Seeded reachability — the ALP analog proper (PathEngine.java:49–122
    * seeds a BFS from the bound node and visits only the reachable cone).
@@ -87,64 +80,40 @@ object Graphs {
    * a `<root> :dep+ ?x` over a billion-edge graph never materializes the
    * all-pairs closure. */
   def reachableFrom(edges: DataFrame, seeds: DataFrame,
-                    maxIter: Int = 10000): DataFrame = {
+                    maxIter: Int = 10000): DataFrame =
+    closure(edges, Some(seeds), maxIter)
+
+  /** The one frontier-delta loop behind [[transitiveClosure]] (`seeds`
+   * None: the first frontier is every edge, round 0) and [[reachableFrom]]
+   * (the seeds' out-edges, round 1). The edge relation and the seeds are
+   * made distinct, lifted into the isolated session and materialized
+   * there; the loop runs isolated and its result lifts back. */
+  private def closure(edges: DataFrame, seeds: Option[DataFrame],
+                      maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
     val iso = isolatedLoopSession(spark)
-    val e0 = lift(iso, edges.toDF("src", "dst").distinct()).localCheckpoint(true)
-    val s0 = lift(iso, seeds.toDF("n").distinct()).localCheckpoint(true)
-    val acc = reachableFrom0(e0, s0, maxIter)
-    lift(spark, acc)
-  }
-
-  /** `edges`/`seeds` must be distinct + checkpointed (the public entry
-   * prepares and lifts them). */
-  private def reachableFrom0(edges: DataFrame, seeds: DataFrame,
-                             maxIter: Int): DataFrame = {
-    val e = edges
-    var frontier = seeds
-      .join(e, col("n") === col("src"))
-      .select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    var acc = frontier
-    var iter = 1
-    var done = frontier.isEmpty
-    while (!done) {
-      iter += 1
-      if (iter > maxIter) throw new IllegalStateException(
-        s"reachableFrom did not reach a fixpoint within $maxIter rounds " +
-          "(cone depth exceeds the cap) — raise maxIter")
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.dst") === col("e.src"))
-        .select(col("f.src").as("src"), col("e.dst").as("dst"))
-        .distinct()
-      // same semi-naive delta + null-safe anti-join as transitiveClosure0
-      val accR = acc.select(col("src").as("__asrc"), col("dst").as("__adst"))
-      val delta = next.join(accR,
-        col("src") <=> col("__asrc") && col("dst") <=> col("__adst"), "left_anti")
-        .localCheckpoint(true)
-      if (delta.isEmpty) done = true
-      else {
-        acc = acc.union(delta).localCheckpoint(true)
-        frontier = delta
-      }
+    val e = lift(iso, edges.toDF("src", "dst").distinct()).localCheckpoint(true)
+    val (first, round0) = seeds match {
+      case None => (e, 0)
+      case Some(sd) =>
+        val s0 = lift(iso, sd.toDF("n").distinct()).localCheckpoint(true)
+        (s0.join(e, col("n") === col("src"))
+          .select(col("src"), col("dst")).distinct()
+          .localCheckpoint(true), 1)
     }
-    lastClosureRounds = iter
-    acc
-  }
-
-  /** `edges` must be distinct + checkpointed (the public entry prepares
-   * and lifts it). */
-  private def transitiveClosure0(edges: DataFrame, maxIter: Int): DataFrame = {
-    val e = edges
-    var acc = e
-    var frontier = e
-    var iter = 0
+    var acc = first
+    var frontier = first
+    var iter = round0
     var done = frontier.isEmpty
     while (!done) {
       iter += 1
       if (iter > maxIter) throw new IllegalStateException(
-        s"transitiveClosure did not reach a fixpoint within $maxIter rounds " +
-          "(graph diameter exceeds the cap) — raise maxIter")
+        if (seeds.isEmpty)
+          s"transitiveClosure did not reach a fixpoint within $maxIter rounds " +
+            "(graph diameter exceeds the cap) — raise maxIter"
+        else
+          s"reachableFrom did not reach a fixpoint within $maxIter rounds " +
+            "(cone depth exceeds the cap) — raise maxIter")
       val next = frontier.alias("f")
         .join(e.alias("e"), col("f.dst") === col("e.src"))
         .select(col("f.src").as("src"), col("e.dst").as("dst"))
@@ -171,7 +140,7 @@ object Graphs {
       }
     }
     lastClosureRounds = iter
-    acc
+    lift(spark, acc)
   }
 
   // ---- graph-level set operations (SURVEY.md §2.7) — the columnar analog

@@ -1006,64 +1006,92 @@ class DifferentialSpec extends AnyFunSuite {
       fs.take(6).mkString("\n"))
   }
 
-  /** GRAPH ?var single-plan differential: rich GRAPH-LOCAL bodies
-   * (BGPs, paths incl. closures and negated sets, VALUES, joins,
-   * OPTIONAL, MINUS, EXISTS/NOT-EXISTS, DISTINCT) compiled through the
-   * one-g-keyed-plan path — the enumeration fallback is CAPPED AT ZERO,
-   * so only compGraphVar can serve — against RefEval's per-graph
-   * enumeration semantics. Pins the active-graph threading through every
-   * binary operator and the (g, node)-packed closures. */
-  test("differential: GRAPH ?var single-plan on 40 rich graph-local bodies") {
+  /** Bodies in the GRAPH ?var single-plan gate; -Dgraft.diff.n overrides. */
+  private val graphVarIters =
+    sys.props.get("graft.diff.n").map(_.toInt).getOrElse(40)
+
+  /** One gate case: (default graph, named quads, op, exprs). */
+  private def graphVarCase(i: Int): (Seq[Triple], Seq[graft.model.Quad], Op, DExprs) = {
+    import graft.model.Quad
+    val rnd = new Random(0x51A6 + i)
+    val x = new DExprs
+    val defG = genGraph(rnd)
+    val named = (0 until 80 + rnd.nextInt(20)).map { _ =>
+      val o = if (rnd.nextInt(2) == 0) iri("s" + rnd.nextInt(5)) else genTerm(rnd)
+      Quad(iri("s" + rnd.nextInt(5)), iri("p" + rnd.nextInt(3)), o, genGraphName(rnd))
+    }.distinct
+    def leaf(): Op = genOp(rnd, x, 0)._1
+    def v(): String = varPool(rnd.nextInt(varPool.size))
+    // a closure path with an endpoint a BGP binds certainly: the Join /
+    // OPTIONAL / EXISTS partner's values seed the per-graph walk
+    def seededJoin(): Op = {
+      val (e, other) = (v(), v())
+      val bgp = Bgp(Seq(TriplePattern(TVar(other), TConst(iri("p" + rnd.nextInt(3))),
+        TVar(e))))
+      val path = rnd.nextInt(3) match {
+        case 0 => POneOrMore(genPath(rnd, 0))
+        case 1 => PZeroOrMore(genPath(rnd, 0))
+        case _ => POneOrMore(genPath(rnd, 1))
+      }
+      val w = varPool.filterNot(_ == e)(rnd.nextInt(varPool.size - 1))
+      val pp = if (rnd.nextBoolean()) PathPattern(TVar(e), path, TVar(w))
+               else PathPattern(TVar(w), path, TVar(e))
+      rnd.nextInt(4) match {
+        case 0 => Join(bgp, pp)
+        case 1 => Join(pp, bgp)
+        case 2 => LeftJoin(bgp, pp, None)
+        case _ => SemiJoin(bgp, pp)
+      }
+    }
+    def body(depth: Int): Op = rnd.nextInt(8) match {
+      // LATERAL threads the hidden graph column through the correlated
+      // RHS; per-row-sensitive (Distinct) and plain RHSs both exercised
+      case 0 if depth > 0 => Lateral(body(depth - 1), rnd.nextInt(3) match {
+        case 0 => Distinct(leaf())
+        case 1 => Join(leaf(), leaf())
+        case _ => leaf()
+      })
+      case 1 => seededJoin()
+      case 2 =>
+        // keyless aggregate: one row per named graph, empty ones too
+        val (in, vs) = genOp(rnd, x, depth)
+        val cv = if (vs.isEmpty) "a" else vs(rnd.nextInt(vs.size))
+        val n = (Iterator.single("n") ++ Iterator.from(2).map("n" + _))
+          .find(c => !vs.contains(c)).get
+        Group(Nil, Seq(n -> x.agg(s"COUNT(?$cv)",
+          RowExpr(r => TC.intTerm(org.apache.spark.sql.functions.count(r(cv)))),
+          ms => Some(int(ms.count(_.contains(cv)))))), in)
+      case _ => genOp(rnd, x, depth)._1
+    }
+    // mostly a graph var the body cannot bind; sometimes a pool var, so
+    // the boundary join with a body-bound name runs too
+    val op = GraphVarEnum(if (rnd.nextInt(4) == 0) v() else "g", body(1 + rnd.nextInt(2)))
+    (defG, named, op, x)
+  }
+
+  /** GRAPH ?var single-plan differential: rich GRAPH-LOCAL bodies — the
+   * [[genOp]] family (BGPs, paths, VALUES, the join family, EXISTS flags,
+   * FILTER, BIND, projection, grouping, DISTINCT) plus LATERAL, keyless
+   * aggregates and closure paths joined to a BGP (the join-bound seeded
+   * per-graph walk) — compiled through the one-g-keyed-plan path (the
+   * enumeration fallback is CAPPED AT ZERO, so only compGraphVar can
+   * serve) against RefEval's per-graph enumeration semantics. Half the
+   * named quads' objects come from the subject pool, so chains connect
+   * within a graph: a gate comparing empty bags would pass a graph-
+   * threading bug unseen, and the test asserts at least half the bodies
+   * have a non-empty expected bag. */
+  test(s"differential: GRAPH ?var single-plan on $graphVarIters rich graph-local bodies") {
     import graft.model.Quad
     val failures = Seq.newBuilder[String]
-    quadMode = true
+    var nonEmpty = 0
     spark.conf.set("graft.graphVarEnumMax", "0") // enumeration cannot serve
-    try (0 until 40).foreach { i =>
-      val rnd = new Random(0x51A6 + i)
-      val x = new DExprs
-      val defG = genGraph(rnd)
-      val named = (0 until 15 + rnd.nextInt(10)).map { _ =>
-        Quad(iri("s" + rnd.nextInt(5)), iri("p" + rnd.nextInt(3)),
-          genTerm(rnd), genGraphName(rnd))
-      }.distinct
-      val allQuads = defG.map(t => Quad(t.s, t.p, t.o, Term.defaultGraph)) ++ named
-      val qdf = spark.createDataset(allQuads)(
+    try (0 until graphVarIters).foreach { i =>
+      val (defG, named, op, x) = graphVarCase(i)
+      val qdf = spark.createDataset(
+        defG.map(t => Quad(t.s, t.p, t.o, Term.defaultGraph)) ++ named)(
         org.apache.spark.sql.Encoders.product[Quad]).toDF()
-      def leaf(): Op = rnd.nextInt(6) match {
-        case 0 =>
-          val s = if (rnd.nextBoolean()) TVar(varPool(rnd.nextInt(varPool.size)))
-                  else TConst(iri("s" + rnd.nextInt(5)))
-          PathPattern(s, genPath(rnd, 1), TVar(varPool(rnd.nextInt(varPool.size))))
-        case 1 =>
-          val vs = rnd.shuffle(varPool).take(1 + rnd.nextInt(2)).sorted
-          Table(vs, (0 until 1 + rnd.nextInt(2)).map(_ =>
-            vs.flatMap(v => if (rnd.nextInt(4) == 0) None
-                            else Some(v -> genTerm(rnd))).toMap))
-        case _ => Bgp((0 until 1 + rnd.nextInt(2)).map(_ => genPattern(rnd)))
-      }
-      def body(depth: Int): Op =
-        if (depth == 0) leaf()
-        else rnd.nextInt(9) match {
-          case 0 => Join(body(depth - 1), body(depth - 1))
-          case 1 => Union(body(depth - 1), body(depth - 1))
-          case 2 => LeftJoin(body(depth - 1), body(depth - 1), None)
-          case 3 => Minus(body(depth - 1), body(depth - 1))
-          case 4 => SemiJoin(body(depth - 1), body(depth - 1))
-          case 5 => AntiJoin(body(depth - 1), body(depth - 1))
-          case 6 => Distinct(body(depth - 1))
-          // LATERAL threads the hidden graph column through the
-          // correlated leaf compiler (r5); per-row-sensitive (Distinct)
-          // and plain RHSs both exercised
-          case 7 => Lateral(body(depth - 1), rnd.nextInt(3) match {
-            case 0 => Distinct(leaf())
-            case 1 => Join(leaf(), leaf())
-            case _ => leaf()
-          })
-          case _ => leaf()
-        }
-      val v = varPool(rnd.nextInt(varPool.size))
-      val op = GraphVarEnum(v, body(1 + rnd.nextInt(2)))
       val expected = bag(RefEval.eval(op, GData(defG, named), x))
+      if (expected.nonEmpty) nonEmpty += 1
       try {
         val actual = bag(collectSols(Compiler.compile(op, qdf)))
         if (actual != expected) {
@@ -1076,13 +1104,12 @@ class DifferentialSpec extends AnyFunSuite {
         case e: Exception =>
           failures += s"[$i] COMPILE FAILED: ${e.getMessage}\n  ${showOp(op, x)}"
       }
-    } finally {
-      quadMode = false
-      spark.conf.unset("graft.graphVarEnumMax")
-    }
+    } finally spark.conf.unset("graft.graphVarEnumMax")
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} GRAPH-?var-single-plan failures:\n" +
       fs.take(6).mkString("\n"))
+    assert(nonEmpty * 2 >= graphVarIters,
+      s"only $nonEmpty/$graphVarIters bodies have a non-empty expected bag")
   }
 
   /** The random bodies above draw a LATERAL Join RHS too rarely with
@@ -1106,6 +1133,56 @@ class DifferentialSpec extends AnyFunSuite {
       val expected = bag(RefEval.eval(op, GData(defG, named), new DExprs))
       assert(expected.values.sum == 3)
       assert(bag(collectSols(Compiler.compile(op, qdf))) == expected)
+    } finally spark.conf.unset("graft.graphVarEnumMax")
+  }
+
+  /** A LATERAL MINUS RHS whose operands share no query variable removes
+   * nothing, per graph too: the hidden graph column scopes the anti-join
+   * but is not a shared variable. g1 holds a p1 triple, so a MINUS keyed
+   * on the graph alone would empty g1. */
+  test("differential: GRAPH ?var LATERAL with a MINUS RHS removes nothing without shared vars") {
+    import graft.model.Quad
+    val named = Seq(Quad(iri("s0"), iri("p0"), iri("o1"), iri("g1")),
+      Quad(iri("s1"), iri("p1"), iri("o2"), iri("g1")),
+      Quad(iri("s0"), iri("p0"), iri("o2"), iri("g2")))
+    val qdf = spark.createDataset(named)(
+      org.apache.spark.sql.Encoders.product[Quad]).toDF()
+    def tp(s: String, p: String, o: String) =
+      Bgp(Seq(TriplePattern(TVar(s), TConst(iri(p)), TVar(o))))
+    val op = GraphVarEnum("g",
+      Lateral(tp("a", "p0", "b"), Minus(tp("a", "p0", "c"), tp("x", "p1", "y"))))
+    spark.conf.set("graft.graphVarEnumMax", "0") // single-plan only
+    try {
+      val expected = bag(RefEval.eval(op, GData(Nil, named), new DExprs))
+      assert(expected.values.sum == 2)
+      assert(bag(collectSols(Compiler.compile(op, qdf))) == expected)
+    } finally spark.conf.unset("graft.graphVarEnumMax")
+  }
+
+  /** A closure path joined to a BGP inside GRAPH ?var walks SEEDED from
+   * the BGP's values, each seed within its own graph: g1's walk from s1
+   * must stop at s2, although g2 continues s2 → s3. The 30-cycle in g2
+   * makes a global per-graph closure take 30 rounds, so the round count
+   * shows the walk was seeded. */
+  test("differential: GRAPH ?var join-bound seeds walk within their own graph") {
+    import graft.model.Quad
+    def q(s: String, p: String, o: String, g: String) =
+      Quad(iri(s), iri(p), iri(o), iri(g))
+    val named = Seq(q("s0", "q", "s1", "g1"), q("s1", "p", "s2", "g1"),
+      q("s4", "q", "s2", "g2"), q("s2", "p", "s3", "g2")) ++
+      (0 until 30).map(k => q(s"c$k", "p", s"c${(k + 1) % 30}", "g2"))
+    val qdf = spark.createDataset(named)(
+      org.apache.spark.sql.Encoders.product[Quad]).toDF()
+    val op = GraphVarEnum("g", Join(
+      Bgp(Seq(TriplePattern(TVar("x"), TConst(iri("q")), TVar("y")))),
+      PathPattern(TVar("y"), POneOrMore(PLink(EX + "p")), TVar("z"))))
+    spark.conf.set("graft.graphVarEnumMax", "0") // single-plan only
+    try {
+      val expected = bag(RefEval.eval(op, GData(Nil, named), new DExprs))
+      assert(expected.values.sum == 2)
+      assert(bag(collectSols(Compiler.compile(op, qdf))) == expected)
+      assert(graft.ops.Graphs.lastClosureRounds <= 4,
+        s"per-graph closure ran ${graft.ops.Graphs.lastClosureRounds} rounds — not seeded")
     } finally spark.conf.unset("graft.graphVarEnumMax")
   }
 

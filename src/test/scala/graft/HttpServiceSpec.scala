@@ -151,4 +151,27 @@ class HttpServiceSpec extends AnyFunSuite {
       } finally ServiceRegistry.clear()
     }
   }
+
+  test("a body past the size cap fails naming endpoint and cap; SERVICE SILENT maps it to the unit table") {
+    withServer() { (url, _) =>
+      // the two-row JSON result is far over 64 bytes
+      ServiceRegistry.registerTransport(url,
+        new ServiceRegistry.HttpServiceTransport(maxBodyBytes = 64))
+      try {
+        val e = intercept[RuntimeException] {
+          Sparql.select(
+            s"""SELECT ?mail WHERE { SERVICE <$url> { ?s <${EX}email> ?mail } }""",
+            localGraph).collect()
+        }
+        assert(e.getMessage.contains(url) && e.getMessage.contains("64-byte cap"),
+          e.getMessage)
+        val out = Sparql.select(
+          s"""SELECT ?s ?n WHERE {
+                ?s <${EX}name> ?n .
+                SERVICE SILENT <$url> { ?s <${EX}email> ?mail }
+              }""", localGraph)
+        assert(out.count() == 2) // unit table joined: left rows survive
+      } finally ServiceRegistry.clear()
+    }
+  }
 }

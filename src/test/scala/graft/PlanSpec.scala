@@ -217,15 +217,16 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.graphVarEnumMax")
     // zero named graphs: GRAPH ?g over ANY body — including a
     // graph-independent VALUES — is the EMPTY union (SPARQL 18.5), on
-    // both the single-plan path and the enumeration fallback
+    // both the single-plan path and the enumeration fallback (a nested
+    // GRAPH is not graph-local, so that body can only enumerate)
     val defaultOnly = spark.createDataset(Seq(graft.model.Quad(
       Term.iri(EX + "s"), Term.iri(EX + "p"), Term.iri(EX + "o"),
       Term.defaultGraph))).toDF()
     val valsBody = Table(Seq("x"), Seq(Map("x" -> Term.iri(EX + "a"))))
     assert(Compiler.compile(GraphVarEnum("g", valsBody), defaultOnly).count() == 0)
-    spark.conf.set("graft.graphVarSinglePlan", "off")
-    try assert(Compiler.compile(GraphVarEnum("g", valsBody), defaultOnly).count() == 0)
-    finally spark.conf.unset("graft.graphVarSinglePlan")
+    val nestedBody = LeftJoin(valsBody, GraphScope(Term.iri(EX + "a"),
+      Bgp(Seq(TriplePattern(TVar("x"), TConst(Term.iri(EX + "p")), TVar("y"))))))
+    assert(Compiler.compile(GraphVarEnum("g", nestedBody), defaultOnly).count() == 0)
   }
 
   test("MINUS with all-certain shared vars plans as an equi anti-join (no BNLJ)") {
