@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Term
 import graft.ops.Graphs
+import graft.store.TripleStore
 
 /**
  * Algebra → DataFrame compiler — the Spark-native `OpExecutor`
@@ -33,65 +34,26 @@ object Compiler {
   }
 
   /** Where triple patterns scan from. `DfGraph` is the in-memory shape (a
-   * DataFrame with term-struct columns s, p, o); `SnapshotGraph` is a
-   * materialized TripleStore snapshot, where each pattern picks the
-   * SPO/POS/OSP layout by its shape and pushes flat-column equality
-   * filters into the parquet scan — the FastTripleStore index-selection
-   * rule (mem/store/fast/FastTripleStore.java:36–85) wired into the
-   * compiler instead of a union re-scan. */
+   * DataFrame with term-struct columns s, p, o); the snapshot faces read a
+   * materialized TripleStore snapshot, where each pattern picks its layout
+   * by shape and pushes flat-column equality filters into the parquet
+   * scan — the FastTripleStore index-selection rule
+   * (mem/store/fast/FastTripleStore.java:36–85) wired into the compiler
+   * instead of a union re-scan. Layout names, schemas and the flat term
+   * columns all come from TripleStore ([[storeScan]]). */
   sealed trait GraphSource {
     def df: DataFrame
     def spark: SparkSession = df.sparkSession
   }
   final case class DfGraph(df: DataFrame) extends GraphSource
+
+  /** A term-struct SPO/POS/OSP snapshot (TripleStore.materialize). */
   final case class SnapshotGraph(override val spark: SparkSession, dir: String)
       extends GraphSource {
     /** Struct view over the SPO layout — the fallback for operators that
      * need the whole graph (paths beyond links, DESCRIBE, …). */
-    lazy val df: DataFrame = {
-      val flat = spark.read.parquet(s"$dir/spo")
-      def term(p: String) = struct(
-        col(s"${p}_kind").as("kind"), col(s"${p}_lex").as("lex"),
-        col(s"${p}_dt").as("dt"), col(s"${p}_lang").as("lang")).as(p)
-      flat.select(term("s"), term("p"), term("o"))
-    }
-
-    /** One triple-pattern scan: layout by shape, constants as flat-column
-     * filters (pushed to parquet), variables as struct columns. */
-    def scanPattern(tp: TriplePattern): Compiled = {
-      val layout = (tp.s, tp.p, tp.o) match {
-        case (TConst(_), _, _) => "spo"
-        case (_, TConst(_), _) => "pos"
-        case (_, _, TConst(_)) => "osp"
-        case _ => "spo"
-      }
-      var d = spark.read.parquet(s"$dir/$layout")
-      val slots = Seq(("s", tp.s), ("p", tp.p), ("o", tp.o))
-      slots.foreach {
-        case (c, TConst(t)) =>
-          d = d.where(col(s"${c}_kind") === t.kind && col(s"${c}_lex") === t.lex &&
-            col(s"${c}_dt") === t.dt && col(s"${c}_lang") === t.lang)
-        case _ =>
-      }
-      val byVar = slots.collect { case (c, TVar(n)) => (n, c) }.groupBy(_._1)
-      byVar.values.filter(_.size > 1).foreach { occ =>
-        occ.map(_._2).sliding(2).foreach {
-          case Seq(a, b) =>
-            d = d.where(col(s"${a}_kind") === col(s"${b}_kind") &&
-              col(s"${a}_lex") === col(s"${b}_lex") &&
-              col(s"${a}_dt") === col(s"${b}_dt") &&
-              col(s"${a}_lang") === col(s"${b}_lang"))
-          case _ =>
-        }
-      }
-      def term(c: String) = struct(
-        col(s"${c}_kind").as("kind"), col(s"${c}_lex").as("lex"),
-        col(s"${c}_dt").as("dt"), col(s"${c}_lang").as("lang"))
-      val out = byVar.map { case (n, occ) => term(occ.head._2).as(n) }.toSeq
-      Compiled(
-        if (out.isEmpty) d.select(lit(1).as("__unit")) else d.select(out: _*),
-        if (out.isEmpty) Set.empty else byVar.keySet, Set.empty)
-    }
+    lazy val df: DataFrame = TripleStore.unflatten(
+      TripleStore.read(spark, dir, TripleStore.termLayout("spo")), TripleStore.TripleSlots)
   }
 
   /**
@@ -108,13 +70,13 @@ object Compiler {
       extends GraphSource {
     /** Struct view (decoded) — fallback for operators beyond BGPs. */
     lazy val df: DataFrame =
-      graft.store.TripleStore.decodeEncoded(spark, dir).select("s", "p", "o")
+      TripleStore.decodeEncoded(spark, dir).select("s", "p", "o")
 
-    private[algebra] def terms: DataFrame = spark.read.parquet(s"$dir/terms")
+    private[algebra] def terms: DataFrame = TripleStore.read(spark, dir, TripleStore.TermsLayout)
 
     /** Narrow (s_id, p_id, o_id) scan of a layout. */
-    private[algebra] def idLayout(layout: String): DataFrame =
-      spark.read.parquet(s"$dir/$layout").select("s_id", "p_id", "o_id")
+    private[algebra] def idLayout(order: String): DataFrame =
+      TripleStore.read(spark, dir, TripleStore.idLayout(order)).select("s_id", "p_id", "o_id")
 
     /** Driver-side constant→id probe (one scan for all constants of the
      * BGP; a term missing from the dictionary matches nothing). */
@@ -132,33 +94,15 @@ object Compiler {
         .collect { case TConst(t) => t }.distinct
       val ids = idsOf(consts)
       val missingConst = consts.exists(t => !ids.contains(t))
-
-      def scanOne(tp: TriplePattern, k: Int): DataFrame = {
-        val layout = (tp.s, tp.p, tp.o) match {
-          case (TConst(_), _, _) => "spo"
-          case (_, TConst(_), _) => "pos"
-          case (_, _, TConst(_)) => "osp"
-          case _ => "spo"
-        }
-        var d = spark.read.parquet(s"$dir/$layout").select("s_id", "p_id", "o_id")
-        if (missingConst) d = d.limit(0) // a constant outside the dictionary
-        val slots = Seq(("s_id", tp.s), ("p_id", tp.p), ("o_id", tp.o))
-        slots.foreach {
-          case (c, TConst(t)) => d = d.where(col(c) === ids.getOrElse(t, Long.MinValue))
-          case _ =>
-        }
-        val byVar = slots.collect { case (c, TVar(n)) => (n, c) }.groupBy(_._1)
-        byVar.values.filter(_.size > 1).foreach { occ =>
-          occ.map(_._2).sliding(2).foreach {
-            case Seq(a, b) => d = d.where(col(a) === col(b))
-            case _ =>
-          }
-        }
-        val out = byVar.map { case (n, occ) => col(occ.head._2).as(n) }.toSeq
-        if (out.isEmpty) d.select(lit(1).as(s"__u$k")).limit(1) else d.select(out: _*)
+      val idCodec = SlotCodec(x => Seq(s"${x}_id"),
+        t => Seq(ids.getOrElse(t, Long.MinValue)), x => col(s"${x}_id"))
+      val scans = patterns.zipWithIndex.map { case (tp, k) =>
+        val slots = slotsOf(tp)
+        val d = TripleStore.read(spark, dir, TripleStore.idLayout(layoutOrder(slots)))
+        // a constant outside the dictionary matches nothing
+        val c = patternScan(if (missingConst) d.limit(0) else d, slots, idCodec)
+        if (c.vars.isEmpty) c.df.limit(1).toDF(s"__u$k") else c.df
       }
-
-      val scans = patterns.zipWithIndex.map { case (tp, k) => scanOne(tp, k) }
       val joined = scans.reduceLeft { (l, r) =>
         val shared = l.columns.toSet.intersect(r.columns.toSet)
           .filterNot(_.startsWith("__u")).toSeq.sorted
@@ -181,59 +125,72 @@ object Compiler {
 
   /** Materialized QUAD snapshot (GSPO/GPOS/GOSP layouts): GRAPH patterns
    * pick the layout by s/p/o shape — every quad layout leads with g_lex,
-   * so a bound graph prunes file ranges on all of them — and push flat
-   * filters into parquet. */
+   * so a bound graph prunes file ranges on all of them. */
   final case class QuadSnapshotGraph(override val spark: SparkSession, dir: String)
       extends GraphSource {
     /** (s,p,o,g) struct view over GSPO — fallback for generic operators. */
-    lazy val df: DataFrame = {
-      val flat = spark.read.parquet(s"$dir/gspo")
-      def term(p: String) = struct(
-        col(s"${p}_kind").as("kind"), col(s"${p}_lex").as("lex"),
-        col(s"${p}_dt").as("dt"), col(s"${p}_lang").as("lang")).as(p)
-      flat.select(term("s"), term("p"), term("o"), term("g"))
-    }
+    lazy val df: DataFrame = TripleStore.unflatten(
+      TripleStore.read(spark, dir, TripleStore.quadLayout("spo")), Seq("s", "p", "o", "g"))
+  }
 
-    /** One quad-pattern scan; `defaultOnly` pins the default graph (plain
-     * BGP semantics), otherwise `gp` joins/filters like the s/p/o slots
-     * restricted to NAMED graphs (GRAPH semantics). */
-    def scanQuadPattern(gp: TermPat, tp: TriplePattern,
-                        defaultOnly: Boolean = false): Compiled = {
-      val layout = (tp.s, tp.p, tp.o) match {
-        case (TConst(_), _, _) => "gspo"
-        case (_, TConst(_), _) => "gpos"
-        case (_, _, TConst(_)) => "gosp"
-        case _ => "gspo"
-      }
-      var d = spark.read.parquet(s"$dir/$layout")
-      if (defaultOnly) d = d.where(col("g_lex") === DefaultGraph)
-      else d = d.where(col("g_lex") =!= DefaultGraph)
-      val slots = Seq(("g", gp), ("s", tp.s), ("p", tp.p), ("o", tp.o))
-      slots.foreach {
-        case (c, TConst(t)) =>
-          d = d.where(col(s"${c}_kind") === t.kind && col(s"${c}_lex") === t.lex &&
-            col(s"${c}_dt") === t.dt && col(s"${c}_lang") === t.lang)
-        case _ =>
-      }
-      val byVar = slots.collect { case (c, TVar(n)) => (n, c) }.groupBy(_._1)
-      byVar.values.filter(_.size > 1).foreach { occ =>
-        occ.map(_._2).sliding(2).foreach {
-          case Seq(a, b) =>
-            d = d.where(col(s"${a}_kind") === col(s"${b}_kind") &&
-              col(s"${a}_lex") === col(s"${b}_lex") &&
-              col(s"${a}_dt") === col(s"${b}_dt") &&
-              col(s"${a}_lang") === col(s"${b}_lang"))
-          case _ =>
-        }
-      }
-      def term(c: String) = struct(
-        col(s"${c}_kind").as("kind"), col(s"${c}_lex").as("lex"),
-        col(s"${c}_dt").as("dt"), col(s"${c}_lang").as("lang"))
-      val out = byVar.map { case (n, occ) => term(occ.head._2).as(n) }.toSeq
-      Compiled(
-        if (out.isEmpty) d.select(lit(1).as("__unit")) else d.select(out: _*),
-        if (out.isEmpty) Set.empty else byVar.keySet, Set.empty)
+  /** How a frame holds a term slot: its columns, the values a constant
+   * term takes in them, and the term read back. */
+  private[algebra] final case class SlotCodec(cols: String => Seq[String],
+                                              values: Term => Seq[Any],
+                                              term: String => Column)
+
+  /** Term-struct columns named after the slot (in-memory graphs). */
+  private val structCodec = SlotCodec(x => Seq(x), t => Seq(TermCols.const(t)), col)
+
+  /** TripleStore's flat x_kind/x_lex/x_dt/x_lang columns. */
+  private val flatCodec = SlotCodec(TripleStore.flatCols,
+    t => Seq(t.kind, t.lex, t.dt, t.lang), TripleStore.term)
+
+  private[algebra] def slotsOf(tp: TriplePattern): Seq[(String, TermPat)] =
+    Seq(("s", tp.s), ("p", tp.p), ("o", tp.o))
+
+  /** The layout order a pattern reads: by its bound s/p/o slots. */
+  private def layoutOrder(slots: Seq[(String, TermPat)]): String =
+    TripleStore.order(x => slots.exists { case (c, p) => c == x && p.isInstanceOf[TConst] })
+
+  /** One triple or quad pattern over `d` (Graph.find, the 8 MatchPattern
+   * shapes — PatternClassifier.java:51): each constant slot becomes an
+   * equality on the slot's columns (pushed into a parquet scan), a
+   * repeated variable an equality between its slots, and each variable
+   * comes out as one term column. */
+  private[algebra] def patternScan(d0: DataFrame, slots: Seq[(String, TermPat)],
+                                   codec: SlotCodec): Compiled = {
+    def eqs(cs: Seq[String], vs: Seq[Any]): Column =
+      cs.zip(vs).map { case (c, v) => col(c) === v }.reduce(_ && _)
+    var d = d0
+    slots.foreach {
+      case (c, TConst(t)) => d = d.where(eqs(codec.cols(c), codec.values(t)))
+      case _ =>
     }
+    val byVar = slots.collect { case (c, TVar(n)) => (n, c) }.groupBy(_._1)
+    byVar.values.foreach(_.map(_._2).sliding(2).foreach {
+      case Seq(a, b) => d = d.where(eqs(codec.cols(a), codec.cols(b).map(col)))
+      case _ =>
+    })
+    val out = byVar.map { case (n, occ) => codec.term(occ.head._2).as(n) }.toSeq
+    Compiled(if (out.isEmpty) d.select(lit(1).as("__unit")) else d.select(out: _*),
+      byVar.keySet, Set.empty)
+  }
+
+  /** The graph name's lexical form in a quad layout row. */
+  private def storedGraphLex: Column = TermCols.lex(TripleStore.term("g"))
+
+  /** One pattern over a snapshot's term-struct (`quads = false`, slots
+   * s, p, o) or quad (slots g, s, p, o) layouts — the one read path of
+   * both snapshot faces: the layout by shape, read with its schema, then
+   * [[patternScan]] over the flat columns after the optional `where`. */
+  private[algebra] def storeScan(spark: SparkSession, dir: String, quads: Boolean,
+                                 slots: Seq[(String, TermPat)],
+                                 where: Option[Column] = None): Compiled = {
+    val order = layoutOrder(slots)
+    val d = TripleStore.read(spark, dir,
+      if (quads) TripleStore.quadLayout(order) else TripleStore.termLayout(order))
+    patternScan(where.fold(d)(d.where), slots, flatCodec)
   }
 
   /** The graph being queried: a DataFrame with term-struct columns s, p, o
@@ -287,25 +244,29 @@ object Compiler {
       g match {
         case NamedGraphs(dataset) => comp(QuadBgp(TVar(AGV), patterns), dataset)
         case sg: SnapshotGraph =>
-          patterns.map(sg.scanPattern).reduceLeft(join(_, _, "inner"))
+          patterns.map(tp => storeScan(sg.spark, sg.dir, quads = false, slotsOf(tp)))
+            .reduceLeft(join(_, _, "inner"))
         case esg: EncodedSnapshotGraph => esg.scanBgp(patterns)
         case qsg: QuadSnapshotGraph =>
           // un-GRAPHed BGP over a quad store = default graph only
-          patterns.map(qsg.scanQuadPattern(TAny, _, defaultOnly = true))
-            .reduceLeft(join(_, _, "inner"))
+          patterns.map(tp => storeScan(qsg.spark, qsg.dir, quads = true, slotsOf(tp),
+            Some(storedGraphLex === DefaultGraph))).reduceLeft(join(_, _, "inner"))
         case _ =>
           // on a quad table, an un-GRAPHed BGP matches the default graph
           // only; s-NULL marker rows (empty-graph existence markers) are
           // not triples
           val base = defaultGraphTriples(g.df)
-          patterns.map(scan(base, _)).reduceLeft(join(_, _, "inner"))
+          patterns.map(tp => patternScan(base, slotsOf(tp), structCodec))
+            .reduceLeft(join(_, _, "inner"))
       }
 
     case QuadBgp(gp, patterns) =>
       require(patterns.nonEmpty, "empty QuadBgp")
       g match {
         case qsg: QuadSnapshotGraph =>
-          patterns.map(qsg.scanQuadPattern(gp, _))
+          // GRAPH never matches the default graph
+          patterns.map(tp => storeScan(qsg.spark, qsg.dir, quads = true,
+            ("g", gp) +: slotsOf(tp), Some(storedGraphLex =!= DefaultGraph)))
             .reduceLeft(join(_, _, "inner"))
         case _ =>
           require(hasGraphCol(g.df), "QuadBgp needs a quad table (g column)")
@@ -313,7 +274,7 @@ object Compiler {
           // semantics); empty-graph marker rows are not triples
           val named = g.df.filter(TermCols.lex(col("g")) =!= DefaultGraph &&
             col("g").isNotNull && col("s").isNotNull)
-          patterns.map(scan(named, _, extraSlots = Seq(("g", gp))))
+          patterns.map(tp => patternScan(named, ("g", gp) +: slotsOf(tp), structCodec))
             .reduceLeft(join(_, _, "inner"))
       }
 
@@ -589,16 +550,8 @@ object Compiler {
     case GraphScope(gname, in) =>
       val scoped: GraphSource = g match {
         case qsg: QuadSnapshotGraph if !usesDataset(in) =>
-          DfGraph(qsg.spark.read.parquet(s"${qsg.dir}/gspo")
-            .where(col("g_kind") === gname.kind && col("g_lex") === gname.lex &&
-              col("g_dt") === gname.dt && col("g_lang") === gname.lang)
-            .select(
-              struct(col("s_kind").as("kind"), col("s_lex").as("lex"),
-                col("s_dt").as("dt"), col("s_lang").as("lang")).as("s"),
-              struct(col("p_kind").as("kind"), col("p_lex").as("lex"),
-                col("p_dt").as("dt"), col("p_lang").as("lang")).as("p"),
-              struct(col("o_kind").as("kind"), col("o_lex").as("lex"),
-                col("o_dt").as("dt"), col("o_lang").as("lang")).as("o")))
+          DfGraph(storeScan(qsg.spark, qsg.dir, quads = true, ("g", TConst(gname)) +:
+            slotsOf(TriplePattern(TVar("s"), TVar("p"), TVar("o")))).df)
         case _ if !usesDataset(in) =>
           require(hasGraphCol(g.df), "GRAPH needs a quad table (g column)")
           DfGraph(g.df
@@ -910,30 +863,6 @@ object Compiler {
       (cl.vars ++ cr.vars) -- cl.certain.intersect(cr.certain))
   }
 
-  // ---- triple-pattern scan (Graph.find, the 8 MatchPattern shapes —
-  //      PatternClassifier.java:51; constants become pushable predicates)
-  private[algebra] def scan(g: DataFrame, tp: TriplePattern,
-                            extraSlots: Seq[(String, TermPat)] = Nil): Compiled = {
-    var df = g
-    val slots = extraSlots ++ Seq(("s", tp.s), ("p", tp.p), ("o", tp.o))
-    slots.foreach {
-      case (c, TConst(t)) => df = df.filter(col(c) === TermCols.const(t))
-      case _ =>
-    }
-    // repeated variable inside one pattern ⇒ equality constraint
-    val byVar = slots.collect { case (c, TVar(n)) => (n, c) }.groupBy(_._1)
-    byVar.values.filter(_.size > 1).foreach { occ =>
-      occ.map(_._2).sliding(2).foreach {
-        case Seq(a, b) => df = df.filter(col(a) === col(b))
-        case _ =>
-      }
-    }
-    val out = byVar.map { case (n, occ) => col(occ.head._2).as(n) }.toSeq
-    val names = byVar.keySet
-    Compiled(if (out.isEmpty) df.select(lit(1).as("__unit")) else df.select(out: _*),
-      if (out.isEmpty) Set.empty else names, Set.empty)
-  }
-
   /** Can seeding ever apply to this path pattern in a join context? —
    * closure-bearing path with at least one variable endpoint (constant
    * endpoints are already seeded by [[compPath]] itself). */
@@ -968,13 +897,8 @@ object Compiler {
         Right(c.df.select(sp.keys.map(_ => col(AGV)) :+ col(v).as("n"): _*)))
       case _ => None
     }
-    // escape hatch (and the honest A/B lever for the seeded-vs-global
-    // closure benchmark): graft.pathSeededEval=off forces the pre-r5
-    // global-closure-then-filter plan
-    val seedOn = PathEval.containsClosure(path) &&
-      sp.spark.conf.getOption("graft.pathSeededEval").forall(_ != "off")
     val seeds: Option[(Either[Term, DataFrame], Boolean)] =
-      if (!seedOn) None
+      if (!PathEval.containsClosure(path)) None
       else const(s).map(_ -> false).orElse(const(o).map(_ -> true))
         .orElse(bound(s).map(_ -> false)).orElse(bound(o).map(_ -> true))
     var pairs = seeds match {
@@ -1209,13 +1133,25 @@ object Compiler {
    * tag + checkpoint are paid only when [[perRowSensitive]] says the RHS
    * needs them — a plain RHS stays the old single-join plan. */
   private def lateral(l: Compiled, r: Op, g: GraphSource): Compiled =
-    if (!perRowSensitive(r)) lat(l, r, g, tag = "")
+    if (!perRowSensitive(r, l.vars)) lat(l, r, g, tag = "", LatLeft(l, ""))
     else {
       val t = freshTag()
       val lt = Compiled(taggedAs(l.df, t), l.certain + t, l.maybe)
-      val out = lat(lt, r, g, t)
+      val out = lat(lt, r, g, t, LatLeft(lt, t))
       Compiled(out.df.drop(t), out.certain - t, out.maybe)
     }
+
+  /** A LATERAL's own left side: the frame whose row is substituted into
+   * the RHS and its per-row tag. Its variables are the substituted ones. */
+  private final case class LatLeft(frame: Compiled, tag: String) {
+    def vars: Set[String] = frame.vars - tag
+  }
+
+  /** Does a MINUS right side mention the LATERAL's left variables? Then
+   * the left row is substituted into it — the one predicate behind both
+   * [[perRowSensitive]] (the tag) and [[lat]]'s correlated MINUS. */
+  private def substitutes(b: Op, left: Set[String]): Boolean =
+    opVisibleVars(b).exists(left)
 
   /** Does the body re-access the DATASET (named graphs / dataset names /
    * FROM) rather than only the active graph? Decides whether GraphScope
@@ -1248,25 +1184,29 @@ object Compiler {
 
   /** Does this RHS shape observe per-left-row evaluation (vs evaluating
    * identically for every left row)? Decides whether [[lateral]] must
-   * materialize a per-left-row tag. */
-  private def perRowSensitive(op: Op): Boolean = op match {
-    case Slice(_, _, _) => true
-    case Group(_, _, _) => true
-    case Distinct(_) | Reduced(_) => true
-    case Lateral(_, _) => true
-    case Order(_, in) => perRowSensitive(in)
-    case Filter(_, in) => perRowSensitive(in)
-    case Extend(_, _, in) => perRowSensitive(in)
-    case Project(_, in) => perRowSensitive(in)
-    case Label(_, in) => perRowSensitive(in)
-    case DropVars(_, in) => perRowSensitive(in)
-    case Join(a, b) => perRowSensitive(a) || perRowSensitive(b)
-    case LeftJoin(a, b, _) => perRowSensitive(a) || perRowSensitive(b)
-    case Union(a, b) => perRowSensitive(a) || perRowSensitive(b)
-    case SemiJoin(a, _) => perRowSensitive(a)
-    case AntiJoin(a, _) => perRowSensitive(a)
-    case Minus(a, _) => perRowSensitive(a)
-    case _ => false
+   * materialize a per-left-row tag. `left`: the LATERAL's left variables
+   * (see [[substitutes]]). */
+  private def perRowSensitive(op: Op, left: Set[String]): Boolean = {
+    def sens(o: Op): Boolean = perRowSensitive(o, left)
+    op match {
+      case Slice(_, _, _) => true
+      case Group(_, _, _) => true
+      case Distinct(_) | Reduced(_) => true
+      case Lateral(_, _) => true
+      case Order(_, in) => sens(in)
+      case Filter(_, in) => sens(in)
+      case Extend(_, _, in) => sens(in)
+      case Project(_, in) => sens(in)
+      case Label(_, in) => sens(in)
+      case DropVars(_, in) => sens(in)
+      case Join(a, b) => sens(a) || sens(b)
+      case LeftJoin(a, b, _) => sens(a) || sens(b)
+      case Union(a, b) => sens(a) || sens(b)
+      case SemiJoin(a, _) => sens(a)
+      case AntiJoin(a, _) => sens(a)
+      case Minus(a, b) => sens(a) || substitutes(b, left)
+      case _ => false
+    }
   }
 
   /** Pattern/visible variables of an RHS subtree — the collision guard for
@@ -1310,39 +1250,41 @@ object Compiler {
   /** Correlated compile of a LATERAL RHS: `l` already holds the left
    * columns (plus the per-left-row `tag` column when the RHS is
    * per-row-sensitive); the result holds left + RHS columns with the
-   * substitution semantics applied. */
-  private def lat(l: Compiled, r: Op, g: GraphSource, tag: String): Compiled = r match {
+   * substitution semantics applied. `left` is the LATERAL's own left
+   * side, which `l` extends once a Join or OPTIONAL has been threaded. */
+  private def lat(l: Compiled, r: Op, g: GraphSource, tag: String,
+                  left: LatLeft): Compiled = r match {
     case Filter(cond, in) =>
       // RHS filters see the LEFT bindings (lateral-3 "filter scope")
-      val c = lat(l, in, g, tag)
+      val c = lat(l, in, g, tag, left)
       Compiled(c.df.filter(cond(v => resolve(c, v))), c.certain, c.maybe)
     case Extend(name, expr, in) =>
-      val c = lat(l, in, g, tag)
+      val c = lat(l, in, g, tag, left)
       require(!c.vars.contains(name), s"Extend onto bound var $name")
       Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
         c.certain, c.maybe + name)
-    case Join(a, b) => lat(lat(l, a, g, tag), b, g, tag)
-    case Union(a, b) => unionPad(lat(l, a, g, tag), lat(l, b, g, tag))
+    case Join(a, b) => lat(lat(l, a, g, tag, left), b, g, tag, left)
+    case Union(a, b) => unionPad(lat(l, a, g, tag, left), lat(l, b, g, tag, left))
     case Distinct(in) =>
       // per-left-row dedup: the tag keeps duplicate left rows distinct
-      val c = lat(l, in, g, tag)
+      val c = lat(l, in, g, tag, left)
       Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
-    case Reduced(in) => lat(l, Distinct(in), g, tag)
+    case Reduced(in) => lat(l, Distinct(in), g, tag, left)
     case Order(_, in) =>
       // ordering without a slice has no observable effect on the multiset
-      lat(l, in, g, tag)
-    case Label(_, in) => lat(l, in, g, tag)
+      lat(l, in, g, tag, left)
+    case Label(_, in) => lat(l, in, g, tag, left)
     case DropVars(vs, in) =>
-      val c = lat(l, in, g, tag)
+      val c = lat(l, in, g, tag, left)
       Compiled(c.df.drop(vs: _*), c.certain -- vs, c.maybe -- vs)
     case LeftJoin(a, b, cond) =>
       // per-row OPTIONAL (optional-in-lateral): left' rows unmatched by
       // the correlated RHS survive with unbound RHS vars. Fresh tag —
       // left' may have multiplied the original left rows.
-      val l2 = lat(l, a, g, tag)
+      val l2 = lat(l, a, g, tag, left)
       val t2 = freshTag()
       val lt2 = Compiled(taggedAs(l2.df, t2), l2.certain + t2, l2.maybe)
-      val m0 = lat(lt2, b, g, t2)
+      val m0 = lat(lt2, b, g, t2, left)
       val matched = cond match {
         case Some(e) => Compiled(m0.df.filter(e(v => resolve(m0, v))), m0.certain, m0.maybe)
         case None => m0
@@ -1355,9 +1297,16 @@ object Compiler {
       val out = matched.df.unionByName(
         padded.select(matched.df.columns.map(col): _*)).drop(t2)
       Compiled(out, l2.certain, l2.maybe ++ rhsVars)
-    case SemiJoin(a, b) => halfJoin(lat(l, a, g, tag), comp(b, g), "left_semi")
-    case AntiJoin(a, b) => halfJoin(lat(l, a, g, tag), comp(b, g), "left_anti")
-    case Minus(a, b) => minusJoin(lat(l, a, g, tag), comp(b, g))
+    case SemiJoin(a, b) => halfJoin(lat(l, a, g, tag, left), comp(b, g), "left_semi")
+    case AntiJoin(a, b) => halfJoin(lat(l, a, g, tag, left), comp(b, g), "left_anti")
+    case Minus(a, b) if substitutes(b, left.vars) =>
+      // the left row is substituted into BOTH operands: compile both
+      // against the LATERAL's own left frame, anti-join within one left
+      // row (its tag), then join back onto the frame threaded so far
+      val m = minusJoin(lat(left.frame, a, g, left.tag, left),
+        unbindLeft(left, b, g), Seq(left.tag))
+      if (l eq left.frame) m else join(l, m, "inner")
+    case Minus(a, b) => minusJoin(lat(l, a, g, tag, left), comp(b, g))
     case Slice(offset, limit, inner) =>
       // per-left-row LIMIT/OFFSET: row_number window over the tag
       require(offset <= Int.MaxValue && (limit == Long.MaxValue || limit <= Int.MaxValue),
@@ -1380,7 +1329,7 @@ object Compiler {
             "collide with left-side bindings while using LIMIT/OFFSET — " +
             "rename the inner variables (scope rename is not implemented here)")
       }
-      val joined = lat(l, body, g, tag)
+      val joined = lat(l, body, g, tag, left)
       val order = if (sortKeys.isEmpty) Seq(lit(1).asc) else orderCols(joined, sortKeys)
       val limited = rankSlice(joined.df, tag, order, offset, limit)
       projOpt match {
@@ -1397,7 +1346,7 @@ object Compiler {
       // get the aggregate-over-empty values (COUNT=0 etc.), obtained from
       // one global empty-frame aggregation.
       require(tag.nonEmpty, "internal: per-row group without a lateral tag")
-      val c = lat(l, in, g, tag)
+      val c = lat(l, in, g, tag, left)
       require(aggs.nonEmpty, "LATERAL grouped subquery without aggregates")
       def res(v: String): Column =
         if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
@@ -1416,7 +1365,7 @@ object Compiler {
       // subquery (no projected var bound on the left) evaluates once,
       // globally — including its LIMIT (lateral-in-optional).
       val corr = vs.toSet.intersect(l.vars -- Set(tag))
-      if (!perRowSensitive(inner) || corr.isEmpty)
+      if (!perRowSensitive(inner, corr) || corr.isEmpty)
         join(l, comp(Project(vs, inner), g), "inner")
       else {
         val hidden = (opVisibleVars(inner) -- vs).intersect(l.vars - tag)
@@ -1424,7 +1373,7 @@ object Compiler {
           s"LATERAL sub-SELECT hides variable(s) ${hidden.mkString(", ")} that " +
             "collide with left-side bindings while using per-row modifiers — " +
             "rename the inner variables (scope rename is not implemented here)")
-        val c = lat(l, inner, g, tag)
+        val c = lat(l, inner, g, tag, left)
         val keep = (l.vars ++ vs.filter(c.vars)).toSeq.sorted
         Compiled(c.df.select(keep.map(col): _*),
           l.certain ++ vs.toSet.intersect(c.certain),
@@ -1437,6 +1386,24 @@ object Compiler {
       // so the compatible-binding join keys on it and the correlated
       // evaluation stays graph-scoped.
       join(l, comp(r, g), "inner")
+  }
+
+  /** A LATERAL MINUS right side compiled against the left row, then with
+   * the variables that row binds unbound again: they are constants in
+   * both operands, no shared variables. A left variable the row leaves
+   * unbound (OPTIONAL) stays a variable, so it is unbound only where a
+   * copy of the left value is bound. */
+  private def unbindLeft(left: LatLeft, b: Op, g: GraphSource): Compiled = {
+    val f = left.frame
+    val copies = f.maybe.toSeq.sorted.map(v => v -> s"${left.tag}_$v")
+    val fc = Compiled(copies.foldLeft(f.df) { case (d, (v, c)) => d.withColumn(c, col(v)) },
+      f.certain, f.maybe ++ copies.map(_._2))
+    val r = lat(fc, b, g, left.tag, left)
+    val bound = (f.certain - left.tag).toSeq
+    val df = copies.foldLeft(r.df.drop(bound: _*)) { case (d, (v, c)) =>
+      d.withColumn(v, when(col(c).isNull, col(v))).drop(c)
+    }
+    Compiled(df, r.certain -- bound -- f.maybe, r.maybe -- copies.map(_._2) ++ f.maybe)
   }
 
   private val tagCtr = new java.util.concurrent.atomic.AtomicLong()
@@ -1469,12 +1436,13 @@ object Compiler {
    * LID decomposition (union of equi-joins restricted to branches that
    * witness a both-bound var). Only the >MaxDecomposedVars tail — a shape
    * no realistic query produces — falls back to the OR-condition
-   * nested-loop join. */
-  private def minusJoin(l: Compiled, r: Compiled): Compiled = {
+   * nested-loop join. `keys0` (a LATERAL's left-row tag) scope the
+   * anti-join to one left row. */
+  private def minusJoin(l: Compiled, r: Compiled, keys0: Seq[String] = Nil): Compiled = {
     // per graph, [[AGV]] scopes the anti-join to one graph but is NOT a
     // shared var: the ≥1-both-bound rule applies to the DATA vars only,
     // so two patterns sharing no query variable still remove nothing
-    val keys = Seq(AGV).filter(k => l.vars(k) && r.vars(k))
+    val keys = Seq(AGV).filter(k => l.vars(k) && r.vars(k)) ++ keys0
     val shared = (l.vars.intersect(r.vars) -- keys).toSeq.sorted
     if (shared.isEmpty) return l
     val rr = renamedRight(r)
@@ -1628,7 +1596,8 @@ object PathEval {
     private def active: DataFrame = Compiler.defaultGraphTriples(g.df)
     def link(iri: String): DataFrame = g match {
       case sg: SnapshotGraph =>
-        sg.scanPattern(TriplePattern(TVar("src"), TConst(Term.iri(iri)), TVar("dst"))).df
+        Compiler.storeScan(sg.spark, sg.dir, quads = false,
+          Compiler.slotsOf(TriplePattern(TVar("src"), TConst(Term.iri(iri)), TVar("dst")))).df
       case _ =>
         active.filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
           .select(col("s").as("src"), col("o").as("dst"))

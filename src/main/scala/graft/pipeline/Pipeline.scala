@@ -69,25 +69,16 @@ object Pipeline {
     val linked = linked0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var t = System.nanoTime()
-      def lap(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[fused] $name%-12s ${(now - t) / 1e9}%.1f s")
-        t = now
-      }
       val edges = linked
         .where(col("p.lex") === CorpusGen.OWL_SAMEAS)
         .select(col("s.lex").as("src"), col("o.lex").as("dst"))
       val mapping = ConnectedComponents.runAdaptive(edges, ccLocalMax)
-      lap("link+cc") // forces gen→extract→link materialization via persist
       val rewritten = ConnectedComponents.rewrite(linked.toDF(), mapping)
       // plain term-struct store: measured faster than materializeEncoded
       // on this corpus (terms are mostly unique, so the 3n-row dictionary
       // shuffle costs more than the narrow id rows save — see BASELINE.md)
-      val n = TripleStore.materialize(rewritten, s"$outDir/snapshot",
+      TripleStore.materialize(rewritten, s"$outDir/snapshot",
         parent = None, partitions = spark.sparkContext.defaultParallelism)
-      lap("materialize")
-      n
     } finally linked.unpersist()
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
  * Triple-table materialization — the columnar analog of TDB2's storage
@@ -46,21 +47,74 @@ object TripleStore {
     }
   }
 
-  /** Flatten struct terms to 12 scalar columns for columnar stats/pruning. */
-  def flatten(triples: DataFrame): DataFrame =
-    triples.select(
-      col("s.kind").as("s_kind"), col("s.lex").as("s_lex"),
-      col("s.dt").as("s_dt"), col("s.lang").as("s_lang"),
-      col("p.kind").as("p_kind"), col("p.lex").as("p_lex"),
-      col("p.dt").as("p_dt"), col("p.lang").as("p_lang"),
-      col("o.kind").as("o_kind"), col("o.lex").as("o_lex"),
-      col("o.dt").as("o_dt"), col("o.lang").as("o_lang"),
-      col("repo"), col("lang"))
+  // ------------------------------------------------------------ layouts
+  // The snapshot format, owned here and nowhere else: every term slot is
+  // stored flat as four columns x_kind/x_lex/x_dt/x_lang (the fields of
+  // TermCols.schema), so constants push down to parquet as plain column
+  // equalities; every layout is read back with its schema given.
 
-  private val termCols = Seq(
-    "s_kind", "s_lex", "s_dt", "s_lang",
-    "p_kind", "p_lex", "p_dt", "p_lang",
-    "o_kind", "o_lex", "o_dt", "o_lang")
+  /** The term slots of a triple row and of a quad row. */
+  val TripleSlots: Seq[String] = Seq("s", "p", "o")
+  val QuadSlots: Seq[String] = Seq("g", "s", "p", "o")
+
+  /** Pipeline partition columns; they ride only the primary layout. */
+  private val Extras = Seq("repo", "lang")
+
+  private val termFields = graft.algebra.TermCols.schema.fields.toSeq
+
+  /** The flat columns of one term slot. */
+  def flatCols(slot: String): Seq[String] = termFields.map(f => s"${slot}_${f.name}")
+
+  /** The term struct of one slot of a flat frame. */
+  def term(slot: String): Column =
+    struct(termFields.map(f => col(s"${slot}_${f.name}").as(f.name)): _*)
+
+  /** Term-struct columns `slots` → their flat columns, then `extras`. */
+  def flatten(df: DataFrame, slots: Seq[String], extras: Seq[String] = Nil): DataFrame =
+    df.select(slots.flatMap(x => termFields.map(f =>
+      col(s"$x.${f.name}").as(s"${x}_${f.name}"))) ++ extras.map(col): _*)
+
+  /** Flat columns → one term-struct column per slot. */
+  def unflatten(df: DataFrame, slots: Seq[String]): DataFrame =
+    df.select(slots.map(x => term(x).as(x)): _*)
+
+  /** One layout directory of a snapshot and the schema it was written with. */
+  final case class Layout(name: String, schema: StructType)
+
+  private def flatSchema(slots: Seq[String], extras: Seq[String]): StructType =
+    StructType(slots.flatMap(x => termFields.map(f => StructField(s"${x}_${f.name}", f.dataType))) ++
+      extras.map(StructField(_, StringType)))
+
+  /** The sort order a pattern reads: the one whose leading slot is bound
+   * — the FastTripleStore index-selection rule, columnar edition
+   * (mem/pattern/PatternClassifier.java:51). A quad layout leads with the
+   * graph, so the same s/p/o rule picks within it. */
+  def order(bound: String => Boolean): String =
+    Seq("spo", "pos", "osp").find(o => bound(o.take(1))).getOrElse("spo")
+
+  /** Term-struct triple layouts spo/pos/osp. */
+  def termLayout(order: String): Layout =
+    Layout(order, flatSchema(TripleSlots, if (order == "spo") Extras else Nil))
+
+  /** Quad layouts gspo/gpos/gosp. */
+  def quadLayout(order: String): Layout = Layout("g" + order, flatSchema(QuadSlots, Nil))
+
+  /** Id-encoded fact layouts: (s_id, p_id, o_id) LONG rows. */
+  def idLayout(order: String): Layout = Layout(order, StructType(
+    TripleSlots.map(x => StructField(s"${x}_id", LongType)) ++
+      (if (order == "spo") Extras.map(StructField(_, StringType)) else Nil)))
+
+  /** The id-encoded snapshot's dictionary: id → term fields. */
+  val TermsLayout: Layout =
+    Layout("terms", StructType(StructField("id", LongType) +:
+      termFields.map(f => StructField(f.name, f.dataType))))
+
+  /** Read one layout of a snapshot. The schema is given, so opening a
+   * layout launches no schema-inference job. */
+  def read(spark: SparkSession, snapshotDir: String, layout: Layout): DataFrame =
+    spark.read.schema(layout.schema).parquet(s"$snapshotDir/${layout.name}")
+
+  // ------------------------------------------------------------- writers
 
   /**
    * Dedup (set semantics) + the three sorted layouts + lineage + manifest.
@@ -76,28 +130,40 @@ object TripleStore {
    * instead of 4, and no multi-GB cache competing with sort memory.
    */
   def materialize(triples: DataFrame, snapshotDir: String,
-                  parent: Option[String], partitions: Int = 32): Long = {
-    val spark = triples.sparkSession
-    val t0 = System.nanoTime()
-    // opt-in phase laps (SPARK_GRAFT_LAPS=1 or -Dgraft.laps=1): decomposes
-    // the fixed driver term of the scaling model (BASELINE.md trial 10)
-    val lapOn = sys.env.get("SPARK_GRAFT_LAPS").contains("1") ||
-      sys.props.get("graft.laps").contains("1")
-    var tl = t0
-    def lap(name: String): Unit = if (lapOn) {
-      val now = System.nanoTime()
-      println(f"[materialize] $name%-10s ${(now - tl) / 1e9}%.1f s")
-      tl = now
-    }
+                  parent: Option[String], partitions: Int = 32): Long =
+    writeSorted(flatten(triples, TripleSlots, Extras), snapshotDir, parent, partitions,
+      quads = false)
 
-    val flat = flatten(triples)
-    val keyIdx = termCols.map(flat.schema.fieldIndex)
+  // Named-graph layouts GSPO / GPOS / GOSP — the TDB2 primary quad
+  // indexes (dboe/sys/Names.java:43–47 primaryIndexQuads).
+
+  /** Quad-store materialization: dedup + GSPO/GPOS/GOSP sorted layouts +
+   * per-graph lineage + manifest. */
+  def materializeQuads(quads: DataFrame, snapshotDir: String,
+                       parent: Option[String], partitions: Int = 32): Long =
+    writeSorted(flatten(quads, QuadSlots), snapshotDir, parent, partitions, quads = true)
+
+  /** The one term-layout writer behind [[materialize]] and
+   * [[materializeQuads]]: dedup sweep into the primary layout, the two
+   * secondary orders and the lineage table from its committed files, then
+   * the manifest. */
+  private def writeSorted(flat: DataFrame, snapshotDir: String, parent: Option[String],
+                          partitions: Int, quads: Boolean): Long = {
+    val spark = flat.sparkSession
+    val t0 = System.nanoTime()
+    val layout: String => Layout = if (quads) quadLayout else termLayout
+    val slots = if (quads) QuadSlots else TripleSlots
+    val termKey = slots.flatMap(flatCols)
+    // range keys: the graph (quads), then the order's s/p/o lexical forms
+    def lexKeys(order: String): Seq[Column] =
+      (slots.dropRight(3) ++ order.map(_.toString)).map(x => col(s"${x}_lex"))
+    val keyIdx = termKey.map(flat.schema.fieldIndex)
     flat
-      .repartitionByRange(partitions, col("s_lex"), col("p_lex"), col("o_lex"))
-      .sortWithinPartitions(termCols.map(col): _*)
+      .repartitionByRange(partitions, lexKeys("spo"): _*)
+      .sortWithinPartitions(termKey.map(col): _*)
       .mapPartitions { rows =>
-        // adjacent-duplicate elimination on the 12-col term key (repo/lang
-        // may differ between duplicates; first-in-sort-order wins, same
+        // adjacent-duplicate elimination on the term key (repo/lang may
+        // differ between duplicates; first-in-sort-order wins, same
         // arbitrary-winner semantics as dropDuplicates)
         var prev: Seq[Any] = null
         rows.filter { r =>
@@ -107,53 +173,45 @@ object TripleStore {
           keep
         }
       }(org.apache.spark.sql.Encoders.row(flat.schema))
-      .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/spo")
-    lap("spo_write")
+      .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/${layout("spo").name}")
 
-    val spo = spark.read.parquet(s"$snapshotDir/spo")
-    val total = spo.count()
-    lap("count")
+    val primary = read(spark, snapshotDir, layout("spo"))
+    val total = primary.count()
 
-    // POS/OSP carry the 12 term columns only: the query read path
-    // (Compiler.scanPattern) never touches repo/lang on the secondary
-    // layouts, the struct fallback and lineage read SPO — so the two
-    // derived range shuffles move ~15% fewer bytes per row, which is pure
-    // win on the memory-bandwidth-bound materialize stage (BASELINE.md
-    // per-stage split).
-    def sortedWrite(name: String, keys: Seq[String]): Unit =
-      spo.select(termCols.map(col): _*)
-        .repartitionByRange(partitions, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
+    // the secondary orders carry the term columns only: the query read
+    // path never touches repo/lang on them, so the two derived range
+    // shuffles move ~15% fewer bytes per row (BASELINE.md per-stage split)
+    def sortedWrite(order: String): Unit =
+      primary.select(termKey.map(col): _*)
+        .repartitionByRange(partitions, lexKeys(order): _*)
+        .sortWithinPartitions(lexKeys(order): _*)
         .write.mode(SaveMode.Overwrite)
-        .parquet(s"$snapshotDir/$name")
+        .parquet(s"$snapshotDir/${layout(order).name}")
 
-    // POS/OSP + lineage are independent reads of the committed SPO files —
-    // concurrent jobs overlap their shuffles and commit phases
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    // per-partition lineage + metrics rows (north rule): counts by the
+    // pipeline's partition key (repo, lang), or per graph
+    val (noun, lineageBy) = if (quads) ("quads", Seq("g_lex")) else ("triples", Extras)
+    // secondary orders + lineage are independent reads of the committed
+    // primary files — concurrent jobs overlap their shuffles and commits
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(sortedWrite("pos", Seq("p_lex", "o_lex", "s_lex"))),
-      Future(sortedWrite("osp", Seq("o_lex", "s_lex", "p_lex"))),
+    awaitAll(Seq(
+      Future(sortedWrite("pos")),
+      Future(sortedWrite("osp")),
       Future {
-        // per-partition lineage + metrics rows (north rule): counts by the
-        // pipeline's partition key (repo, lang)
-        spo.groupBy("repo", "lang")
-          .agg(count(lit(1)).as("n_triples"),
+        primary.groupBy(lineageBy.map(col): _*)
+          .agg(count(lit(1)).as(s"n_$noun"),
             countDistinct(col("s_lex")).as("n_subjects"))
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/lineage")
-      })
-    awaitAll(writes)
-    lap("pos_osp_lineage")
+      }))
 
-    val wallMs = (System.nanoTime() - t0) / 1000000
     writeManifest(Paths.get(snapshotDir, "manifest.json"), Map(
       "snapshot" -> Paths.get(snapshotDir).getFileName.toString,
       "parent" -> parent.getOrElse(""),
-      "layouts" -> "spo,pos,osp",
-      "n_triples" -> total.toString,
-      "wall_ms" -> wallMs.toString))
+      "layouts" -> Seq("spo", "pos", "osp").map(layout(_).name).mkString(","),
+      s"n_$noun" -> total.toString,
+      "wall_ms" -> ((System.nanoTime() - t0) / 1000000).toString))
     total
   }
 
@@ -174,17 +232,15 @@ object TripleStore {
   def materializeEncoded(triples: DataFrame, snapshotDir: String,
                          parent: Option[String], partitions: Int = 32): Long = {
     val t0 = System.nanoTime()
-    val flat = flatten(triples)
+    val flat = flatten(triples, TripleSlots, Extras)
 
     def tid(p: String): Column =
       xxhash64(col(s"${p}_kind"), col(s"${p}_lex"), col(s"${p}_dt"), col(s"${p}_lang"))
 
     val facts = flat
       .withColumn("s_id", tid("s")).withColumn("p_id", tid("p")).withColumn("o_id", tid("o"))
-      .select("s_id", "p_id", "o_id", "repo", "lang",
-        "s_kind", "s_lex", "s_dt", "s_lang",
-        "p_kind", "p_lex", "p_dt", "p_lang",
-        "o_kind", "o_lex", "o_dt", "o_lang")
+      .select((idLayout("spo").schema.fieldNames.toSeq ++ TripleSlots.flatMap(flatCols))
+        .map(col): _*)
       .dropDuplicates("s_id", "p_id", "o_id")
       .cache()
     val total = facts.count()
@@ -195,23 +251,23 @@ object TripleStore {
 
     // repo/lang ride only the primary SPO layout (decodeEncoded's default);
     // the id-BGP read path (Compiler.scanBgp) projects the three id columns
-    def idWrite(name: String, keys: Seq[String]): Unit =
-      facts.select(Seq("s_id", "p_id", "o_id") ++
-          (if (name == "spo") Seq("repo", "lang") else Nil) map col: _*)
-        .repartitionByRange(partitions, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/$name")
+    def idWrite(order: String): Unit = {
+      val keys = order.map(x => col(s"${x}_id"))
+      facts.select(idLayout(order).schema.fieldNames.toSeq.map(col): _*)
+        .repartitionByRange(partitions, keys: _*)
+        .sortWithinPartitions(keys: _*)
+        .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/$order")
+    }
 
     // reuse the already-materialized id columns (re-hashing would cost 3
     // extra full-data xxhash passes on the bandwidth-bound stage)
-    def slot(p: String) = facts.select(col(s"${p}_id").as("id"),
-      col(s"${p}_kind").as("kind"),
-      col(s"${p}_lex").as("lex"), col(s"${p}_dt").as("dt"), col(s"${p}_lang").as("lang"))
+    def slot(p: String) = facts.select(col(s"${p}_id").as("id") +:
+      termFields.map(f => col(s"${p}_${f.name}").as(f.name)): _*)
 
     val writes = Seq(
-      Future(idWrite("spo", Seq("s_id", "p_id", "o_id"))),
-      Future(idWrite("pos", Seq("p_id", "o_id", "s_id"))),
-      Future(idWrite("osp", Seq("o_id", "s_id", "p_id"))),
+      Future(idWrite("spo")),
+      Future(idWrite("pos")),
+      Future(idWrite("osp")),
       Future {
         val dict = slot("s").union(slot("p")).union(slot("o"))
           .dropDuplicates("kind", "lex", "dt", "lang")
@@ -231,7 +287,7 @@ object TripleStore {
               s"$nIds ids — the encoded layout cannot represent this " +
               "vocabulary; use the term-struct materialize instead")
         }
-        dict.write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/terms")
+        dict.write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/${TermsLayout.name}")
         dict.unpersist()
       },
       Future {
@@ -257,8 +313,8 @@ object TripleStore {
    * dictionary joins — AQE broadcasts the dictionary when it fits). */
   def decodeEncoded(spark: SparkSession, snapshotDir: String,
                     layout: String = "spo"): DataFrame = {
-    val facts = spark.read.parquet(s"$snapshotDir/$layout")
-    val terms = spark.read.parquet(s"$snapshotDir/terms")
+    val facts = read(spark, snapshotDir, idLayout(layout))
+    val terms = read(spark, snapshotDir, TermsLayout)
     def term(alias: String) = terms.select(col("id").as(s"${alias}_tid"),
       struct(col("kind"), col("lex"), col("dt"), col("lang")).as(alias))
     // repo/lang ride only the primary spo layout; pos/osp decode to the
@@ -347,143 +403,5 @@ object TripleStore {
     """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
       .findAllMatchIn(Files.readString(path))
       .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-
-  /** Pattern-shaped read: pick the layout whose leading sort column is
-   * bound — the FastTripleStore index-selection rule, columnar edition
-   * (mem/pattern/PatternClassifier.java:51).
-   *
-   * Matching is by LEXICAL FORM only — an IRI, a bnode label and a
-   * literal sharing a lexical form all match (handy for IRI-shaped
-   * lookups, wrong for term-exact semantics; use
-   * `Compiler.SnapshotGraph.scanPattern` for full 4-field term matching).
-   * The result always carries the 12 term columns regardless of which
-   * layout served it (repo/lang live only on spo and would make the
-   * schema data-dependent). */
-  def scan(spark: SparkSession, snapshotDir: String,
-           s: Option[String], p: Option[String], o: Option[String]): DataFrame = {
-    val layout = (s, p, o) match {
-      case (Some(_), _, _) => "spo"
-      case (None, Some(_), _) => "pos"
-      case (None, None, Some(_)) => "osp"
-      case _ => "spo"
-    }
-    var df = spark.read.parquet(s"$snapshotDir/$layout")
-      .select(termCols.map(col): _*)
-    s.foreach(v => df = df.where(col("s_lex") === v))
-    p.foreach(v => df = df.where(col("p_lex") === v))
-    o.foreach(v => df = df.where(col("o_lex") === v))
-    df
-  }
-
-  // ------------------------------------------------------------- quads
-  // Named-graph layouts GSPO / GPOS / GOSP — the TDB2 primary quad
-  // indexes (dboe/sys/Names.java:43–47 primaryIndexQuads). Same shuffle
-  // plan as `materialize`: dedup rides the GSPO range shuffle, the other
-  // two layouts derive from the committed GSPO files.
-
-  /** Flatten (s,p,o,g) struct columns to 16 scalar columns. */
-  def flattenQuads(quads: DataFrame): DataFrame =
-    quads.select(
-      col("g.kind").as("g_kind"), col("g.lex").as("g_lex"),
-      col("g.dt").as("g_dt"), col("g.lang").as("g_lang"),
-      col("s.kind").as("s_kind"), col("s.lex").as("s_lex"),
-      col("s.dt").as("s_dt"), col("s.lang").as("s_lang"),
-      col("p.kind").as("p_kind"), col("p.lex").as("p_lex"),
-      col("p.dt").as("p_dt"), col("p.lang").as("p_lang"),
-      col("o.kind").as("o_kind"), col("o.lex").as("o_lex"),
-      col("o.dt").as("o_dt"), col("o.lang").as("o_lang"))
-
-  private val quadTermCols = Seq(
-    "g_kind", "g_lex", "g_dt", "g_lang",
-    "s_kind", "s_lex", "s_dt", "s_lang",
-    "p_kind", "p_lex", "p_dt", "p_lang",
-    "o_kind", "o_lex", "o_dt", "o_lang")
-
-  /** Quad-store materialization: dedup + GSPO/GPOS/GOSP sorted layouts +
-   * per-graph lineage + manifest. */
-  def materializeQuads(quads: DataFrame, snapshotDir: String,
-                       parent: Option[String], partitions: Int = 32): Long = {
-    val spark = quads.sparkSession
-    val t0 = System.nanoTime()
-
-    val flat = flattenQuads(quads)
-    val keyIdx = quadTermCols.map(flat.schema.fieldIndex)
-    flat
-      .repartitionByRange(partitions, col("g_lex"), col("s_lex"), col("p_lex"), col("o_lex"))
-      .sortWithinPartitions(quadTermCols.map(col): _*)
-      .mapPartitions { rows =>
-        var prev: Seq[Any] = null
-        rows.filter { r =>
-          val key = keyIdx.map(r.get)
-          val keep = prev == null || key != prev
-          prev = key
-          keep
-        }
-      }(org.apache.spark.sql.Encoders.row(flat.schema))
-      .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/gspo")
-
-    val gspo = spark.read.parquet(s"$snapshotDir/gspo")
-    val total = gspo.count()
-
-    def sortedWrite(name: String, keys: Seq[String]): Unit =
-      gspo.repartitionByRange(partitions, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$snapshotDir/$name")
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(sortedWrite("gpos", Seq("g_lex", "p_lex", "o_lex", "s_lex"))),
-      Future(sortedWrite("gosp", Seq("g_lex", "o_lex", "s_lex", "p_lex"))),
-      Future {
-        gspo.groupBy("g_lex")
-          .agg(count(lit(1)).as("n_quads"),
-            countDistinct(col("s_lex")).as("n_subjects"))
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$snapshotDir/lineage")
-      })
-    awaitAll(writes)
-
-    writeManifest(Paths.get(snapshotDir, "manifest.json"), Map(
-      "snapshot" -> Paths.get(snapshotDir).getFileName.toString,
-      "parent" -> parent.getOrElse(""),
-      "layouts" -> "gspo,gpos,gosp",
-      "n_quads" -> total.toString,
-      "wall_ms" -> ((System.nanoTime() - t0) / 1000000).toString))
-    total
-  }
-
-  /** Quad-pattern read: graph-bound scans prune on the leading g_lex of
-   * every layout; within a graph the s/p/o shape picks the index exactly
-   * like `scan`. */
-  /** Lexical-form matching, like [[scan]] — term-exact quad patterns go
-   * through `Compiler.QuadSnapshotGraph.scanQuadPattern`. All quad
-   * layouts carry the same 16 columns, so no schema trim is needed. */
-  def scanQuads(spark: SparkSession, snapshotDir: String,
-                g: Option[String], s: Option[String],
-                p: Option[String], o: Option[String]): DataFrame = {
-    val layout = (s, p, o) match {
-      case (Some(_), _, _) => "gspo"
-      case (None, Some(_), _) => "gpos"
-      case (None, None, Some(_)) => "gosp"
-      case _ => "gspo"
-    }
-    var df = spark.read.parquet(s"$snapshotDir/$layout")
-    g.foreach(v => df = df.where(col("g_lex") === v))
-    s.foreach(v => df = df.where(col("s_lex") === v))
-    p.foreach(v => df = df.where(col("p_lex") === v))
-    o.foreach(v => df = df.where(col("o_lex") === v))
-    df
-  }
-
-  /** Rebuild (s,p,o,g) struct columns from a flattened quad layout. */
-  def unflattenQuads(df: DataFrame): DataFrame = {
-    def term(p: String) = struct(
-      col(s"${p}_kind").as("kind"), col(s"${p}_lex").as("lex"),
-      col(s"${p}_dt").as("dt"), col(s"${p}_lang").as("lang")).as(p)
-    df.select(term("s"), term("p"), term("o"), term("g"))
   }
 }

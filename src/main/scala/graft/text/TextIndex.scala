@@ -44,11 +44,14 @@ object TextIndex {
   /** Token postings over the graph's literal objects: one row per
    * (s, p, o-literal, distinct analyzed token). `predicates` restricts to
    * the configured indexed properties (jena-text entity-map analog);
-   * empty = index every literal. */
+   * empty = index every literal. A literal with no token (punctuation
+   * only, empty) keeps one row with a NULL token, so the postings' (s, o)
+   * set is every scoped literal: the one literal universe of both search
+   * faces. */
   def postings(graph: DataFrame, predicates: Seq[String] = Nil): DataFrame =
     scopedLiterals(graph, predicates)
       .select(col("s"), col("p"), col("o"),
-        explode(expr(analyzeTokensExpr("o.lex"))).as("token"))
+        explode_outer(expr(analyzeTokensExpr("o.lex"))).as("token"))
 
   private def scopedLiterals(graph: DataFrame, predicates: Seq[String]): DataFrame = {
     val base = graph.filter(TermCols.kind(col("o")) === Term.KIND_LIT)
@@ -157,27 +160,31 @@ object TextIndex {
   def search(graph: DataFrame, pred: Option[String], q: String,
              limit: Option[Int]): DataFrame = {
     val preds = pred.toSeq
+    val post = postings(graph, preds)
     searchCore(graph.sparkSession, parseQuery(q),
-      tokens => postings(graph, preds).filter(col("token").isin(tokens: _*)),
-      () => postings(graph, preds).select(col("token")).distinct(),
-      () => scopedLiterals(graph, preds).select(col("s"), col("o")).distinct(),
-      limit)
+      tokens => post.filter(col("token").isin(tokens: _*)), post,
+      Some(scopedLiterals(graph, preds).select(col("s"), col("o")).distinct()), limit)
   }
 
   /** Search over pluggable postings sources — shared by the in-memory
    * face ([[search]]) and the materialized-layout face
    * ([[searchIndexed]]). `postFor(tokens)`: (s, o, token) rows whose
-   * token ∈ tokens (the store face bucket-prunes here); `vocab()`: the
-   * distinct token dictionary (fuzzy expansion — Lucene's term-dict
-   * automaton walk analog, full-dictionary by nature); `lits()`:
-   * distinct (s, o) scoped literals (phrase widening). */
+   * token ∈ tokens (the store face bucket-prunes here); `post`: every
+   * postings row, whose tokens are the dictionary (fuzzy expansion —
+   * Lucene's term-dict automaton walk analog, full-dictionary by nature)
+   * and whose (s, o) pairs are the scoped literals a phrase widens to,
+   * unless `phraseCands` gives them without the analyzer (the in-memory
+   * face: the same scoped literals) or prunes them (the n-gram store
+   * face). */
   private def searchCore(spark: org.apache.spark.sql.SparkSession,
                          pq: ParsedQuery,
                          postFor: Seq[String] => DataFrame,
-                         vocab: () => DataFrame,
-                         lits: () => DataFrame,
+                         post: DataFrame,
+                         phraseCands: => Option[DataFrame],
                          limit: Option[Int]): DataFrame = {
     import spark.implicits._
+    def vocab() = post.select(col("token")).where(col("token").isNotNull).distinct()
+    def lits() = phraseCands.getOrElse(post.select(col("s"), col("o")).distinct())
     // SLOT TABLE: each positive query term is a slot; a fuzzy term's slot
     // is filled by every vocabulary token within its edit distance —
     // expansions COLLECT to the driver (bounded: an edit-≤2 neighborhood
@@ -385,7 +392,7 @@ object TextIndex {
       java.nio.file.Paths.get(dir, "manifest.json"))
     val buckets = manifest.getOrElse("buckets", DefaultBuckets.toString).toInt
     val hasNgrams = manifest.get("ngrams").contains("true")
-    def post: DataFrame = spark.read.parquet(s"$dir/postings")
+    val post = spark.read.parquet(s"$dir/postings")
     // bucket ids computed by the SAME Spark expression that wrote the
     // layout, evaluated on a local frame of the query values (no
     // driver-side hash reimplementation to drift) → partition pruning;
@@ -419,9 +426,6 @@ object TextIndex {
         .filter(col("bucket").isin(bucketsOf(tokens): _*))
         .filter(col("token").isin(tokens: _*))
         .select(col("s"), col("p"), col("o"), col("token")),
-      () => post.select(col("token")).distinct(),
-      () => phraseCandidates.getOrElse(
-        post.select(col("s"), col("o")).distinct()),
-      limit)
+      post, phraseCandidates, limit)
   }
 }

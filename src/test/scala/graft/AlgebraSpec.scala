@@ -446,6 +446,34 @@ class AlgebraSpec extends AnyFunSuite {
     assert(short == Set(EX + "d2", EX + "d3", EX + "d9"))
   }
 
+  test("text search faces agree on literals that tokenize to nothing") {
+    import graft.text.TextIndex
+    val g = spark.createDataset(Seq(
+      Triple(i("d1"), i("title"), Term.string("!!!")),
+      Triple(i("d2"), i("title"), Term.string("...")),
+      Triple(i("d3"), i("title"), Term.string("wow!!")),
+      Triple(i("d4"), i("title"), Term.string("")))).toDF()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getStruct(0).getString(1),
+        r.getStruct(1).getString(1), r.getLong(2))).toSet
+    val plain = java.nio.file.Files.createTempDirectory("graft_textidx_punct")
+      .toString + "/idx"
+    TextIndex.materializePostings(g, plain, buckets = 4, partitions = 1)
+    val grams = java.nio.file.Files.createTempDirectory("graft_textidx_punct_ng")
+      .toString + "/idx"
+    TextIndex.materializePostings(g, grams, buckets = 4, partitions = 1, ngrams = true)
+    for (q <- Seq("\"!!\"", "\"..\"", "\"!!!\"", "wow \"..\"")) {
+      val mem = rows(TextIndex.search(g, None, q, None))
+      assert(mem.nonEmpty, s"degenerate case <$q>")
+      assert(rows(TextIndex.searchIndexed(spark, plain, q, None)) == mem,
+        s"indexed face diverged on <$q>")
+      assert(rows(TextIndex.searchIndexed(spark, grams, q, None)) == mem,
+        s"n-gram face diverged on <$q>")
+    }
+    assert(rows(TextIndex.search(g, None, "\"!!\"", None)).map(_._1) ==
+      Set(EX + "d1", EX + "d3"))
+  }
+
   test("VALUES table joined to a BGP") {
     val vals = Table(Seq("s"), Seq(Map("s" -> i("alice")), Map("s" -> i("bob"))))
     val op = Join(vals, Bgp(Seq(tp(v("s"), c(i("name")), v("n")))))

@@ -189,7 +189,7 @@ class DifferentialSpec extends AnyFunSuite {
         // join + per-tag windows). Slice/Distinct observe the left row.
         def evalLat(rr: Op, m1: Sol): Seq[Sol] = rr match {
           case Slice(off, lim, Order(keys, rb)) =>
-            val merged = eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _)
+            val merged = evalLat(rb, m1)
             // honor per-key direction (the generator emits ASC-only, but
             // the oracle must not silently mis-rank if that changes)
             val ord = new Ordering[Sol] {
@@ -204,12 +204,11 @@ class DifferentialSpec extends AnyFunSuite {
             // a per-left-row cut of UNORDERED rows is implementation-
             // arbitrary — the oracle refuses rather than guessing
             sys.error("lateral oracle: Slice without a full-key Order")
-          case Distinct(rb) =>
-            eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _).distinct
+          case Distinct(rb) => evalLat(rb, m1).distinct
           case Group(keys, aggs, rb) if keys.nonEmpty =>
             // per-left-row KEYED aggregation (Compiler.lat Group case:
             // group by left cols + keys over the compatible merged rows)
-            val ms = eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _)
+            val ms = evalLat(rb, m1)
             ms.groupBy(m => keys.flatMap(k => m.get(k).map(k -> _)).toMap)
               .toSeq.map { case (key, members) =>
                 m1 ++ key ++ aggs.flatMap { case (n, a) =>
@@ -217,6 +216,17 @@ class DifferentialSpec extends AnyFunSuite {
               }
           case Group(_, _, _) =>
             sys.error("lateral oracle: keyless per-left-row Group not mirrored")
+          case Join(a, b) =>
+            // substitution distributes over the join: b's operators see
+            // the left row, not a's
+            val rs = evalLat(b, m1)
+            evalLat(a, m1).flatMap(m => rs.filter(compatible(m, _)).map(m ++ _))
+          case Minus(a, b) =>
+            // the left row is substituted into both operands: its
+            // variables are bound on both sides, so they are not shared
+            val rs = evalLat(b, m1)
+            evalLat(a, m1).filter(m => !rs.exists(r => compatible(m, r) &&
+              (m.keySet.intersect(r.keySet) -- m1.keySet).nonEmpty))
           case rb =>
             eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _)
         }
@@ -889,27 +899,33 @@ class DifferentialSpec extends AnyFunSuite {
       fs.take(6).mkString("\n"))
   }
 
-  /** Store-path differential: the same random plans evaluated against a
-   * MATERIALIZED TripleStore snapshot (SnapshotGraph — layout-aware
-   * pattern compilation picking SPO/POS/OSP with pushed parquet filters)
-   * must agree with the naive evaluator; exercises all 8 pattern shapes
-   * against the custom scan-selection logic. One fixed graph, 30 plans. */
-  test("differential: SnapshotGraph store read path on 30 random plans") {
-    import org.apache.spark.sql.functions.lit
+  /** Store-path differential: 30 random plans over one fixed dataset,
+   * compiled against a MATERIALIZED store face built from it, must agree
+   * with the naive evaluator. `face` gets the dataset as a quad frame
+   * (default-graph rows + named quads) plus a fresh snapshot dir. Exercises
+   * every pattern shape against the layout-choosing store scan. */
+  private def storeDifferential(seed: Int, quads: Boolean)(
+      face: (DataFrame, String) => Compiler.GraphSource): Unit = {
+    import graft.model.Quad
     val failures = Seq.newBuilder[String]
-    val g = genGraph(new Random(0x570E))
-    val gdf = spark.createDataset(g)(
-      org.apache.spark.sql.Encoders.product[Triple]).toDF()
-    val snap = java.nio.file.Files.createTempDirectory("graft_diff_snap").toString
-    graft.store.TripleStore.materialize(
-      gdf.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
-      snap, parent = None, partitions = 2)
-    val sg = Compiler.SnapshotGraph(spark, snap)
-    (0 until 30).foreach { i =>
-      val rnd = new Random(0x570E + 1 + i)
+    val rnd0 = new Random(seed)
+    val defG = genGraph(rnd0)
+    val named =
+      if (!quads) Nil
+      else (0 until 15 + rnd0.nextInt(10)).map { _ =>
+        Quad(iri("s" + rnd0.nextInt(5)), iri("p" + rnd0.nextInt(3)),
+          genTerm(rnd0), genGraphName(rnd0))
+      }.distinct
+    val qdf = spark.createDataset(
+      defG.map(t => Quad(t.s, t.p, t.o, Term.defaultGraph)) ++ named)(
+      org.apache.spark.sql.Encoders.product[Quad]).toDF()
+    val sg = face(qdf, java.nio.file.Files.createTempDirectory("graft_diff_store").toString)
+    quadMode = quads
+    try (0 until 30).foreach { i =>
+      val rnd = new Random(seed + 1 + i)
       val x = new DExprs
       val (op, _) = genOp(rnd, x, depth = 2 + i % 2)
-      val expected = bag(RefEval.eval(op, GData(g, Nil), x))
+      val expected = bag(RefEval.eval(op, GData(defG, named), x))
       try {
         val actual = bag(collectSols(Compiler.compile(op, sg)))
         if (actual != expected) {
@@ -922,48 +938,45 @@ class DifferentialSpec extends AnyFunSuite {
         case e: Exception =>
           failures += s"[$i] COMPILE FAILED: ${e.getMessage}\n  ${showOp(op, x)}"
       }
-    }
+    } finally quadMode = false
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} store-differential failures:\n" +
       fs.take(6).mkString("\n"))
   }
 
-  /** Id-encoded store differential: the same plan family against a
-   * dictionary-encoded snapshot (EncodedSnapshotGraph — narrow id
-   * equi-joins with decode at projection edges; the TDB2 NodeTable
-   * analog) must match the naive evaluator. */
-  test("differential: EncodedSnapshotGraph id store on 30 random plans") {
+  /** The triple faces materialize the default graph with the pipeline's
+   * repo/lang columns. */
+  private def tripleFrame(qdf: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val failures = Seq.newBuilder[String]
-    val g = genGraph(new Random(0xE6C0))
-    val gdf = spark.createDataset(g)(
-      org.apache.spark.sql.Encoders.product[Triple]).toDF()
-    val snap = java.nio.file.Files.createTempDirectory("graft_diff_enc").toString
-    graft.store.TripleStore.materializeEncoded(
-      gdf.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
-      snap, parent = None, partitions = 2)
-    val sg = Compiler.EncodedSnapshotGraph(spark, snap)
-    (0 until 30).foreach { i =>
-      val rnd = new Random(0xE6C0 + 1 + i)
-      val x = new DExprs
-      val (op, _) = genOp(rnd, x, depth = 2 + i % 2)
-      val expected = bag(RefEval.eval(op, GData(g, Nil), x))
-      try {
-        val actual = bag(collectSols(Compiler.compile(op, sg)))
-        if (actual != expected) {
-          val missing = expected.toSeq.filterNot(kv => actual.get(kv._1).contains(kv._2))
-          val extra = actual.toSeq.filterNot(kv => expected.get(kv._1).contains(kv._2))
-          failures += s"[$i] MISMATCH ${showOp(op, x)}\n  expected-but-not-actual: " +
-            s"${missing.take(4)}\n  actual-but-not-expected: ${extra.take(4)}"
-        }
-      } catch {
-        case e: Exception =>
-          failures += s"[$i] COMPILE FAILED: ${e.getMessage}\n  ${showOp(op, x)}"
-      }
+    qdf.select("s", "p", "o").withColumn("repo", lit("r0")).withColumn("lang", lit("x"))
+  }
+
+  /** SnapshotGraph: term-struct SPO/POS/OSP layouts with pushed flat-column
+   * filters. */
+  test("differential: SnapshotGraph store read path on 30 random plans") {
+    storeDifferential(0x570E, quads = false) { (qdf, dir) =>
+      graft.store.TripleStore.materialize(tripleFrame(qdf), dir, parent = None, partitions = 2)
+      Compiler.SnapshotGraph(spark, dir)
     }
-    val fs = failures.result()
-    assert(fs.isEmpty, s"${fs.size} encoded-store-differential failures:\n" +
-      fs.take(6).mkString("\n"))
+  }
+
+  /** EncodedSnapshotGraph: narrow id equi-joins with decode at projection
+   * edges (the TDB2 NodeTable analog). */
+  test("differential: EncodedSnapshotGraph id store on 30 random plans") {
+    storeDifferential(0xE6C0, quads = false) { (qdf, dir) =>
+      graft.store.TripleStore.materializeEncoded(tripleFrame(qdf), dir,
+        parent = None, partitions = 2)
+      Compiler.EncodedSnapshotGraph(spark, dir)
+    }
+  }
+
+  /** QuadSnapshotGraph: the dataset-semantics plans (QuadBgp, GRAPH,
+   * GRAPH ?var, dataset names) over GSPO/GPOS/GOSP layouts. */
+  test("differential: QuadSnapshotGraph quad store on 30 random dataset plans") {
+    storeDifferential(0x9A5E, quads = true) { (qdf, dir) =>
+      graft.store.TripleStore.materializeQuads(qdf, dir, parent = None, partitions = 2)
+      Compiler.QuadSnapshotGraph(spark, dir)
+    }
   }
 
   /** Dataset (quad) differential: random plans over a dataset with a
@@ -1159,6 +1172,44 @@ class DifferentialSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.graphVarEnumMax")
   }
 
+  /** LATERAL substitutes the left row into both MINUS operands, and only
+   * the left row: a variable the row leaves unbound, or one a join
+   * partner inside the RHS binds, stays a MINUS variable. Each case
+   * gives 1 row. */
+  test("differential: LATERAL MINUS whose right side mentions a left-side variable") {
+    def t(s: String, p: String, o: String) = Triple(iri(s), iri(p), iri(o))
+    def tp(s: String, p: String, o: String) =
+      Bgp(Seq(TriplePattern(TVar(s), TConst(iri(p)), TVar(o))))
+    def check(g: Seq[Triple], op: Op): Unit = {
+      val x = new DExprs
+      val expected = bag(RefEval.eval(op, GData(g, Nil), x))
+      assert(expected.values.sum == 1, showOp(op, x))
+      val gdf = spark.createDataset(g)(org.apache.spark.sql.Encoders.product[Triple]).toDF()
+      assert(bag(collectSols(Compiler.compile(op, gdf))) == expected, showOp(op, x))
+    }
+    // after ?x := a, { a :r ?w2 } shares no variable with { ?z :q ?w }:
+    // nothing is removed (an anti-join on ?x removes the row)
+    check(Seq(t("a", "p", "b"), t("c", "q", "d"), t("a", "r", "e")),
+      Lateral(tp("x", "p", "y"), Minus(tp("z", "q", "w"), tp("x", "r", "w2"))))
+    // s1 has no :k, so ?x stays shared and MINUS removes both of s1's rows;
+    // for s2, ?x := x2 is substituted and nothing is removed
+    check(Seq(t("s1", "p", "o1"), t("s2", "p", "o2"), t("s2", "k", "x2"),
+        t("x1", "r", "w1"), t("x1", "t", "w3"), t("x2", "r", "w4"), t("x2", "t", "w5")),
+      Lateral(LeftJoin(tp("s", "p", "o"), tp("s", "k", "x"), None),
+        Minus(tp("x", "r", "w"), tp("x", "t", "w2"))))
+    // ?v, bound by the join partner, is shared by both MINUS operands:
+    // (v1, a1) goes, (v2, a2) stays
+    check(Seq(t("s1", "p", "o1"), t("s1", "q", "v1"), t("s1", "q", "v2"),
+        t("v1", "r", "a1"), t("v2", "r", "a2"), t("v1", "t", "b1")),
+      Lateral(tp("s", "p", "o"),
+        Distinct(Join(tp("s", "q", "v"), Minus(tp("v", "r", "a"), tp("v", "t", "b"))))))
+    // after ?s := s1, { s1 :r ?a } and { s1 :t ?v } share no variable,
+    // although the join partner binds ?v: nothing is removed
+    check(Seq(t("s1", "p", "o1"), t("s1", "q", "v1"), t("s1", "r", "a1"), t("s1", "t", "v1")),
+      Lateral(tp("s", "p", "o"),
+        Join(tp("s", "q", "v"), Minus(tp("s", "r", "a"), tp("s", "t", "v")))))
+  }
+
   /** A closure path joined to a BGP inside GRAPH ?var walks SEEDED from
    * the BGP's values, each seed within its own graph: g1's walk from s1
    * must stop at s2, although g2 continues s2 → s3. The 30-cycle in g2
@@ -1238,7 +1289,8 @@ class DifferentialSpec extends AnyFunSuite {
   /** LATERAL differential: per-left-row Slice over a fully-keyed Order
    * (the window machinery: every rbody var is an ASC sort key, so rows
    * tying on all keys within one left row are identical and the cut is
-   * deterministic), per-left-row Distinct, and the plain correlated join.
+   * deterministic), per-left-row Distinct, the plain correlated join, and
+   * MINUS right sides that mention a left variable.
    * RefEval's Lateral case mirrors the compiler's compatible-join
    * semantics (the documented set-at-a-time twin of substitution). */
   test("differential: LATERAL with per-left-row LIMIT/DISTINCT on 30 random plans") {
@@ -1247,7 +1299,7 @@ class DifferentialSpec extends AnyFunSuite {
       val rnd = new Random(0x1A7E + i)
       val x = new DExprs
       val g = genGraph(rnd)
-      val (l, lv) = genOp(rnd, x, depth = 1)
+      val (l0, lv0) = genOp(rnd, x, depth = 1)
       val (rb, rvs) = genOp(rnd, x, depth = 1)
       // the oracle mirrors per-left-row Slice/Group only at the RHS TOP;
       // nested inside rb they would not commute with the compatibility
@@ -1264,28 +1316,48 @@ class DifferentialSpec extends AnyFunSuite {
       }
       if (hasGroupOrSlice(rb)) ()
       else {
-      val r = rnd.nextInt(4) match {
+      val r0 = rnd.nextInt(4) match {
         case 0 if rvs.nonEmpty =>
           Slice(rnd.nextInt(2), 1 + rnd.nextInt(2),
             Order(rvs.sorted.map(v => SortKey(v, ascending = true)), rb))
         case 1 => Distinct(rb)
-        case 2 if rvs.size >= 2 && rvs.intersect(lv).size <= 1 =>
+        case 2 if rvs.size >= 2 && rvs.intersect(lv0).size <= 1 =>
           // per-left-row keyed aggregation at the RHS top. Correlation is
           // restricted to the KEY var: in SPARQL text a lateral subquery
           // can only correlate through PROJECTED vars (non-projected
           // inner vars are renamed fresh), so a body var that is both
           // left-bound and aggregated has no text counterpart and its
           // algebra semantics is unspecified — not generated.
-          val key = rvs.intersect(lv).headOption
+          val key = rvs.intersect(lv0).headOption
             .getOrElse(rvs(rnd.nextInt(rvs.size)))
           val cv = rvs(rnd.nextInt(rvs.size))
           val n = (Iterator.single("n") ++ Iterator.from(2).map("n" + _))
-            .find(c => !rvs.contains(c) && !lv.contains(c)).get
+            .find(c => !rvs.contains(c) && !lv0.contains(c)).get
           val a = x.agg(s"COUNT(?$cv)",
             RowExpr(rr => TC.intTerm(org.apache.spark.sql.functions.count(rr(cv)))),
             ms => Some(int(ms.count(_.contains(cv)))))
           Group(Seq(key), Seq(n -> a), rb)
         case _ => rb
+      }
+      // on top, one plan in six gets a MINUS right side that mentions a
+      // left variable (one rb may bind too), and one in six is instead the
+      // dense `{?u :p ?w OPTIONAL {?w :q ?k}} LATERAL {?k :r ?z MINUS
+      // {?k :s ?o}}`, whose ?k the left row may leave unbound
+      def pat(u: String, v: String) = {
+        val (s, o) = if (rnd.nextBoolean()) (u, v) else (v, u)
+        Bgp(Seq(TriplePattern(TVar(s), TConst(iri("p" + rnd.nextInt(3))), TVar(o))))
+      }
+      val (l, lv, r) = rnd.nextInt(6) match {
+        case 0 if lv0.nonEmpty =>
+          val o = if (rvs.nonEmpty && rnd.nextBoolean()) rvs(rnd.nextInt(rvs.size))
+                  else "m" + rnd.nextInt(2)
+          (l0, lv0, Minus(r0, pat(lv0(rnd.nextInt(lv0.size)), o)))
+        case 1 =>
+          val vs = rnd.shuffle(varPool)
+          val (u, w, k, z) = (vs(0), vs(1), vs(2), vs(3))
+          (LeftJoin(pat(u, w), pat(w, k), None), Seq(u, w, k),
+            Minus(pat(k, z), pat(k, if (rnd.nextBoolean()) z else "m0")))
+        case _ => (l0, lv0, r0)
       }
       // a BIND in the RHS onto a var the left binds is a SPARQL scope
       // error (the compiler rejects it) — regenerate-as-skip those plans

@@ -30,7 +30,8 @@ class PlanSpec extends AnyFunSuite {
       Term.lit(k.toString, Term.XSD_INTEGER)))
     graft.store.TripleStore.flatten(
       spark.createDataset(ts).toDF()
-        .withColumn("repo", lit("r0")).withColumn("lang", lit("x")))
+        .withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
+      graft.store.TripleStore.TripleSlots, Seq("repo", "lang"))
       .write.mode("overwrite").parquet(dir)
     dir
   }
@@ -137,6 +138,76 @@ class PlanSpec extends AnyFunSuite {
     // checkpoints, so inspect the base pair scan)
     val p3 = plan(PathEval.eval(PathEval.Terms(sg), PLink(EX + "p3"), None))
     assert(p3.contains("/pos"), "path link base scan must use POS:\n" + p3)
+  }
+
+  /** Spark jobs launched while `body` runs, counted by a listener between
+   * two marker jobs: listener events arrive in order, so once the closing
+   * marker's start is seen every job of `body` has been counted, and an
+   * earlier test's late events fall before the opening marker. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def awaitMarker(name: String): Int = {
+      var n = 0
+      var d = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != name) {
+        assert(d != null, s"marker job $name never reached the listener")
+        n += 1
+        d = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobsDuring-open")
+      awaitMarker("jobsDuring-open")
+      body
+      marker("jobsDuring-close")
+      awaitMarker("jobsDuring-close")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("compiling against a store snapshot launches no schema-inference job") {
+    import graft.model.Quad
+    val ts = (1 to 200).map(k => Triple(
+      Term.iri(EX + "s" + (k % 50)), Term.iri(EX + "p" + (k % 3)),
+      Term.iri(EX + "s" + ((k + 1) % 50)))).distinct
+    val frame = spark.createDataset(ts).toDF()
+      .withColumn("repo", lit("r0")).withColumn("lang", lit("x"))
+    val bgp = Bgp(Seq(
+      TriplePattern(TVar("x"), TConst(Term.iri(EX + "p1")), TVar("y")),
+      TriplePattern(TVar("y"), TVar("q"), TVar("z"))))
+    val snap = Files.createTempDirectory("plan_jobs_snap").toString
+    graft.store.TripleStore.materialize(frame, snap, None, partitions = 2)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { df = Compiler.compile(bgp, Compiler.SnapshotGraph(spark, snap)) } == 0,
+      "a 2-pattern BGP on SnapshotGraph must compile without a Spark job")
+    assert(df.count() == Compiler.compile(bgp, spark.createDataset(ts).toDF()).count())
+
+    val qdir = Files.createTempDirectory("plan_jobs_qsnap").toString
+    graft.store.TripleStore.materializeQuads(
+      spark.createDataset(ts.map(t => Quad(t.s, t.p, t.o, Term.iri(EX + "g")))).toDF(),
+      qdir, None, partitions = 2)
+    assert(jobsDuring {
+      Compiler.compile(QuadBgp(TVar("g"), bgp.patterns), Compiler.QuadSnapshotGraph(spark, qdir))
+    } == 0, "a QuadBgp on QuadSnapshotGraph must compile without a Spark job")
+
+    val edir = Files.createTempDirectory("plan_jobs_enc").toString + "/snap"
+    graft.store.TripleStore.materializeEncoded(frame, edir, None, partitions = 2)
+    assert(jobsDuring {
+      Compiler.compile(bgp, Compiler.EncodedSnapshotGraph(spark, edir))
+    } == 1, "on EncodedSnapshotGraph the only compile job is the idsOf dictionary probe")
   }
 
   test("quad-snapshot GRAPH patterns pick the quad layout with graph pruning") {

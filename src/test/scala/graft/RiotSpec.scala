@@ -295,15 +295,15 @@ class RiotSpec extends AnyFunSuite {
     val n = graft.store.TripleStore.materializeQuads(df, dir, None, partitions = 4)
     assert(n == 200)
     assert(graft.store.TripleStore.isCommitted(dir))
-    val g1 = graft.store.TripleStore.scanQuads(spark, dir,
-      g = Some(EX + "g1"), s = None, p = None, o = None)
+    import graft.algebra._
+    val qsg = Compiler.QuadSnapshotGraph(spark, dir)
+    def any(p: TermPat) = Seq(TriplePattern(TVar("s"), p, TVar("o")))
+    val g1 = Compiler.compile(QuadBgp(TConst(Term.iri(EX + "g1")), any(TVar("p"))), qsg)
     assert(g1.count() == 50)
-    val byP = graft.store.TripleStore.scanQuads(spark, dir,
-      g = None, s = None, p = Some(EX + "p0"), o = None)
+    val byP = Compiler.compile(QuadBgp(TVar("g"), any(TConst(Term.iri(EX + "p0")))), qsg)
     assert(byP.count() == 66 || byP.count() == 67)
     // round-trip through the struct view matches the input set
-    val back = graft.store.TripleStore.unflattenQuads(
-      spark.read.parquet(s"$dir/gspo")).as[Quad].collect().toSet
+    val back = qsg.df.as[Quad].collect().toSet
     assert(back == quads.toSet)
   }
 
