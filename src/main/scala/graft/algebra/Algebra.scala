@@ -175,11 +175,9 @@ final case class ExistsFlag(v: String, r: Op, input: Op) extends Op
  * vars' boundness — a Project complement. */
 final case class DropVars(vars: Seq[String], input: Op) extends Op
 /** LATERAL — per-left-row evaluation of the RHS with the left's bindings
- * in scope (OpLateral, OpExecutor.java:240). Our solution sets are
- * evaluated set-at-a-time, so the correlated re-execution compiles to the
- * same compatible-binding join as Join — the rewrite SURVEY.md §2.3
- * prescribes ("rewrite RHS with left columns as correlated equi-join");
- * kept as its own node for algebra fidelity and scope documentation. */
+ * substituted in (OpLateral, OpExecutor.java:240). Set-at-a-time, the RHS
+ * compiles once for all distinct left bindings, keyed by the binding
+ * (Compiler.LeftBindings), and the left rows join back on that key. */
 final case class Lateral(l: Op, r: Op) extends Op
 /** UNFOLD — explode an ArrayType column (a materialized CDT list, e.g.
  * from SparqlAggregates.foldList) into one row per element

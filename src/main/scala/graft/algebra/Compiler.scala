@@ -218,26 +218,36 @@ object Compiler {
         col("s").isNotNull)
     else df
 
-  /** Compile `op` in the scope `g`. ONE compiler serves both scopes the
-   * reference's OpExecutor knows (OpExecutor.java:139–157 evaluates
-   * GRAPH ?g with the same executor over a re-scoped active graph):
-   *  - an active graph (any other [[GraphSource]]);
+  /** Compile `op` in the scope `g`. ONE compiler serves an active graph
+   * (any plain [[GraphSource]]) and the two [[KeyedScope]]s, which the
+   * reference evaluates with the same executor per graph or per row
+   * (OpExecutor.java:139–157 re-scopes the active graph for GRAPH ?g;
+   * QueryIterLateral substitutes each left row into a LATERAL's right
+   * side):
    *  - [[NamedGraphs]], every named graph at once — the body of a
-   *    single-plan GRAPH ?var. Every result then carries the hidden
-   *    certain column [[AGV]], so the shared-var join machinery scopes
-   *    joins, OPTIONAL, EXISTS and LATERAL to one graph by itself.
-   * Only the cases whose per-graph semantics differ branch on the scope:
-   * a BGP scans the named quads with the graph slot bound to [[AGV]]; a
-   * path walks in [[PathEval.PerGraph]]; VALUES repeats per graph and
-   * Null carries the column; Project keeps [[AGV]] and DropVars never
-   * drops it; Group keys on it and pads keyless aggregates for empty
-   * graphs; Slice ranks within each graph; MINUS keys on it without
-   * counting it as a shared variable. Every other case runs unchanged in
-   * both scopes. */
+   *    single-plan GRAPH ?var, keyed by the graph;
+   *  - [[LeftBindings]], every distinct left binding of a LATERAL at once
+   *    — its right side, keyed by the binding.
+   * Every result in a keyed scope carries the scope's hidden certain key
+   * columns ([[scopeKeys]]; nested scopes add theirs), so the shared-var
+   * join machinery scopes joins, OPTIONAL, EXISTS and Union to one key by
+   * itself, each operand compiled on its own. The key branches are
+   * shared: Project keeps the keys and DropVars never drops them; Group
+   * keys on them and pads keyless aggregates over the scope's names;
+   * Slice ranks within each key; MINUS keys on them without counting them
+   * as shared variables. Per graph, a BGP scans the named quads with the
+   * graph slot bound to [[AGV]], a path walks in [[PathEval.PerGraph]],
+   * and VALUES and Null cross the graph names. Per left binding, a leaf
+   * (and any node the scope has no branch for) compiles in the enclosing
+   * scope and is then correlated with the left bindings
+   * ([[correlate]]); expressions read a substituted variable the subtree
+   * does not bind from the binding ([[resolve]]). */
   private[algebra] def comp(op: Op, g: GraphSource): Compiled = op match {
-    case _ if g.isInstanceOf[NamedGraphs] && !graphLocal(op) =>
-      throw new IllegalStateException(
+    case _ if !inScope(op, g) => g match {
+      case s: LeftBindings => correlate(s, comp(op, s.outer))
+      case _ => throw new IllegalStateException(
         s"$op is not graph-local — graphVarSinglePlan admits no such GRAPH ?var body")
+    }
 
     case Bgp(patterns) =>
       require(patterns.nonEmpty, "empty BGP")
@@ -278,11 +288,12 @@ object Compiler {
             .reduceLeft(join(_, _, "inner"))
       }
 
-    case pp: PathPattern => compPath(pathSpace(g), pp, None)
+    case pp: PathPattern => pathIn(g, pp, None)
 
     case Project(vars, in) =>
-      val c = comp(in, g)
-      val keep = vars ++ graphKey(g)
+      // a sub-SELECT substitutes only the variables it projects
+      val c = comp(in, narrow(g, vars.toSet))
+      val keep = vars ++ scopeKeys(g)
       // projecting a var the pattern never binds is legal SPARQL — it is
       // simply unbound in every row (ARQ ValueTesting, pfunc ASK shapes)
       Compiled(c.df.select(keep.map(v =>
@@ -293,12 +304,12 @@ object Compiler {
     case Filter(cond, in) =>
       val c = comp(in, g)
       // SQL NULL-filter drops the row = SPARQL eval-error semantics
-      Compiled(c.df.filter(cond(v => resolve(c, v))), c.certain, c.maybe)
+      Compiled(c.df.filter(cond(v => resolve(c, v, g))), c.certain, c.maybe)
 
     case Extend(name, expr, in) =>
       val c = comp(in, g)
-      require(!c.vars.contains(name), s"Extend onto bound var $name")
-      Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
+      require(!c.vars.contains(name) && leftValue(g, name).isEmpty, s"Extend onto bound var $name")
+      Compiled(c.df.withColumn(name, expr(v => resolve(c, v, g))),
         c.certain, c.maybe + name)
 
     case Table(vars, rows) =>
@@ -325,10 +336,10 @@ object Compiler {
       (l, r) match {
         case (_, pp: PathPattern) if seedablePath(pp) =>
           val cl = comp(l, g)
-          join(cl, compPath(pathSpace(g), pp, Some(cl)), "inner")
+          join(cl, pathIn(g, pp, Some(cl)), "inner")
         case (pp: PathPattern, _) if seedablePath(pp) =>
           val cr = comp(r, g)
-          join(compPath(pathSpace(g), pp, Some(cr)), cr, "inner")
+          join(pathIn(g, pp, Some(cr)), cr, "inner")
         case _ => join(comp(l, g), comp(r, g), "inner")
       }
 
@@ -336,25 +347,25 @@ object Compiler {
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          leftJoin(cl, compPath(pathSpace(g), pp, Some(cl)), cond)
-        case _ => leftJoin(comp(l, g), comp(r, g), cond)
+          leftJoin(cl, pathIn(g, pp, Some(cl)), cond, leftValue(g, _))
+        case _ => leftJoin(comp(l, g), comp(r, g), cond, leftValue(g, _))
       }
 
     case SemiJoin(l, r) =>
       r match {
         case pp: PathPattern if seedablePath(pp) =>
           val cl = comp(l, g)
-          halfJoin(cl, compPath(pathSpace(g), pp, Some(cl)), "left_semi")
+          halfJoin(cl, pathIn(g, pp, Some(cl)), "left_semi")
         case _ => halfJoin(comp(l, g), comp(r, g), "left_semi")
       }
 
     case AntiJoin(l, r) => halfJoin(comp(l, g), comp(r, g), "left_anti")
 
-    case Minus(l, r) => minusJoin(comp(l, g), comp(r, g))
+    case Minus(l, r) => minusJoin(comp(l, g), comp(r, g), scopeKeys(g), leftValue(g, _))
 
     case ExistsFlag(v, r, in) =>
       // expression-level EXISTS: flag each left row that has a compatible
-      // right row (per graph, [[AGV]] is a certain shared var on both sides)
+      // right row (in a keyed scope, the keys are certain shared vars)
       val l = comp(in, g)
       val rc = comp(r, g)
       val rr = renamedRight(rc)
@@ -379,7 +390,7 @@ object Compiler {
 
     case DropVars(vs0, in) =>
       val c = comp(in, g)
-      val vs = vs0.filterNot(graphKey(g).contains)
+      val vs = vs0.filterNot(scopeKeys(g).contains)
       Compiled(c.df.drop(vs.filter(c.vars.contains): _*),
         c.certain -- vs, c.maybe -- vs)
 
@@ -425,7 +436,25 @@ object Compiler {
         else out
       }
 
-    case Lateral(l, r) => lateral(comp(l, g), r, g)
+    case Lateral(l, r) =>
+      // the right side depends on the left binding μ only, not on the row
+      // that carries it: compile it once per distinct μ, in the scope
+      // keyed by μ (a struct of the left variables), then join the left
+      // rows back on that key. A variable μ binds agrees on both sides
+      // wherever the right side binds it, so the join is an equi-join on
+      // the keys, taking each shared variable from whichever side binds it.
+      val cl = comp(l, g)
+      val ks = scopeKeys(g)
+      val key = s"__lat${ks.size}"
+      val lv = (cl.vars -- ks).toSeq.sorted
+      val keyed = Compiled(cl.df.withColumn(key, struct(lv.map(col): _*)), cl.certain + key, cl.maybe)
+      val names = keyed.df.select((ks :+ key).map(col): _*).distinct()
+      val cr = comp(r, LeftBindings(g, key, names, lv.toSet, cl.certain))
+      val on = (ks :+ key).map(k => col(k) === col(RP + k)).reduce(_ && _)
+      val df = keyed.df.join(renamedRight(cr), on)
+        .select(mergedSelect(keyed, cr, keyed.vars.intersect(cr.vars).toSeq.sorted): _*)
+      Compiled(df.drop(key), cl.certain ++ cr.certain - key,
+        (cl.maybe ++ cr.maybe) -- cl.certain -- cr.certain)
 
     case Unfold(listVar, outVar, idxVar, in) =>
       val c = comp(in, g)
@@ -458,28 +487,29 @@ object Compiler {
 
     case Group(groupKeys, aggs, in) =>
       val c = comp(in, g)
-      // per graph, the graph is always a key
-      val keys = groupKeys ++ graphKey(g)
+      // in a keyed scope, the scope's keys are always keys
+      val keys = groupKeys ++ scopeKeys(g)
+      val keyCols = keys.map(k => if (c.vars(k)) col(k) else resolve(c, k, g).as(k))
       if (aggs.isEmpty) {
         // GROUP BY with no aggregates in scope — one row per group, keys
         // only (SELECT ?s { … } GROUP BY ?s ≡ projected distinct)
-        Compiled(c.df.select(keys.map(col): _*).dropDuplicates(),
+        Compiled(c.df.select(keyCols: _*).dropDuplicates(),
           c.certain.intersect(keys.toSet), keys.toSet -- c.certain)
       } else {
         // "*" resolves to the whole visible row — COUNT(DISTINCT *)
         // (AggCountDistinct over bindings, not a single var)
         def res(v: String): Column =
-          if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
+          if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v, g)
         val aggCols = aggs.map { case (name, e) => e(res).as(name) }
         val out =
           if (keys.isEmpty) c.df.agg(aggCols.head, aggCols.tail: _*)
-          else c.df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+          else c.df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
         val df = g match {
-          // a keyless aggregate yields EXACTLY ONE row per named graph,
-          // also for graphs whose body result is empty (COUNT() = 0 over
-          // the empty group; W3C aggregates "singleton" case)
-          case ng: NamedGraphs if groupKeys.isEmpty =>
-            padEmptyGroups(out, ng.names, AGV, c.df, aggCols)
+          // a keyless aggregate yields EXACTLY ONE row per key, also for
+          // keys whose body result is empty (COUNT() = 0 over the empty
+          // group; W3C aggregates "singleton" case)
+          case s: KeyedScope if groupKeys.isEmpty =>
+            padEmptyGroups(out, s.names, scopeKeys(g), c.df, aggCols)
           case _ => out
         }
         Compiled(df, c.certain.intersect(keys.toSet),
@@ -488,36 +518,36 @@ object Compiler {
 
     case Order(keys, in) =>
       val c = comp(in, g)
-      Compiled(c.df.orderBy(orderCols(c, keys): _*), c.certain, c.maybe)
+      Compiled(c.df.orderBy(orderCols(c, keys, g): _*), c.certain, c.maybe)
 
-    // Per graph, Slice commutes with per-row shapes (projection keeps rows
-    // 1:1), so push it inside before looking for the ORDER BY: the parser
-    // emits sub-selects as Slice(Project(Order(...))), and without this
-    // rewrite the ordered per-graph LIMIT would rest on an UNSPECIFIED
-    // physical-ordering accident.
-    case Slice(offset, limit, Project(vs, in)) if g.isInstanceOf[NamedGraphs] =>
+    // In a keyed scope, Slice commutes with per-row shapes (projection
+    // keeps rows 1:1), so push it inside before looking for the ORDER BY:
+    // the parser emits sub-selects as Slice(Project(Order(...))), and
+    // without this rewrite the ordered per-key LIMIT would rest on an
+    // UNSPECIFIED physical-ordering accident.
+    case Slice(offset, limit, Project(vs, in)) if scopeKeys(g).nonEmpty =>
       comp(Project(vs, Slice(offset, limit, in)), g)
-    case Slice(offset, limit, Label(_, in)) if g.isInstanceOf[NamedGraphs] =>
+    case Slice(offset, limit, Label(_, in)) if scopeKeys(g).nonEmpty =>
       comp(Slice(offset, limit, in), g)
 
     case Slice(offset, limit, in) =>
       require(offset <= Int.MaxValue, s"OFFSET $offset exceeds supported range")
       require(limit == Long.MaxValue || limit <= Int.MaxValue,
         s"LIMIT $limit exceeds supported range")
-      g match {
-        case _: NamedGraphs =>
-          // per-graph LIMIT/OFFSET (sub-SELECT inside GRAPH ?var): a rank
-          // window partitioned by the active graph. Ordered by the inner
-          // ORDER BY's keys when present (deterministic); otherwise by an
-          // arbitrary stable id (any n rows per graph, the same freedom the
-          // per-graph enumeration has).
+      scopeKeys(g) match {
+        case ks if ks.nonEmpty =>
+          // per-key LIMIT/OFFSET (a sub-SELECT inside GRAPH ?var, or a
+          // LATERAL's per-left-row LIMIT): a rank window partitioned by the
+          // keys. Ordered by the inner ORDER BY's keys when present
+          // (deterministic); otherwise by an arbitrary stable id (any n
+          // rows per key, the same freedom per-key evaluation has).
           val (sortCols, inner) = in match {
             case Order(keys, i2) =>
               val c0 = comp(i2, g)
-              (orderCols(c0, keys), c0)
+              (orderCols(c0, keys, g), c0)
             case _ => (Seq.empty[Column], comp(in, g))
           }
-          // the UNORDERED branch picks "any n rows per graph" — a specified
+          // the UNORDERED branch picks "any n rows per key" — a specified
           // freedom, but monotonically_increasing_id is partition-order-
           // dependent, so under a task retry (or between two consumers of
           // this plan) the chosen rows could differ. localCheckpoint pins
@@ -528,7 +558,7 @@ object Compiler {
             else (Seq(col("__gslid")),
               inner.df.withColumn("__gslid", monotonically_increasing_id())
                 .localCheckpoint(true))
-          Compiled(rankSlice(df, AGV, order, offset, limit).drop("__gslid"),
+          Compiled(rankSlice(df, ks, order, offset, limit).drop("__gslid"),
             inner.certain, inner.maybe)
         case _ =>
           val c = comp(in, g)
@@ -649,9 +679,9 @@ object Compiler {
       }
 
     case Null =>
-      Compiled(g.spark.range(0).select(graphKey(g).map(k =>
+      Compiled(g.spark.range(0).select(scopeKeys(g).map(k =>
           lit(null).cast(TermCols.schema).as(k)) :+ lit(1).as("__unit"): _*),
-        graphKey(g).toSet, Set.empty)
+        scopeKeys(g).toSet, Set.empty)
 
     case DatasetNames(gp) =>
       // named graph names only (never the default graph) — OpDatasetNames
@@ -713,38 +743,44 @@ object Compiler {
         (vars -- c.certain) -- certainVars)
   }
 
-  /** Resolve a variable to its column; unknown vars are NULL (unbound). */
-  private def resolve(c: Compiled, v: String): Column =
-    if (c.vars(v)) col(v) else lit(null).cast(TermCols.schema)
+  /** Resolve a variable to its column; unknown vars are NULL (unbound).
+   * In a LATERAL right side, a substituted variable falls back to the
+   * left binding's value where the row leaves it unbound. */
+  private def resolve(c: Compiled, v: String, g: GraphSource): Column = {
+    val left = leftValue(g, v)
+    if (c.certain(v)) col(v)
+    else if (c.vars(v)) left.fold(col(v))(coalesce(col(v), _))
+    else left.getOrElse(lit(null).cast(TermCols.schema))
+  }
 
   /** Sort columns of ORDER BY keys over a compiled input. */
-  private def orderCols(c: Compiled, keys: Seq[SortKey]): Seq[Column] =
+  private def orderCols(c: Compiled, keys: Seq[SortKey], g: GraphSource): Seq[Column] =
     keys.map { k =>
-      val sk = TermCols.sortKey(resolve(c, k.v))
+      val sk = TermCols.sortKey(resolve(c, k.v, g))
       if (k.ascending) sk.asc else sk.desc
     }
 
   /** Rows offset+1 … offset+limit of each `part` partition of `df` in
    * `order` (limit Long.MaxValue: no upper bound) — a row_number window. */
-  private def rankSlice(df: DataFrame, part: String, order: Seq[Column],
+  private def rankSlice(df: DataFrame, part: Seq[String], order: Seq[Column],
                         offset: Long, limit: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(part)).orderBy(order: _*)
+    val w = Window.partitionBy(part.map(col): _*).orderBy(order: _*)
     val keep =
       if (limit == Long.MaxValue) col("__rn") > offset
       else col("__rn") > offset && col("__rn") <= offset + limit
     df.withColumn("__rn", row_number().over(w)).where(keep).drop("__rn")
   }
 
-  /** `grouped` plus, for each `parts` row whose `key` no group has, the
+  /** `grouped` plus, for each `parts` row whose `keys` no group has, the
    * aggregates `aggCols` over the EMPTY input: a keyless aggregate yields
    * one row per partition (COUNT = 0 …) even where the partition's input
    * is empty. */
-  private def padEmptyGroups(grouped: DataFrame, parts: DataFrame, key: String,
+  private def padEmptyGroups(grouped: DataFrame, parts: DataFrame, keys: Seq[String],
                              input: DataFrame, aggCols: Seq[Column]): DataFrame = {
     val zero = input.where(lit(false)).agg(aggCols.head, aggCols.tail: _*)
     val missing = parts
-      .join(grouped.select(col(key)).distinct(), Seq(key), "left_anti")
+      .join(grouped.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .crossJoin(zero)
     grouped.unionByName(missing.select(grouped.columns.map(col): _*))
   }
@@ -767,35 +803,99 @@ object Compiler {
     }.toSeq.sortBy(t => (t.kind, t.lex))
   }
 
-  // ---- single-plan GRAPH ?var compile (the scale path) ----------------
+  // ---- keyed scopes: single-plan GRAPH ?var and LATERAL ---------------
 
   /** Hidden active-graph column of every result compiled under
    * [[NamedGraphs]] — certain in every sub-result, never visible to the
    * query (guarded in [[graphVarSinglePlan]]). */
   private val AGV = "__activeg"
 
-  /** Every named graph of `dataset` at once: the scope a single-plan
-   * GRAPH ?var body compiles in ([[comp]]). `df` is the named quads
-   * (g, s, p, o). */
-  private[algebra] final case class NamedGraphs(dataset: GraphSource) extends GraphSource {
-    lazy val df: DataFrame = namedQuadsDf(dataset)
-    override def spark: SparkSession = dataset.spark
-    /** The distinct graph names, as an [[AGV]] column. */
-    def names: DataFrame = namedGraphNamesDf(dataset).select(col("g").as(AGV))
+  /** A scope [[comp]] evaluates once per value of a hidden key column,
+   * all values at once: every result compiled in it carries the key,
+   * certain. Scopes nest; `outer` is the enclosing one. */
+  private[algebra] sealed trait KeyedScope extends GraphSource {
+    def outer: GraphSource
+    /** The key column this scope adds. */
+    def key: String
+    /** One row per key value, with every column of [[scopeKeys]]. */
+    def names: DataFrame
+    override def spark: SparkSession = outer.spark
   }
 
-  /** The hidden key columns a scope adds to every result: [[AGV]] per graph. */
-  private def graphKey(g: GraphSource): Seq[String] = g match {
-    case _: NamedGraphs => Seq(AGV)
+  /** Every named graph of `outer` at once: the scope a single-plan GRAPH
+   * ?var body compiles in, keyed by [[AGV]]. `df` is the named quads
+   * (g, s, p, o). */
+  private[algebra] final case class NamedGraphs(outer: GraphSource) extends KeyedScope {
+    lazy val df: DataFrame = namedQuadsDf(outer)
+    def key: String = AGV
+    def names: DataFrame = namedGraphNamesDf(outer).select(col("g").as(AGV))
+  }
+
+  /** Every distinct left binding μ of a LATERAL at once: the scope its
+   * right side compiles in, keyed by `key`, a struct of the left
+   * variables (an unbound one is a null field, equal to itself in joins,
+   * groupings and windows). `subst` are the variables μ substitutes into
+   * the right side; `certain` the left's certain ones. */
+  private[algebra] final case class LeftBindings(outer: GraphSource, key: String, names: DataFrame,
+                                                 subst: Set[String], certain: Set[String])
+      extends KeyedScope {
+    def df: DataFrame = outer.df
+  }
+
+  /** The hidden key columns a scope adds to every result, outermost first. */
+  private def scopeKeys(g: GraphSource): Seq[String] = g match {
+    case s: KeyedScope => scopeKeys(s.outer) :+ s.key
     case _ => Nil
   }
 
-  /** Where a path pattern walks: within each graph under [[NamedGraphs]],
-   * else in the active graph. */
-  private def pathSpace(g: GraphSource): PathEval.Space = g match {
-    case ng: NamedGraphs => PathEval.PerGraph(ng.df)
-    case _ => PathEval.Terms(g)
+  /** Does `op` compile by its own case in scope `g`? Not a node that is
+   * not graph-local; per left binding, not a leaf either — those compile
+   * in the enclosing scope and are correlated. */
+  private def inScope(op: Op, g: GraphSource): Boolean = g match {
+    case _: NamedGraphs => graphLocal(op)
+    case _: LeftBindings => graphLocal(op) && (op match {
+      case Bgp(_) | PathPattern(_, _, _) | Table(_, _) | Null => false
+      case _ => true
+    })
+    case _ => true
   }
+
+  /** A result compiled in `s.outer`, correlated with the left bindings: a
+   * compatible join with `s.names` on the enclosing keys and on the
+   * substituted variables it binds, so a binding that leaves one unbound
+   * takes every value. */
+  private def correlate(s: LeftBindings, c: Compiled): Compiled = {
+    val vs = c.vars.intersect(s.subst).toSeq.sorted
+    val ks = scopeKeys(s)
+    join(Compiled(s.names.select(ks.map(col) ++ vs.map(v => col(s.key).getField(v).as(v)): _*),
+      ks.toSet ++ vs.filter(s.certain), vs.filterNot(s.certain).toSet), c, "inner")
+  }
+
+  /** The value the enclosing LATERAL left bindings give `v`, when they
+   * substitute it (NULL on rows whose binding leaves it unbound). */
+  private def leftValue(g: GraphSource, v: String): Option[Column] = g match {
+    case s: LeftBindings =>
+      (Option.when(s.subst(v))(col(s.key).getField(v)) ++ leftValue(s.outer, v))
+        .reduceOption(coalesce(_, _))
+    case _ => None
+  }
+
+  /** `g` inside a sub-SELECT projecting `vs`: only those stay substituted;
+   * its other variables are fresh. */
+  private def narrow(g: GraphSource, vs: Set[String]): GraphSource = g match {
+    case s: LeftBindings => s.copy(outer = narrow(s.outer, vs), subst = s.subst.intersect(vs))
+    case _ => g
+  }
+
+  /** A path pattern in scope `g`: walked within each graph under
+   * [[NamedGraphs]], in the active graph otherwise, and correlated with
+   * the left bindings under [[LeftBindings]]. */
+  private def pathIn(g: GraphSource, pp: PathPattern, partner: Option[Compiled]): Compiled =
+    g match {
+      case s: LeftBindings => correlate(s, pathIn(s.outer, pp, partner))
+      case ng: NamedGraphs => compPath(PathEval.PerGraph(ng.df), pp, partner)
+      case _ => compPath(PathEval.Terms(g), pp, partner)
+    }
 
   /** The dataset's NAMED quads as a (g, s, p, o) term-struct frame.
    * Empty-graph marker rows (s NULL) are KEPT — name enumeration needs
@@ -818,7 +918,7 @@ object Compiler {
   /** Does this node compile under [[NamedGraphs]]? True only for the
    * graph-local operators: scans bind the hidden graph column, binary ops
    * key on it, per-row ops ignore it, grouping and Slice partition by it,
-   * LATERAL threads it through its correlated RHS. Excluded (→ enumeration
+   * a LATERAL right side keys on it next to its own key. Excluded (→ enumeration
    * fallback): dataset re-access (nested GRAPH / QuadBgp / FROM /
    * DatasetNames / SERVICE) and the escape hatches (ExtOp/GraphOp see raw
    * frames). */
@@ -967,15 +1067,11 @@ object Compiler {
    * and `monotonically_increasing_id` is partition-order-dependent — a
    * task retry or AQE re-plan between the two consumers could otherwise
    * assign DIFFERENT ids to the same row, silently corrupting
-   * OPTIONAL/EXISTS/MINUS/LATERAL results. Checkpointing materializes one
-   * id assignment that every consumer shares (same device as
+   * OPTIONAL/EXISTS/MINUS results. Checkpointing materializes one id
+   * assignment that every consumer shares (same device as
    * transitiveClosure's per-round checkpoint). */
-  private def tagged(ldf: DataFrame): DataFrame = taggedAs(ldf, LID)
-
-  /** [[tagged]] with a caller-chosen column name — nested LATERAL scopes
-   * each need their own live tag column. */
-  private def taggedAs(ldf: DataFrame, name: String): DataFrame =
-    ldf.withColumn(name, monotonically_increasing_id()).localCheckpoint(true)
+  private def tagged(ldf: DataFrame): DataFrame =
+    ldf.withColumn(LID, monotonically_increasing_id()).localCheckpoint(true)
 
   private def renamedRight(r: Compiled): DataFrame =
     r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, RP + c))
@@ -1085,15 +1181,20 @@ object Compiler {
       l.certain ++ r.certain, (l.maybe ++ r.maybe) -- (l.certain ++ r.certain))
   }
 
-  private def leftJoin(l: Compiled, r: Compiled, extra: Option[RowExpr]): Compiled = {
+  /** OPTIONAL; `left` gives a variable's LATERAL left-binding value. */
+  private def leftJoin(l: Compiled, r: Compiled, extra: Option[RowExpr],
+                       left: String => Option[Column]): Compiled = {
     val rr = renamedRight(r)
     val (shared, compat) = sharedCond(l, r)
     // the embedded condition sees the MERGED row (filter scope of OPTIONAL)
-    def mergedResolve(v: String): Column =
-      if (shared.contains(v)) coalesce(col(v), col(RP + v))
-      else if (l.vars(v)) col(v)
-      else if (r.vars(v)) col(RP + v)
-      else lit(null).cast(TermCols.schema)
+    def mergedResolve(v: String): Column = {
+      val own =
+        if (shared.contains(v)) Some(coalesce(col(v), col(RP + v)))
+        else if (l.vars(v)) Some(col(v))
+        else if (r.vars(v)) Some(col(RP + v))
+        else None
+      (own ++ left(v)).reduceOption(coalesce(_, _)).getOrElse(lit(null).cast(TermCols.schema))
+    }
     val mv = maybeShared(l, r, shared)
     val joined =
       if (mv.nonEmpty && mv.size <= MaxDecomposedVars) {
@@ -1119,39 +1220,6 @@ object Compiler {
     Compiled(joined.select(mergedSelect(l, r, shared): _*),
       l.certain, l.maybe ++ (r.vars -- l.certain))
   }
-
-  /** LATERAL (OpLateral, OpExecutor.java:240; exec QueryIterLateral): the
-   * RHS is re-evaluated per left row with the left row's bindings
-   * SUBSTITUTED in — filters and BINDs inside the RHS see the left's
-   * variables, per-row modifiers (LIMIT/OFFSET, aggregation, DISTINCT,
-   * OPTIONAL) apply within each left row's evaluation, and a sub-SELECT
-   * re-scopes: only its projected variables correlate (ARQ Lateral +
-   * Syntax-Lateral suites). Set-at-a-time compilation [[lat]] threads the
-   * left frame down the RHS tree: pattern leaves correlate via
-   * compatible-binding joins, per-row-sensitive operators partition by a
-   * per-left-row tag (row-stable: [[taggedAs]] checkpoints eagerly). The
-   * tag + checkpoint are paid only when [[perRowSensitive]] says the RHS
-   * needs them — a plain RHS stays the old single-join plan. */
-  private def lateral(l: Compiled, r: Op, g: GraphSource): Compiled =
-    if (!perRowSensitive(r, l.vars)) lat(l, r, g, tag = "", LatLeft(l, ""))
-    else {
-      val t = freshTag()
-      val lt = Compiled(taggedAs(l.df, t), l.certain + t, l.maybe)
-      val out = lat(lt, r, g, t, LatLeft(lt, t))
-      Compiled(out.df.drop(t), out.certain - t, out.maybe)
-    }
-
-  /** A LATERAL's own left side: the frame whose row is substituted into
-   * the RHS and its per-row tag. Its variables are the substituted ones. */
-  private final case class LatLeft(frame: Compiled, tag: String) {
-    def vars: Set[String] = frame.vars - tag
-  }
-
-  /** Does a MINUS right side mention the LATERAL's left variables? Then
-   * the left row is substituted into it — the one predicate behind both
-   * [[perRowSensitive]] (the tag) and [[lat]]'s correlated MINUS. */
-  private def substitutes(b: Op, left: Set[String]): Boolean =
-    opVisibleVars(b).exists(left)
 
   /** Does the body re-access the DATASET (named graphs / dataset names /
    * FROM) rather than only the active graph? Decides whether GraphScope
@@ -1182,35 +1250,8 @@ object Compiler {
     }
   }
 
-  /** Does this RHS shape observe per-left-row evaluation (vs evaluating
-   * identically for every left row)? Decides whether [[lateral]] must
-   * materialize a per-left-row tag. `left`: the LATERAL's left variables
-   * (see [[substitutes]]). */
-  private def perRowSensitive(op: Op, left: Set[String]): Boolean = {
-    def sens(o: Op): Boolean = perRowSensitive(o, left)
-    op match {
-      case Slice(_, _, _) => true
-      case Group(_, _, _) => true
-      case Distinct(_) | Reduced(_) => true
-      case Lateral(_, _) => true
-      case Order(_, in) => sens(in)
-      case Filter(_, in) => sens(in)
-      case Extend(_, _, in) => sens(in)
-      case Project(_, in) => sens(in)
-      case Label(_, in) => sens(in)
-      case DropVars(_, in) => sens(in)
-      case Join(a, b) => sens(a) || sens(b)
-      case LeftJoin(a, b, _) => sens(a) || sens(b)
-      case Union(a, b) => sens(a) || sens(b)
-      case SemiJoin(a, _) => sens(a)
-      case AntiJoin(a, _) => sens(a)
-      case Minus(a, b) => sens(a) || substitutes(b, left)
-      case _ => false
-    }
-  }
-
-  /** Pattern/visible variables of an RHS subtree — the collision guard for
-   * sub-SELECT scope renaming in [[lat]]'s Project case. */
+  /** Pattern/visible variables of a subtree — [[graphVarSinglePlan]]'s
+   * guard that the hidden graph column is no query variable. */
   private def opVisibleVars(op: Op): Set[String] = {
     def pv(ps: Seq[TermPat]): Set[String] = ps.collect { case TVar(n) => n }.toSet
     op match {
@@ -1247,168 +1288,6 @@ object Compiler {
     }
   }
 
-  /** Correlated compile of a LATERAL RHS: `l` already holds the left
-   * columns (plus the per-left-row `tag` column when the RHS is
-   * per-row-sensitive); the result holds left + RHS columns with the
-   * substitution semantics applied. `left` is the LATERAL's own left
-   * side, which `l` extends once a Join or OPTIONAL has been threaded. */
-  private def lat(l: Compiled, r: Op, g: GraphSource, tag: String,
-                  left: LatLeft): Compiled = r match {
-    case Filter(cond, in) =>
-      // RHS filters see the LEFT bindings (lateral-3 "filter scope")
-      val c = lat(l, in, g, tag, left)
-      Compiled(c.df.filter(cond(v => resolve(c, v))), c.certain, c.maybe)
-    case Extend(name, expr, in) =>
-      val c = lat(l, in, g, tag, left)
-      require(!c.vars.contains(name), s"Extend onto bound var $name")
-      Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
-        c.certain, c.maybe + name)
-    case Join(a, b) => lat(lat(l, a, g, tag, left), b, g, tag, left)
-    case Union(a, b) => unionPad(lat(l, a, g, tag, left), lat(l, b, g, tag, left))
-    case Distinct(in) =>
-      // per-left-row dedup: the tag keeps duplicate left rows distinct
-      val c = lat(l, in, g, tag, left)
-      Compiled(c.df.dropDuplicates(), c.certain, c.maybe)
-    case Reduced(in) => lat(l, Distinct(in), g, tag, left)
-    case Order(_, in) =>
-      // ordering without a slice has no observable effect on the multiset
-      lat(l, in, g, tag, left)
-    case Label(_, in) => lat(l, in, g, tag, left)
-    case DropVars(vs, in) =>
-      val c = lat(l, in, g, tag, left)
-      Compiled(c.df.drop(vs: _*), c.certain -- vs, c.maybe -- vs)
-    case LeftJoin(a, b, cond) =>
-      // per-row OPTIONAL (optional-in-lateral): left' rows unmatched by
-      // the correlated RHS survive with unbound RHS vars. Fresh tag —
-      // left' may have multiplied the original left rows.
-      val l2 = lat(l, a, g, tag, left)
-      val t2 = freshTag()
-      val lt2 = Compiled(taggedAs(l2.df, t2), l2.certain + t2, l2.maybe)
-      val m0 = lat(lt2, b, g, t2, left)
-      val matched = cond match {
-        case Some(e) => Compiled(m0.df.filter(e(v => resolve(m0, v))), m0.certain, m0.maybe)
-        case None => m0
-      }
-      val rhsVars = (matched.vars -- lt2.vars).toSeq.sorted
-      val unmatched0 = lt2.df.join(
-        matched.df.select(col(t2)).distinct(), Seq(t2), "left_anti")
-      val padded = rhsVars.foldLeft(unmatched0)((d, v) =>
-        d.withColumn(v, lit(null).cast(TermCols.schema)))
-      val out = matched.df.unionByName(
-        padded.select(matched.df.columns.map(col): _*)).drop(t2)
-      Compiled(out, l2.certain, l2.maybe ++ rhsVars)
-    case SemiJoin(a, b) => halfJoin(lat(l, a, g, tag, left), comp(b, g), "left_semi")
-    case AntiJoin(a, b) => halfJoin(lat(l, a, g, tag, left), comp(b, g), "left_anti")
-    case Minus(a, b) if substitutes(b, left.vars) =>
-      // the left row is substituted into BOTH operands: compile both
-      // against the LATERAL's own left frame, anti-join within one left
-      // row (its tag), then join back onto the frame threaded so far
-      val m = minusJoin(lat(left.frame, a, g, left.tag, left),
-        unbindLeft(left, b, g), Seq(left.tag))
-      if (l eq left.frame) m else join(l, m, "inner")
-    case Minus(a, b) => minusJoin(lat(l, a, g, tag, left), comp(b, g))
-    case Slice(offset, limit, inner) =>
-      // per-left-row LIMIT/OFFSET: row_number window over the tag
-      require(offset <= Int.MaxValue && (limit == Long.MaxValue || limit <= Int.MaxValue),
-        s"LATERAL slice ($offset, $limit) exceeds supported range")
-      require(tag.nonEmpty, "internal: per-row slice without a lateral tag")
-      // the parser's modifier nesting is slice(project(order(…))) — peel
-      // both wrappers so the window sees the sort keys; the projection is
-      // re-applied after the window (ORDER BY may reference vars the
-      // SELECT clause then drops)
-      val (body, sortKeys, projOpt) = inner match {
-        case Order(ks, i2) => (i2, ks, None)
-        case Project(vs, Order(ks, i2)) => (i2, ks, Some(vs))
-        case Project(vs, i2) => (i2, Nil, Some(vs))
-        case other => (other, Seq.empty[SortKey], None)
-      }
-      projOpt.foreach { vs =>
-        val hidden = (opVisibleVars(body) -- vs).intersect(l.vars - tag)
-        require(hidden.isEmpty,
-          s"LATERAL sub-SELECT hides variable(s) ${hidden.mkString(", ")} that " +
-            "collide with left-side bindings while using LIMIT/OFFSET — " +
-            "rename the inner variables (scope rename is not implemented here)")
-      }
-      val joined = lat(l, body, g, tag, left)
-      val order = if (sortKeys.isEmpty) Seq(lit(1).asc) else orderCols(joined, sortKeys)
-      val limited = rankSlice(joined.df, tag, order, offset, limit)
-      projOpt match {
-        case Some(vs) =>
-          val keepCols = (l.vars ++ vs.filter(joined.vars)).toSeq.sorted
-          Compiled(limited.select(keepCols.map(col): _*),
-            l.certain ++ vs.toSet.intersect(joined.certain),
-            (keepCols.toSet -- l.certain) -- vs.toSet.intersect(joined.certain))
-        case None => Compiled(limited, joined.certain, joined.maybe)
-      }
-    case Group(keys, aggs, in) =>
-      // per-left-row aggregation: group by (left cols + keys); with no
-      // keys every left row yields exactly one row — unmatched left rows
-      // get the aggregate-over-empty values (COUNT=0 etc.), obtained from
-      // one global empty-frame aggregation.
-      require(tag.nonEmpty, "internal: per-row group without a lateral tag")
-      val c = lat(l, in, g, tag, left)
-      require(aggs.nonEmpty, "LATERAL grouped subquery without aggregates")
-      def res(v: String): Column =
-        if (v == "*") struct(c.df.columns.map(col): _*) else resolve(c, v)
-      val aggCols = aggs.map { case (name, e) => e(res).as(name) }
-      val lCols = l.vars.toSeq.sorted
-      val grouped = c.df.groupBy((lCols ++ keys).map(col): _*)
-        .agg(aggCols.head, aggCols.tail: _*)
-      val out =
-        if (keys.nonEmpty) grouped
-        else padEmptyGroups(grouped, l.df.select(lCols.map(col): _*), tag, c.df, aggCols)
-      Compiled(out, l.certain ++ keys.filter(c.certain), // agg outputs may be null
-        aggs.map(_._1).toSet ++ (l.maybe ++ keys.filterNot(c.certain)))
-    case Project(vs, inner) =>
-      // sub-SELECT: only the PROJECTED vars stay in scope — hidden inner
-      // vars are fresh (lateral-5 "different scope"). An uncorrelated
-      // subquery (no projected var bound on the left) evaluates once,
-      // globally — including its LIMIT (lateral-in-optional).
-      val corr = vs.toSet.intersect(l.vars -- Set(tag))
-      if (!perRowSensitive(inner, corr) || corr.isEmpty)
-        join(l, comp(Project(vs, inner), g), "inner")
-      else {
-        val hidden = (opVisibleVars(inner) -- vs).intersect(l.vars - tag)
-        require(hidden.isEmpty,
-          s"LATERAL sub-SELECT hides variable(s) ${hidden.mkString(", ")} that " +
-            "collide with left-side bindings while using per-row modifiers — " +
-            "rename the inner variables (scope rename is not implemented here)")
-        val c = lat(l, inner, g, tag, left)
-        val keep = (l.vars ++ vs.filter(c.vars)).toSeq.sorted
-        Compiled(c.df.select(keep.map(col): _*),
-          l.certain ++ vs.toSet.intersect(c.certain),
-          (keep.toSet -- l.certain) -- vs.toSet.intersect(c.certain))
-      }
-    case _ =>
-      // pattern leaves & everything shape-insensitive: the correlated
-      // re-execution IS the compatible-binding join (SURVEY §2.3). Under
-      // [[NamedGraphs]] every leaf binds the hidden active-graph column,
-      // so the compatible-binding join keys on it and the correlated
-      // evaluation stays graph-scoped.
-      join(l, comp(r, g), "inner")
-  }
-
-  /** A LATERAL MINUS right side compiled against the left row, then with
-   * the variables that row binds unbound again: they are constants in
-   * both operands, no shared variables. A left variable the row leaves
-   * unbound (OPTIONAL) stays a variable, so it is unbound only where a
-   * copy of the left value is bound. */
-  private def unbindLeft(left: LatLeft, b: Op, g: GraphSource): Compiled = {
-    val f = left.frame
-    val copies = f.maybe.toSeq.sorted.map(v => v -> s"${left.tag}_$v")
-    val fc = Compiled(copies.foldLeft(f.df) { case (d, (v, c)) => d.withColumn(c, col(v)) },
-      f.certain, f.maybe ++ copies.map(_._2))
-    val r = lat(fc, b, g, left.tag, left)
-    val bound = (f.certain - left.tag).toSeq
-    val df = copies.foldLeft(r.df.drop(bound: _*)) { case (d, (v, c)) =>
-      d.withColumn(v, when(col(c).isNull, col(v))).drop(c)
-    }
-    Compiled(df, r.certain -- bound -- f.maybe, r.maybe -- copies.map(_._2) ++ f.maybe)
-  }
-
-  private val tagCtr = new java.util.concurrent.atomic.AtomicLong()
-  private def freshTag(): String = "__lt" + tagCtr.incrementAndGet()
-
   private def halfJoin(l: Compiled, r: Compiled, how: String): Compiled = {
     val rr = renamedRight(r)
     val (shared, cond) = sharedCond(l, r)
@@ -1436,15 +1315,27 @@ object Compiler {
    * LID decomposition (union of equi-joins restricted to branches that
    * witness a both-bound var). Only the >MaxDecomposedVars tail — a shape
    * no realistic query produces — falls back to the OR-condition
-   * nested-loop join. `keys0` (a LATERAL's left-row tag) scope the
-   * anti-join to one left row. */
-  private def minusJoin(l: Compiled, r: Compiled, keys0: Seq[String] = Nil): Compiled = {
-    // per graph, [[AGV]] scopes the anti-join to one graph but is NOT a
-    // shared var: the ≥1-both-bound rule applies to the DATA vars only,
-    // so two patterns sharing no query variable still remove nothing
-    val keys = Seq(AGV).filter(k => l.vars(k) && r.vars(k)) ++ keys0
+   * nested-loop join.
+   *
+   * The scope's `keys` scope the anti-join to one key but are NOT shared
+   * vars: the ≥1-both-bound rule applies to the DATA vars only, so two
+   * patterns sharing no query variable still remove nothing. A variable
+   * the LATERAL left binding substitutes (`left`) is a constant in both
+   * operands, so it is no shared variable on rows whose binding binds it:
+   * it is unbound there for the anti-join, and restored after. */
+  private def minusJoin(l: Compiled, r: Compiled, keys: Seq[String],
+                        left: String => Option[Column]): Compiled = {
     val shared = (l.vars.intersect(r.vars) -- keys).toSeq.sorted
     if (shared.isEmpty) return l
+    val subst = shared.flatMap(v => left(v).map(v -> _))
+    if (subst.nonEmpty) {
+      val vs = subst.map(_._1)
+      def unbind(c: Compiled) = Compiled(subst.foldLeft(c.df) { case (d, (v, mu)) =>
+        d.withColumn(v, when(mu.isNull, col(v))) }, c.certain -- vs, c.maybe ++ vs)
+      val m = minusJoin(unbind(l), unbind(r), keys, _ => None)
+      return Compiled(subst.foldLeft(m.df) { case (d, (v, mu)) =>
+        d.withColumn(v, coalesce(col(v), mu)) }, l.certain, l.maybe)
+    }
     val rr = renamedRight(r)
     val mv = maybeShared(l, r, shared)
     if (mv.isEmpty) {

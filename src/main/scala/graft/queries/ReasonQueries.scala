@@ -141,15 +141,15 @@ object ReasonQueries {
   def v7_owl_micro(s: SparkSession, d: String): DataFrame = {
     val interesting = Seq("Agent", "Place", "HasPlace", "Connected",
       "PlacedAgent").map(NS + _)
-    graft.reason.Owl.closure(v7TriplesForDebug(s, d))
+    graft.reason.Owl.closure(v7Triples(s, d))
       .filter(col("p.lex") === RDF_TYPE &&
         col("o.lex").isin(interesting: _*) &&
         (col("s.lex").startsWith(NS + "c:") || col("s.lex").startsWith(NS + "n:")))
       .select(col("s.lex").as("inst"), col("o.lex").as("cls"))
   }
 
-  /** v7's ABox+TBox input frame — shared with the ReasonProbe debug tool. */
-  private[graft] def v7TriplesForDebug(s: SparkSession, d: String): DataFrame = {
+  /** v7's ABox+TBox input frame. */
+  private def v7Triples(s: SparkSession, d: String): DataFrame = {
     val customer = Tables.customer(s, d)
     def iriCol(prefix: String, c: Column) =
       TermCols.iriTerm(concat(lit(NS + prefix), c.cast("string")))

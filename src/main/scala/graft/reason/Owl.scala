@@ -681,17 +681,6 @@ object Owl {
     closureWith(df, compileSchema(df, schemaCap), expandDifferentFrom,
       localMaxBase)
 
-  /** Debug/audit: the specialized distributed rule program `closure`
-   * would run for this dataset (after schema compile + partial eval). */
-  private[graft] def programFor(df: DataFrame,
-      expandDifferentFrom: Boolean = false): Seq[Rule] = {
-    val cs = compileSchema(df, 2000000)
-    val rules0 = microGeneric.rules ++ cs.ground
-    val rules1 =
-      if (expandDifferentFrom) rules0 else rules0.filterNot(_.name == "distinct1")
-    specialize(rules1, cs.schemaClosure)
-  }
-
   // ---- validation (ValidityReport analog) --------------------------------
 
   /** One validity report row (reference: reasoner/ValidityReport.java). */

@@ -803,9 +803,7 @@ object Rules {
    * checkpointed union whose executed plan no longer shows them). */
   /** Chain-level delta dispatch predicate (the set-at-a-time analog of
    * the reference's clause index): can a rule×position chain whose
-   * delta-side atom is `a` match a delta described by `dispatch`?
-   * Shared by [[deriveOnce]] and the trace so the planned chain count
-   * and the reported one can never desynchronize. */
+   * delta-side atom is `a` match a delta described by `dispatch`? */
   private def chainCanMatch(a: Atom, dispatch: Option[Dispatch]): Boolean =
     dispatch match {
       case Some(d) => a.p match {
@@ -1011,9 +1009,6 @@ object Rules {
       }
     }
 
-    // per-round timing trace (env GRAFT_RULES_TRACE=1) — planning vs
-    // execution vs dispatch-collect; for sizing fixpoint-latency work
-    val trace = sys.env.get("GRAFT_RULES_TRACE").contains("1")
     // ---- fused dispatch: ONE Spark job per round ---------------------
     // From round 1 on the delta is all DERIVED facts, so when every rule
     // head has a CONSTANT predicate (and every rdf:type head a constant
@@ -1054,7 +1049,6 @@ object Rules {
       iter += 1
       if (iter > maxIter) throw new IllegalStateException(
         s"rule closure did not reach a fixpoint within $maxIter rounds")
-      val t0 = System.nanoTime()
       // (An explicit broadcast hint on small deltas was measured a wash
       // here — AQE already converts the tiny-delta joins at runtime; the
       // structural lever is ground-rule family batching in deriveOnce.)
@@ -1064,10 +1058,6 @@ object Rules {
       val freshPlan = derived.join(allR,
         col("s") === col("__as") && col("p") === col("__ap") &&
           col("o") === col("__ao"), "left_anti")
-      val tPlan = if (trace) {
-        freshPlan.queryExecution.executedPlan // force analysis+optimization
-        System.nanoTime()
-      } else 0L
       // fused path: the dispatch pairs ride the checkpoint job as an
       // observed aggregate; getOrEmpty never blocks, so if the metric
       // does not surface (defensive) the two-job collect below runs
@@ -1103,17 +1093,6 @@ object Rules {
           }
           (cp, metric)
         } else (freshPlan.localCheckpoint(true), None)
-      val tExec = if (trace) System.nanoTime() else 0L
-      if (trace) {
-        val (fams, sings) = compiledFams
-        def canMatch(a: Atom) = chainCanMatch(a, dispatch)
-        val nChains = sings.map(_.body.count(canMatch)).sum +
-          fams.map(_.template.body.count(canMatch)).sum
-        println(f"[rules] round $iter chains=$nChains " +
-          f"(fam=${fams.size} single=${sings.size}) " +
-          f"plan=${(tPlan - t0) / 1e9}%.2fs exec=${(tExec - tPlan) / 1e9}%.2fs " +
-          s"parts=${fresh.rdd.getNumPartitions} fused=${fusedPairs.isDefined}")
-      }
       // two-job fallback: one vocabulary-bounded collect — the distinct
       // (predicate, rdf:type-object) set doubles as the emptiness check
       // and the exact-dispatch key set
@@ -1123,8 +1102,6 @@ object Rules {
           .distinct().limit(dispatchTypeObjCap + 1)
           .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSeq
       }
-      if (trace) println(f"[rules] round $iter collect=" +
-        f"${(System.nanoTime() - tExec) / 1e9}%.2fs keys=${pairs.length}")
       deltaEmpty = pairs.isEmpty
       dispatch =
         if (pairs.length > dispatchTypeObjCap) {

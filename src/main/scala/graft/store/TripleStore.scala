@@ -160,11 +160,12 @@ object TripleStore {
     val keyIdx = termKey.map(flat.schema.fieldIndex)
     flat
       .repartitionByRange(partitions, lexKeys("spo"): _*)
-      .sortWithinPartitions(termKey.map(col): _*)
+      .sortWithinPartitions(flat.columns.map(col): _*)
       .mapPartitions { rows =>
-        // adjacent-duplicate elimination on the term key (repo/lang may
-        // differ between duplicates; first-in-sort-order wins, same
-        // arbitrary-winner semantics as dropDuplicates)
+        // adjacent-duplicate elimination on the term key. Duplicates may
+        // differ in repo/lang; the sort breaks term-key ties on them, so
+        // the survivor (the least extras) does not depend on the input's
+        // partition order
         var prev: Seq[Any] = null
         rows.filter { r =>
           val key = keyIdx.map(r.get)

@@ -185,52 +185,9 @@ class DifferentialSpec extends AnyFunSuite {
           }
         }
       case Lateral(l, r) =>
-        // per-left-row RHS evaluation (set-at-a-time twin: compatible
-        // join + per-tag windows). Slice/Distinct observe the left row.
-        def evalLat(rr: Op, m1: Sol): Seq[Sol] = rr match {
-          case Slice(off, lim, Order(keys, rb)) =>
-            val merged = evalLat(rb, m1)
-            // honor per-key direction (the generator emits ASC-only, but
-            // the oracle must not silently mis-rank if that changes)
-            val ord = new Ordering[Sol] {
-              def compare(a: Sol, b: Sol): Int =
-                keys.iterator.map { k =>
-                  val c = keyOrd.compare(localKey(a.get(k.v)), localKey(b.get(k.v)))
-                  if (k.ascending) c else -c
-                }.find(_ != 0).getOrElse(0)
-            }
-            merged.sorted(ord).slice(off.toInt, off.toInt + lim.toInt)
-          case Slice(_, _, _) =>
-            // a per-left-row cut of UNORDERED rows is implementation-
-            // arbitrary — the oracle refuses rather than guessing
-            sys.error("lateral oracle: Slice without a full-key Order")
-          case Distinct(rb) => evalLat(rb, m1).distinct
-          case Group(keys, aggs, rb) if keys.nonEmpty =>
-            // per-left-row KEYED aggregation (Compiler.lat Group case:
-            // group by left cols + keys over the compatible merged rows)
-            val ms = evalLat(rb, m1)
-            ms.groupBy(m => keys.flatMap(k => m.get(k).map(k -> _)).toMap)
-              .toSeq.map { case (key, members) =>
-                m1 ++ key ++ aggs.flatMap { case (n, a) =>
-                  x.evalAgg(a, members).map(n -> _) }
-              }
-          case Group(_, _, _) =>
-            sys.error("lateral oracle: keyless per-left-row Group not mirrored")
-          case Join(a, b) =>
-            // substitution distributes over the join: b's operators see
-            // the left row, not a's
-            val rs = evalLat(b, m1)
-            evalLat(a, m1).flatMap(m => rs.filter(compatible(m, _)).map(m ++ _))
-          case Minus(a, b) =>
-            // the left row is substituted into both operands: its
-            // variables are bound on both sides, so they are not shared
-            val rs = evalLat(b, m1)
-            evalLat(a, m1).filter(m => !rs.exists(r => compatible(m, r) &&
-              (m.keySet.intersect(r.keySet) -- m1.keySet).nonEmpty))
-          case rb =>
-            eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _)
-        }
-        eval(l, g, x).flatMap(m1 => evalLat(r, m1))
+        // the right side is evaluated once per left row μ, with μ
+        // substituted in (OpLateral / QueryIterLateral)
+        eval(l, g, x).flatMap(m1 => evalSub(r, m1, g, x).map(m1 ++ _))
       case DatasetClause(defaults, named, body) =>
         // FROM re-scope: default graph = set-UNION of the listed graphs
         // (GraphUnionRead dedup), named graphs = exactly the listed names
@@ -318,6 +275,77 @@ class DifferentialSpec extends AnyFunSuite {
           }
         }
       case other => sys.error(s"RefEval: unsupported op $other")
+    }
+
+    /** `op` with the LATERAL left row `mu` substituted: mu's variables are
+     * constants, so no solution binds them, and expressions read them from
+     * mu (a solution's own binding wins, which only an EXISTS flag named
+     * like a left variable uses). A sub-SELECT substitutes only the
+     * variables it projects; its other variables are fresh. */
+    def evalSub(op: Op, mu: Sol, g: GData, x: DExprs): Seq[Sol] = {
+      def sub(o: Op): Seq[Sol] = evalSub(o, mu, g, x)
+      def scope(m: Sol): Sol = mu ++ m
+      def holds(c: RowExpr, m: Sol): Boolean = x.evalBool(c, scope(m)).contains(true)
+      def sorted(keys: Seq[SortKey], ms: Seq[Sol]): Seq[Sol] =
+        ms.sorted(new Ordering[Sol] {
+          def compare(a: Sol, b: Sol): Int = keys.iterator.map { k =>
+            val c = keyOrd.compare(localKey(scope(a).get(k.v)), localKey(scope(b).get(k.v)))
+            if (k.ascending) c else -c
+          }.find(_ != 0).getOrElse(0)
+        })
+      op match {
+        case Join(a, b) =>
+          val (ls, rs) = (sub(a), sub(b))
+          for (p <- ls; q <- rs if compatible(p, q)) yield p ++ q
+        case Union(a, b) => sub(a) ++ sub(b)
+        case LeftJoin(a, b, cond) =>
+          val (ls, rs) = (sub(a), sub(b))
+          ls.flatMap { p =>
+            val ms = rs.filter(compatible(p, _)).map(p ++ _)
+              .filter(m => cond.forall(holds(_, m)))
+            if (ms.nonEmpty) ms else Seq(p)
+          }
+        case Minus(a, b) =>
+          val (ls, rs) = (sub(a), sub(b))
+          ls.filter(p => !rs.exists(q => compatible(p, q) && p.keySet.intersect(q.keySet).nonEmpty))
+        case SemiJoin(a, b) =>
+          val rs = sub(b); sub(a).filter(p => rs.exists(compatible(p, _)))
+        case AntiJoin(a, b) =>
+          val rs = sub(b); sub(a).filter(p => !rs.exists(compatible(p, _)))
+        case ExistsFlag(v, r, in) =>
+          val rs = sub(r)
+          sub(in).map(p => p + (v -> Term.lit(rs.exists(compatible(p, _)).toString,
+            Term.XSD + "boolean")))
+        case Filter(c, in) => sub(in).filter(holds(c, _))
+        case Extend(v, e, in) =>
+          sub(in).map(m => x.evalTerm(e, scope(m)).fold(m)(t => m + (v -> t)))
+        case Project(vs, in) =>
+          evalSub(in, mu.filter(kv => vs.contains(kv._1)), g, x)
+            .map(_.filter(kv => vs.contains(kv._1)))
+        case DropVars(vs, in) => sub(in).map(_ -- vs)
+        case Distinct(in) => sub(in).distinct
+        case Reduced(in) => sub(in).distinct
+        case Order(_, in) => sub(in)
+        case Label(_, in) => sub(in)
+        case Slice(off, lim, Project(vs, in)) => sub(Project(vs, Slice(off, lim, in)))
+        case Slice(off, lim, Order(keys, in)) =>
+          sorted(keys, sub(in))
+            .slice(off.toInt, if (lim == Long.MaxValue) Int.MaxValue else (off + lim).toInt)
+        // a cut of UNORDERED rows is implementation-arbitrary
+        case Slice(_, _, _) => sys.error("lateral oracle: Slice without an Order")
+        case Group(keys, aggs, in) =>
+          val ms = sub(in)
+          val groups: Seq[(Sol, Seq[Sol])] =
+            if (keys.isEmpty) Seq((Map.empty: Sol) -> ms)
+            else ms.groupBy(m => keys.flatMap(k => m.get(k).map(k -> _)).toMap).toSeq
+          groups.map { case (key, members) =>
+            key ++ aggs.flatMap { case (n, a) => x.evalAgg(a, members.map(scope)).map(n -> _) }
+          }
+        case Lateral(a, b) =>
+          sub(a).flatMap(m2 => evalSub(b, mu ++ m2, g, x).map(m2 ++ _))
+        case leaf =>
+          eval(leaf, g, x).filter(compatible(mu, _)).map(_ -- mu.keySet)
+      }
     }
   }
 
@@ -739,6 +767,9 @@ class DifferentialSpec extends AnyFunSuite {
     case DatasetClause(d, n, in) =>
       s"From(${d.map(_.stripPrefix(EX)).mkString(",")}; named=${n.map(_.stripPrefix(EX)).mkString(",")}, ${showOp(in, x)})"
     case GraphVarEnum(v, in) => s"GraphVar(?$v, ${showOp(in, x)})"
+    case Lateral(l, r) => s"Lateral(${showOp(l, x)}, ${showOp(r, x)})"
+    case Slice(o, n, in) => s"Slice($o, $n, ${showOp(in, x)})"
+    case Order(ks, in) => s"Order(${ks.map(_.v).mkString(",")}, ${showOp(in, x)})"
     case other => other.toString
   }
   private def sl(p: TermPat): String = p match {
@@ -1172,42 +1203,112 @@ class DifferentialSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.graphVarEnumMax")
   }
 
+  private def tr(s: String, p: String, o: String) = Triple(iri(s), iri(p), iri(o))
+  private def tpat(s: String, p: String, o: String) =
+    Bgp(Seq(TriplePattern(TVar(s), TConst(iri(p)), TVar(o))))
+
+  /** A fixed case over a triple graph: RefEval gives `rows` solutions
+   * (when given) and the compiler the same bag. */
+  private def checkFixed(g: Seq[Triple], op: Op, x: DExprs = new DExprs,
+                         rows: Option[Int] = Some(1)): Unit = {
+    val expected = bag(RefEval.eval(op, GData(g, Nil), x))
+    rows.foreach(n => assert(expected.values.sum == n, showOp(op, x)))
+    val gdf = spark.createDataset(g)(org.apache.spark.sql.Encoders.product[Triple]).toDF()
+    assert(bag(collectSols(Compiler.compile(op, gdf))) == expected, showOp(op, x))
+  }
+
   /** LATERAL substitutes the left row into both MINUS operands, and only
-   * the left row: a variable the row leaves unbound, or one a join
-   * partner inside the RHS binds, stays a MINUS variable. Each case
-   * gives 1 row. */
+   * the left row: a variable the row leaves unbound, one a join partner
+   * inside the RHS binds, or one a sub-SELECT does not project stays a
+   * MINUS variable. Each case gives 1 row. */
   test("differential: LATERAL MINUS whose right side mentions a left-side variable") {
-    def t(s: String, p: String, o: String) = Triple(iri(s), iri(p), iri(o))
-    def tp(s: String, p: String, o: String) =
-      Bgp(Seq(TriplePattern(TVar(s), TConst(iri(p)), TVar(o))))
-    def check(g: Seq[Triple], op: Op): Unit = {
-      val x = new DExprs
-      val expected = bag(RefEval.eval(op, GData(g, Nil), x))
-      assert(expected.values.sum == 1, showOp(op, x))
-      val gdf = spark.createDataset(g)(org.apache.spark.sql.Encoders.product[Triple]).toDF()
-      assert(bag(collectSols(Compiler.compile(op, gdf))) == expected, showOp(op, x))
-    }
     // after ?x := a, { a :r ?w2 } shares no variable with { ?z :q ?w }:
     // nothing is removed (an anti-join on ?x removes the row)
-    check(Seq(t("a", "p", "b"), t("c", "q", "d"), t("a", "r", "e")),
-      Lateral(tp("x", "p", "y"), Minus(tp("z", "q", "w"), tp("x", "r", "w2"))))
+    checkFixed(Seq(tr("a", "p", "b"), tr("c", "q", "d"), tr("a", "r", "e")),
+      Lateral(tpat("x", "p", "y"), Minus(tpat("z", "q", "w"), tpat("x", "r", "w2"))))
     // s1 has no :k, so ?x stays shared and MINUS removes both of s1's rows;
     // for s2, ?x := x2 is substituted and nothing is removed
-    check(Seq(t("s1", "p", "o1"), t("s2", "p", "o2"), t("s2", "k", "x2"),
-        t("x1", "r", "w1"), t("x1", "t", "w3"), t("x2", "r", "w4"), t("x2", "t", "w5")),
-      Lateral(LeftJoin(tp("s", "p", "o"), tp("s", "k", "x"), None),
-        Minus(tp("x", "r", "w"), tp("x", "t", "w2"))))
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s2", "p", "o2"), tr("s2", "k", "x2"),
+        tr("x1", "r", "w1"), tr("x1", "t", "w3"), tr("x2", "r", "w4"), tr("x2", "t", "w5")),
+      Lateral(LeftJoin(tpat("s", "p", "o"), tpat("s", "k", "x"), None),
+        Minus(tpat("x", "r", "w"), tpat("x", "t", "w2"))))
     // ?v, bound by the join partner, is shared by both MINUS operands:
     // (v1, a1) goes, (v2, a2) stays
-    check(Seq(t("s1", "p", "o1"), t("s1", "q", "v1"), t("s1", "q", "v2"),
-        t("v1", "r", "a1"), t("v2", "r", "a2"), t("v1", "t", "b1")),
-      Lateral(tp("s", "p", "o"),
-        Distinct(Join(tp("s", "q", "v"), Minus(tp("v", "r", "a"), tp("v", "t", "b"))))))
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s1", "q", "v1"), tr("s1", "q", "v2"),
+        tr("v1", "r", "a1"), tr("v2", "r", "a2"), tr("v1", "t", "b1")),
+      Lateral(tpat("s", "p", "o"),
+        Distinct(Join(tpat("s", "q", "v"), Minus(tpat("v", "r", "a"), tpat("v", "t", "b"))))))
     // after ?s := s1, { s1 :r ?a } and { s1 :t ?v } share no variable,
     // although the join partner binds ?v: nothing is removed
-    check(Seq(t("s1", "p", "o1"), t("s1", "q", "v1"), t("s1", "r", "a1"), t("s1", "t", "v1")),
-      Lateral(tp("s", "p", "o"),
-        Join(tp("s", "q", "v"), Minus(tp("s", "r", "a"), tp("s", "t", "v")))))
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s1", "q", "v1"), tr("s1", "r", "a1"), tr("s1", "t", "v1")),
+      Lateral(tpat("s", "p", "o"),
+        Join(tpat("s", "q", "v"), Minus(tpat("s", "r", "a"), tpat("s", "t", "v")))))
+    // the Join partner's ?w is not substituted into the MINUS either:
+    // after ?s := s1, { s1 :r ?a } and { ?z :t ?w } share no variable
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s1", "q", "w1"), tr("s1", "r", "a1"), tr("z1", "t", "w1")),
+      Lateral(tpat("s", "p", "o"),
+        Join(tpat("s", "q", "w"), Minus(tpat("s", "r", "a"), tpat("z", "t", "w")))))
+    // a correlated sub-SELECT that does not project ?o: its MINUS right
+    // side's ?o is fresh, so x1 :r w1 removes s1's row; s2's row stays
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s1", "q", "w1"), tr("x1", "r", "w1"),
+        tr("s2", "p", "o2"), tr("s2", "q", "w2")),
+      Lateral(tpat("s", "p", "o"),
+        Project(Seq("s", "w"), Distinct(Minus(tpat("s", "q", "w"), tpat("o", "r", "w"))))))
+  }
+
+  /** LATERAL right sides the random gate does not draw: a sub-SELECT
+   * hiding a variable named like a left one, left bindings with an
+   * unbound variable, a nested LATERAL, and a Group after a DropVars of
+   * a left variable. */
+  test("differential: LATERAL sub-SELECT scope, unbound left variables, nesting, Group after DropVars") {
+    // lateral-5 "different scope": the hidden inner ?o is not the left's
+    // ?o, so the first ?v in order is v1 (via x :r v1), not v2 (o1 :r v2)
+    val g5 = Seq(tr("s1", "p", "o1"), tr("s1", "q", "v1"), tr("s1", "q", "v2"),
+      tr("x", "r", "v1"), tr("o1", "r", "v2"))
+    val op5 = Lateral(tpat("s", "p", "o"), Slice(0, 1, Project(Seq("s", "v"),
+      Order(Seq(SortKey("v")), Join(tpat("s", "q", "v"), tpat("o", "r", "v"))))))
+    val x5 = new DExprs
+    checkFixed(g5, op5, x5)
+    assert(RefEval.eval(op5, GData(g5, Nil), x5).flatMap(_.get("v")) == Seq(iri("v1")))
+    // left rows whose binding leaves ?k unbound, each twice: the key's
+    // null field equals itself in the names, the windows, the groups and
+    // the join back, so every left row gets its right side
+    val xk = new DExprs
+    val cntY = xk.agg("COUNT(?y)",
+      RowExpr(rr => TC.intTerm(org.apache.spark.sql.functions.count(rr("y")))),
+      ms => Some(int(ms.count(_.contains("y")))))
+    checkFixed(Seq(tr("a", "p", "b"), tr("c", "p", "d"), tr("a", "r", "x1"), tr("a", "r", "x2"),
+        tr("c", "r", "x3")),
+      Lateral(Union(LeftJoin(tpat("u", "p", "w"), tpat("w", "q", "k"), None), tpat("u", "p", "w")),
+        Join(Slice(0, 1, Order(Seq(SortKey("z")), tpat("u", "r", "z"))),
+          Group(Nil, Seq("n" -> cntY), tpat("u", "r", "y")))),
+      xk, Some(4))
+    // a LATERAL nested in a right side: its own right side reads ?o from
+    // the outer left binding, which its left side does not bind
+    val xn = new DExprs
+    val same = xn.bool("sameTerm(?a, ?o)", RowExpr(rr => rr("a") === rr("o")),
+      m => for (a <- m.get("a"); o <- m.get("o")) yield a == o)
+    checkFixed(Seq(tr("s1", "p", "o1"), tr("s1", "q", "v1"), tr("s1", "q", "v2"),
+        tr("v1", "r", "o1"), tr("v1", "r", "a2"), tr("v2", "r", "a3"),
+        tr("s2", "p", "o2"), tr("s2", "q", "v3"), tr("v3", "r", "o2")),
+      Lateral(tpat("s", "p", "o"), Lateral(tpat("s", "q", "v"),
+        Slice(0, 1, Order(Seq(SortKey("a")), Filter(same, tpat("v", "r", "a")))))),
+      xn, Some(2))
+    // the random LATERAL gate's seed 76 before this gate was widened: the
+    // right side's Group keys on ?c after a DropVars removed the left's ?a
+    val x = new DExprs
+    def flag(v: String) = x.bool(s"flag($v)",
+      RowExpr(rr => TC.lex(rr(v)) === "true"), m => m.get(v).map(_.lex == "true"))
+    def exists(v: String, r: Op, in: Op) = DropVars(Seq(v), Filter(flag(v), ExistsFlag(v, r, in)))
+    val cnt = x.agg("COUNT(?c)",
+      RowExpr(rr => TC.intTerm(org.apache.spark.sql.functions.count(rr("c")))),
+      ms => Some(int(ms.count(_.contains("c")))))
+    checkFixed(genGraph(new Random(0x1A7E + 76)), Lateral(
+      exists("b", PathPattern(TConst(iri("s2")), PZeroOrMore(PLink(EX + "p0")), TConst(int(1))),
+        Bgp(Seq(TriplePattern(TVar("c"), TVar("a"), TVar("a"))))),
+      Group(Seq("c"), Seq("n" -> cnt),
+        exists("a", PathPattern(TVar("a"), PFixedLength(PLink(EX + "p0"), 3), TVar("c")),
+          Bgp(Seq(TriplePattern(TVar("b"), TVar("c"), TConst(int(4)))))))), x, None)
   }
 
   /** A closure path joined to a BGP inside GRAPH ?var walks SEEDED from
@@ -1286,120 +1387,96 @@ class DifferentialSpec extends AnyFunSuite {
       fs.take(6).mkString("\n"))
   }
 
-  /** LATERAL differential: per-left-row Slice over a fully-keyed Order
-   * (the window machinery: every rbody var is an ASC sort key, so rows
-   * tying on all keys within one left row are identical and the cut is
-   * deterministic), per-left-row Distinct, the plain correlated join, and
-   * MINUS right sides that mention a left variable.
-   * RefEval's Lateral case mirrors the compiler's compatible-join
-   * semantics (the documented set-at-a-time twin of substitution). */
-  test("differential: LATERAL with per-left-row LIMIT/DISTINCT on 30 random plans") {
+  /** Plans in the random LATERAL gate; -Dgraft.diff.n overrides. */
+  private val lateralIters =
+    sys.props.get("graft.diff.n").map(_.toInt).getOrElse(30)
+
+  /** LATERAL differential against RefEval's substitution evaluator: a
+   * random right side (any [[genOp]] shape, nested groups included) under
+   * a per-left-row Slice over a fully-keyed Order (every rbody var is an
+   * ASC sort key, so rows tying on all keys within one left row are
+   * identical and the cut is deterministic), a Distinct, a keyed or
+   * keyless Group, or nothing. On top, one plan in six gets a MINUS right
+   * side that mentions a left variable, one in six a Join with a MINUS
+   * under it, and one in six is the dense `{?u :p ?w OPTIONAL {?w :q ?k}}
+   * LATERAL {?k :r ?z MINUS {?k :s ?o}}`, whose ?k the left row may leave
+   * unbound. */
+  test(s"differential: LATERAL with per-left-row LIMIT/DISTINCT on $lateralIters random plans") {
     val failures = Seq.newBuilder[String]
-    (0 until 30).foreach { i =>
+    (0 until lateralIters).foreach { i =>
       val rnd = new Random(0x1A7E + i)
       val x = new DExprs
       val g = genGraph(rnd)
       val (l0, lv0) = genOp(rnd, x, depth = 1)
       val (rb, rvs) = genOp(rnd, x, depth = 1)
-      // the oracle mirrors per-left-row Slice/Group only at the RHS TOP;
-      // nested inside rb they would not commute with the compatibility
-      // filter (global-then-filter ≠ per-row) — skip those rbs. Distinct
-      // commutes (filter-then-distinct ≡ distinct-then-filter).
-      def hasGroupOrSlice(o: Op): Boolean = o match {
-        case Group(_, _, _) | Slice(_, _, _) => true
-        case p: Product => p.productIterator.exists {
-          case oo: Op => hasGroupOrSlice(oo)
-          case s: Seq[_] => s.exists { case oo: Op => hasGroupOrSlice(oo); case _ => false }
-          case Some(oo: Op) => hasGroupOrSlice(oo)
-          case _ => false
-        }
-      }
-      if (hasGroupOrSlice(rb)) ()
-      else {
-      val r0 = rnd.nextInt(4) match {
+      def count(cv: String) = x.agg(s"COUNT(?$cv)",
+        RowExpr(rr => TC.intTerm(org.apache.spark.sql.functions.count(rr(cv)))),
+        ms => Some(int(ms.count(_.contains(cv)))))
+      val n = (Iterator.single("n") ++ Iterator.from(2).map("n" + _))
+        .find(c => !rvs.contains(c) && !lv0.contains(c)).get
+      val r0 = rnd.nextInt(5) match {
         case 0 if rvs.nonEmpty =>
           Slice(rnd.nextInt(2), 1 + rnd.nextInt(2),
             Order(rvs.sorted.map(v => SortKey(v, ascending = true)), rb))
         case 1 => Distinct(rb)
-        case 2 if rvs.size >= 2 && rvs.intersect(lv0).size <= 1 =>
-          // per-left-row keyed aggregation at the RHS top. Correlation is
-          // restricted to the KEY var: in SPARQL text a lateral subquery
-          // can only correlate through PROJECTED vars (non-projected
-          // inner vars are renamed fresh), so a body var that is both
-          // left-bound and aggregated has no text counterpart and its
-          // algebra semantics is unspecified — not generated.
-          val key = rvs.intersect(lv0).headOption
-            .getOrElse(rvs(rnd.nextInt(rvs.size)))
-          val cv = rvs(rnd.nextInt(rvs.size))
-          val n = (Iterator.single("n") ++ Iterator.from(2).map("n" + _))
-            .find(c => !rvs.contains(c) && !lv0.contains(c)).get
-          val a = x.agg(s"COUNT(?$cv)",
-            RowExpr(rr => TC.intTerm(org.apache.spark.sql.functions.count(rr(cv)))),
-            ms => Some(int(ms.count(_.contains(cv)))))
-          Group(Seq(key), Seq(n -> a), rb)
+        case 2 if rvs.nonEmpty =>
+          Group(Seq(rvs(rnd.nextInt(rvs.size))), Seq(n -> count(rvs(rnd.nextInt(rvs.size)))), rb)
+        case 3 if rvs.nonEmpty => Group(Nil, Seq(n -> count(rvs(rnd.nextInt(rvs.size)))), rb)
         case _ => rb
       }
-      // on top, one plan in six gets a MINUS right side that mentions a
-      // left variable (one rb may bind too), and one in six is instead the
-      // dense `{?u :p ?w OPTIONAL {?w :q ?k}} LATERAL {?k :r ?z MINUS
-      // {?k :s ?o}}`, whose ?k the left row may leave unbound
       def pat(u: String, v: String) = {
         val (s, o) = if (rnd.nextBoolean()) (u, v) else (v, u)
         Bgp(Seq(TriplePattern(TVar(s), TConst(iri("p" + rnd.nextInt(3))), TVar(o))))
       }
+      def anyVar(vs: Seq[String]) = {
+        val pool = vs ++ Seq("m0", "m1")
+        pool(rnd.nextInt(pool.size))
+      }
       val (l, lv, r) = rnd.nextInt(6) match {
         case 0 if lv0.nonEmpty =>
-          val o = if (rvs.nonEmpty && rnd.nextBoolean()) rvs(rnd.nextInt(rvs.size))
-                  else "m" + rnd.nextInt(2)
-          (l0, lv0, Minus(r0, pat(lv0(rnd.nextInt(lv0.size)), o)))
-        case 1 =>
+          (l0, lv0, Minus(r0, pat(lv0(rnd.nextInt(lv0.size)), anyVar(rvs))))
+        case 1 if lv0.nonEmpty =>
+          // a MINUS under a right-side Join: only the left row is
+          // substituted into it, never the Join partner's bindings
+          (l0, lv0, Join(r0, Minus(pat(lv0(rnd.nextInt(lv0.size)), anyVar(rvs)),
+            pat(anyVar(rvs), anyVar(lv0)))))
+        case 2 =>
           val vs = rnd.shuffle(varPool)
           val (u, w, k, z) = (vs(0), vs(1), vs(2), vs(3))
           (LeftJoin(pat(u, w), pat(w, k), None), Seq(u, w, k),
             Minus(pat(k, z), pat(k, if (rnd.nextBoolean()) z else "m0")))
         case _ => (l0, lv0, r0)
       }
-      // a BIND in the RHS onto a var the left binds is a SPARQL scope
-      // error (the compiler rejects it) — regenerate-as-skip those plans
-      def extendVars(o: Op): Set[String] = o match {
-        case Extend(v, _, in) => extendVars(in) + v
-        case Filter(_, in) => extendVars(in)
-        case Order(_, in) => extendVars(in)
-        case Slice(_, _, in) => extendVars(in)
-        case Distinct(in) => extendVars(in)
-        case Project(_, in) => extendVars(in)
-        case DropVars(_, in) => extendVars(in)
-        case Group(_, _, in) => extendVars(in)
-        case ExistsFlag(_, _, in) => extendVars(in)
-        case Join(a, b) => extendVars(a) ++ extendVars(b)
-        case Union(a, b) => extendVars(a) ++ extendVars(b)
-        case LeftJoin(a, b, _) => extendVars(a) ++ extendVars(b)
-        case Minus(a, _) => extendVars(a)
-        case SemiJoin(a, _) => extendVars(a)
-        case AntiJoin(a, _) => extendVars(a)
+      // a BIND or an aggregate in the RHS onto a var the left binds is a
+      // SPARQL scope error (the compiler rejects the BIND) — skip those
+      def assigned(o: Op): Set[String] = o match {
+        case Extend(v, _, in) => assigned(in) + v
+        case Group(_, aggs, in) => assigned(in) ++ aggs.map(_._1)
+        case p: Product => p.productIterator.flatMap {
+          case oo: Op => assigned(oo)
+          case _ => Set.empty[String]
+        }.toSet
         case _ => Set.empty
       }
-      if (extendVars(r).intersect(lv.toSet).nonEmpty) ()
-      else {
-      val op = Lateral(l, r)
-      val gdf = spark.createDataset(g)(
-        org.apache.spark.sql.Encoders.product[Triple]).toDF()
-      val expected = bag(RefEval.eval(op, GData(g, Nil), x))
-      try {
-        val actual = bag(collectSols(Compiler.compile(op, gdf)))
-        if (actual != expected) {
-          val missing = expected.toSeq.filterNot(kv => actual.get(kv._1).contains(kv._2))
-          val extra = actual.toSeq.filterNot(kv => expected.get(kv._1).contains(kv._2))
-          failures += s"[$i] MISMATCH Lateral(${showOp(l, x)}, ${showOp(r, x)})\n" +
-            s"  expected-but-not-actual: ${missing.take(4)}\n" +
-            s"  actual-but-not-expected: ${extra.take(4)}"
+      if (assigned(r).intersect(lv.toSet).isEmpty) {
+        val op = Lateral(l, r)
+        val gdf = spark.createDataset(g)(
+          org.apache.spark.sql.Encoders.product[Triple]).toDF()
+        val expected = bag(RefEval.eval(op, GData(g, Nil), x))
+        try {
+          val actual = bag(collectSols(Compiler.compile(op, gdf)))
+          if (actual != expected) {
+            val missing = expected.toSeq.filterNot(kv => actual.get(kv._1).contains(kv._2))
+            val extra = actual.toSeq.filterNot(kv => expected.get(kv._1).contains(kv._2))
+            failures += s"[$i] MISMATCH Lateral(${showOp(l, x)}, ${showOp(r, x)})\n" +
+              s"  expected-but-not-actual: ${missing.take(4)}\n" +
+              s"  actual-but-not-expected: ${extra.take(4)}"
+          }
+        } catch {
+          case e: Exception =>
+            failures += s"[$i] COMPILE FAILED: ${e.getMessage}\n  " +
+              s"Lateral(${showOp(l, x)}, ${showOp(r, x)})"
         }
-      } catch {
-        case e: Exception =>
-          failures += s"[$i] COMPILE FAILED: ${e.getMessage}\n  " +
-            s"Lateral(${showOp(l, x)}, ${showOp(r, x)})"
-      }
-      }
       }
     }
     val fs = failures.result()

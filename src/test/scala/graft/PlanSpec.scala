@@ -210,6 +210,22 @@ class PlanSpec extends AnyFunSuite {
     } == 1, "on EncodedSnapshotGraph the only compile job is the idsOf dictionary probe")
   }
 
+  /** A LATERAL right side compiles once per distinct left binding, keyed
+   * by it: no per-row tag is materialized while compiling. */
+  test("compiling a LATERAL with a per-left-row ORDER+LIMIT launches no Spark job") {
+    val g = spark.createDataset(Seq(
+      Triple(Term.iri(EX + "alice"), Term.iri(EX + "name"), Term.string("Alice")),
+      Triple(Term.iri(EX + "alice"), Term.iri(EX + "email"), Term.string("a1@x")),
+      Triple(Term.iri(EX + "alice"), Term.iri(EX + "email"), Term.string("a2@x")))).toDF()
+    val lat = Lateral(
+      Bgp(Seq(TriplePattern(TVar("s"), TConst(Term.iri(EX + "name")), TVar("n")))),
+      Slice(0, 1, Order(Seq(SortKey("e")),
+        Bgp(Seq(TriplePattern(TVar("s"), TConst(Term.iri(EX + "email")), TVar("e")))))))
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { df = Compiler.compile(lat, g) } == 0)
+    assert(df.count() == 1)
+  }
+
   test("quad-snapshot GRAPH patterns pick the quad layout with graph pruning") {
     import graft.model.Quad
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
