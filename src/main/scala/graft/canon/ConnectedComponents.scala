@@ -1,7 +1,9 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.ops.Fixpoint
 
 /**
  * Distributed connected components over a DataFrame edge list — the
@@ -23,20 +25,23 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /**
-   * Size-adaptive entry point: below `localThreshold` edges the component
-   * map is computed with a driver-side union-find (one collect of the
-   * DEDUPLICATED edge list — sameAs edges are orders of magnitude smaller
+   * The one entry point: edges (src, dst), two string columns → (node,
+   * component), component = min member of the node's component under
+   * Spark's UTF-8 byte string order; every node appearing in edges is
+   * present (self-loop-only nodes map to themselves).
+   *
+   * Size-adaptive, from the one driver budget ([[Fixpoint.BudgetKey]],
+   * `graft.fixpoint.driverRows`, default 1M rows): when the DEDUPLICATED
+   * edge list fits the budget it is collected and closed by the driver
+   * union-find [[unionFind]] (sameAs edges are orders of magnitude smaller
    * than the corpus, and a dozen distributed star-contraction rounds on a
    * few-MB edge set is pure scheduler latency); above it, the O(log n)
-   * distributed loop. Both produce the identical deterministic map
-   * (component = min member under Spark's UTF-8 byte string order),
-   * verified against each other in ConnectedComponentsSpec.
-   *
-   * Sizing: the local path collects ~threshold (src, dst) string pairs —
-   * at 2M edges of ~40-char IRIs budget roughly 0.5–1 GB of driver heap;
-   * lower the threshold for small-driver deployments.
+   * distributed loop, planned in [[Fixpoint.loopSession]] like every
+   * fixpoint. Both faces produce the identical deterministic map,
+   * verified against each other in DifferentialSpec; a budget of 0 pins
+   * the distributed face.
    */
-  def runAdaptive(edges: DataFrame, localThreshold: Long = 2000000): DataFrame = {
+  def runAdaptive(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // One materialization of the caller's edge plan (which may be a whole
@@ -56,11 +61,10 @@ object ConnectedComponents {
         .distinct()
         .localCheckpoint(true)
       val base =
-        if (e.count() <= localThreshold) {
-          val pairs = e.as[(String, String)].collect()
-          val mapping = graft.fixtures.CorpusGen.connectedComponentsLocal(pairs.toSeq)
-          spark.createDataset(mapping.toSeq).toDF("node", "component")
-        } else loop(e)
+        if (Fixpoint.local(spark, e.count()))
+          spark.createDataset(unionFind(e.as[(String, String)].collect().toSeq).toSeq)
+            .toDF("node", "component")
+        else Fixpoint.lift(spark, loop(Fixpoint.lift(Fixpoint.loopSession(spark), e)))
       padSelfLoops(base, selfLoops)
     } finally raw.unpersist()
   }
@@ -70,30 +74,46 @@ object ConnectedComponents {
   private def padSelfLoops(base: DataFrame, selfLoops: DataFrame): DataFrame =
     base.union(selfLoops.join(base, Seq("node"), "left_anti"))
 
-  /** edges: two string columns (src, dst). Returns (node, component) where
-   * component = min node id (UTF-8 byte order) of the node's component;
-   * every node appearing in edges is present (self-loop-only nodes map to
-   * themselves). */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val raw = edges.toDF("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val selfLoops = raw.where(col("src") === col("dst"))
-        .select(col("src").as("node"), col("src").as("component")).distinct()
-        .localCheckpoint(true)
-      val prepared = raw
-        .where(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint(true)
-      padSelfLoops(loop(prepared, maxIter), selfLoops)
-    } finally raw.unpersist()
+  /** The driver face: union-find over an edge list. Roots are component
+   * minima under [[utf8Lt]] (Spark's string order), so the map equals the
+   * distributed face's. Also the fixture generator's oracle
+   * (CorpusGen.goldenTriples). */
+  def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
+    val parent = scala.collection.mutable.Map[String, String]()
+    def find(x: String): String = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    val keys = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    keys.map(k => k -> find(k)).toMap
   }
 
-  /** The star-contraction fixpoint over an already DEDUPED, self-loop-free,
-   * checkpointed edge list (runAdaptive calls this directly — its input is
-   * already prepared; re-running the distinct would be a wasted full
-   * shuffle). Per-round localCheckpoints rely on the ContextCleaner to
-   * unpersist dropped rounds as references die; rounds are capped at
+  /** Spark's string min() compares unsigned UTF-8 BYTES (UTF8String),
+   * which disagrees with Java's UTF-16 code-unit compare for
+   * supplementary characters — the driver face must pick the same
+   * min-member roots as the distributed pass or the canonical IRI would
+   * flip with the driver budget. */
+  private def utf8Lt(a: String, b: String): Boolean = {
+    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n) {
+      val c = (x(i) & 0xff) - (y(i) & 0xff)
+      if (c != 0) return c < 0
+      i += 1
+    }
+    x.length < y.length
+  }
+
+  /** The distributed face: the star-contraction fixpoint over
+   * [[runAdaptive]]'s DEDUPED, self-loop-free, checkpointed edge list.
+   * Per-round localCheckpoints rely on the ContextCleaner to unpersist
+   * dropped rounds as references die; rounds are capped at
    * `maxIter` and the edge set SHRINKS every contraction, which bounds the
    * transient cached footprint. */
   private def loop(edges: DataFrame, maxIter: Int = 50): DataFrame = {

@@ -186,7 +186,7 @@ object CorpusGen {
       case l if l.startsWith("sameas ") =>
         val Array(_, a, b) = l.split(" "); (KG + "entity/" + a, KG + "entity/" + b)
     })
-    val canonMap = connectedComponentsLocal(edges)
+    val canonMap = graft.canon.ConnectedComponents.unionFind(edges)
     def canon(x: String): String = canonMap.getOrElse(x, x)
 
     val out = Set.newBuilder[String]
@@ -220,39 +220,5 @@ object CorpusGen {
       }
     }
     out.result()
-  }
-
-  /** Spark's string min() compares unsigned UTF-8 BYTES (UTF8String),
-   * which disagrees with Java's UTF-16 code-unit compare for
-   * supplementary characters — the local oracle must pick the same
-   * min-member roots as the distributed pass or the canonical IRI would
-   * flip with the adaptive-path threshold. */
-  def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
-  /** Tiny driver-side union-find — the oracle for the distributed CC pass.
-   * Roots are component minima under [[utf8Lt]] (Spark's string order). */
-  def connectedComponentsLocal(edges: Seq[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.Map[String, String]()
-    def find(x: String): String = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    for ((a, b) <- edges) {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    val keys = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    keys.map(k => k -> find(k)).toMap
   }
 }

@@ -8,15 +8,11 @@ import org.apache.spark.sql.functions._
  * jena-arq/.../path/eval/PathEngine.java:96–129 — BFS with a visited set).
  * Frontier-delta semi-naive iteration: each round joins only the NEW pairs
  * against the edge list, so work is proportional to the delta, not the
- * closure; localCheckpoint truncates lineage per round. */
+ * closure; localCheckpoint truncates lineage per round. The loop plans in
+ * [[Fixpoint.loopSession]] like every fixpoint; unlike Rules and CC it has
+ * no driver-local face yet, so the [[Fixpoint.BudgetKey]] budget
+ * (`graft.fixpoint.driverRows`) does not route it. */
 object Graphs {
-
-  /** JVM-wide lock for SESSION-GLOBAL conf toggles. Graphs' own loops no
-   * longer need it (they isolate via [[isolatedLoopSession]]); it remains
-   * for Rules.closure, whose loop plans compiled rule queries against the
-   * caller's session and therefore still save/toggle/restore the
-   * constraint-propagation key on it. */
-  private[graft] val closureLock = new Object
 
   /** Rounds taken by the most recent closure loop on this JVM (either
    * [[transitiveClosure]] or [[reachableFrom]]) — a test-only trace hook:
@@ -25,40 +21,6 @@ object Graphs {
    * Volatile, last-writer-wins; concurrent closures would interleave
    * (single-threaded specs are the only readers). */
   @volatile private[graft] var lastClosureRounds: Int = 0
-
-  /** Constraint propagation trips over checkpointed unions here (Spark's
-   * UnionBase.rewriteConstraints throws "key not found: attr" when a
-   * LogicalRDD child carries constraints referencing pre-checkpoint
-   * attribute ids). The loops' plans are tiny — constraints buy nothing
-   * — so the loop runs with propagation OFF in an ISOLATED session
-   * (`SparkSession.newSession` + the graftbridge lift): the caller's
-   * session conf is never touched, so queries planning concurrently keep
-   * constraint propagation. Only localCheckpoint outputs (self-contained
-   * LogicalRDD leaves) cross the session boundary, in both directions. */
-  private def isolatedLoopSession(
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val iso = spark.newSession()
-    // newSession starts from the SparkConf baseline — mirror the caller's
-    // RUNTIME conf so loop planning (shuffle partitions, AQE, …) behaves
-    // identically; non-modifiable keys are skipped
-    spark.conf.getAll.foreach { case (k, v) =>
-      try iso.conf.set(k, v) catch { case scala.util.control.NonFatal(_) => () }
-    }
-    iso.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    iso
-  }
-
-  /** Lift a frame into `target` via its ANALYZED plan. Loop inputs lift
-   * BEFORE materialization: the input plan may itself contain
-   * checkpointed unions (a nested closure inside PAlt feeding an outer
-   * closure), which trip UnionBase.rewriteConstraints exactly like the
-   * loop's own accumulators — optimizing + executing it under the
-   * isolated session keeps the caller's conf untouched for the whole
-   * run. Results lift back as self-contained LogicalRDD leaves. */
-  private def lift(target: org.apache.spark.sql.SparkSession,
-                   df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.SessionBridge.ofRows(
-      target, df.queryExecution.analyzed)
 
   /** Transitive closure of (src, dst): all reachable pairs (SPARQL `p+`).
    * Iterates to the true fixpoint — `maxIter` is a runaway guard that
@@ -86,17 +48,18 @@ object Graphs {
   /** The one frontier-delta loop behind [[transitiveClosure]] (`seeds`
    * None: the first frontier is every edge, round 0) and [[reachableFrom]]
    * (the seeds' out-edges, round 1). The edge relation and the seeds are
-   * made distinct, lifted into the isolated session and materialized
-   * there; the loop runs isolated and its result lifts back. */
+   * made distinct, lifted into the [[Fixpoint.loopSession]] and
+   * materialized there; the loop runs isolated and its result lifts back.
+   * Always distributed: it takes no driver-local face. */
   private def closure(edges: DataFrame, seeds: Option[DataFrame],
                       maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
-    val iso = isolatedLoopSession(spark)
-    val e = lift(iso, edges.toDF("src", "dst").distinct()).localCheckpoint(true)
+    val iso = Fixpoint.loopSession(spark)
+    val e = Fixpoint.lift(iso, edges.toDF("src", "dst").distinct()).localCheckpoint(true)
     val (first, round0) = seeds match {
       case None => (e, 0)
       case Some(sd) =>
-        val s0 = lift(iso, sd.toDF("n").distinct()).localCheckpoint(true)
+        val s0 = Fixpoint.lift(iso, sd.toDF("n").distinct()).localCheckpoint(true)
         (s0.join(e, col("n") === col("src"))
           .select(col("src"), col("dst")).distinct()
           .localCheckpoint(true), 1)
@@ -140,7 +103,7 @@ object Graphs {
       }
     }
     lastClosureRounds = iter
-    lift(spark, acc)
+    Fixpoint.lift(spark, acc)
   }
 
   // ---- graph-level set operations (SURVEY.md §2.7) — the columnar analog

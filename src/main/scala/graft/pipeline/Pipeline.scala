@@ -30,12 +30,16 @@ object Pipeline {
 
   final case class StageResult(name: String, rows: Long, skipped: Boolean, wallMs: Long)
 
-  /** Driver-collect threshold for the CC canon pass (both paths): the
-   * driver union-find is a SERIAL Amdahl term — the env knob lets a
-   * small-heap deployment lower it, and the scaling benchmark pin the
-   * distributed path with 0. */
-  private def ccLocalMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_MAX", "2000000").toLong
+  /** The canon stage both runs share: the sameAs edges close under
+   * [[ConnectedComponents.runAdaptive]] (driver or distributed face, from
+   * the one `graft.fixpoint.driverRows` budget) and every s/o IRI is
+   * rewritten to its component representative. */
+  private def canonStage(linked: DataFrame): DataFrame = {
+    val edges = linked
+      .where(col("p.lex") === CorpusGen.OWL_SAMEAS)
+      .select(col("s.lex").as("src"), col("o.lex").as("dst"))
+    ConnectedComponents.rewrite(linked, ConnectedComponents.runAdaptive(edges))
+  }
 
   /**
    * Fused single-pass run: generate → extract → link → canon → materialize
@@ -69,11 +73,7 @@ object Pipeline {
     val linked = linked0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val edges = linked
-        .where(col("p.lex") === CorpusGen.OWL_SAMEAS)
-        .select(col("s.lex").as("src"), col("o.lex").as("dst"))
-      val mapping = ConnectedComponents.runAdaptive(edges, ccLocalMax)
-      val rewritten = ConnectedComponents.rewrite(linked.toDF(), mapping)
+      val rewritten = canonStage(linked.toDF())
       // plain term-struct store: measured faster than materializeEncoded
       // on this corpus (terms are mostly unique, so the 3n-row dictionary
       // shuffle costs more than the narrow id rows save — see BASELINE.md)
@@ -152,14 +152,7 @@ object Pipeline {
 
     // ---- canon: CC over sameAs edges, rewrite subjects/objects
     stage("canon") { dir =>
-      val edges = linked
-        .where(col("p.lex") === CorpusGen.OWL_SAMEAS)
-        .select(col("s.lex").as("src"), col("o.lex").as("dst"))
-      // same driver-collect-threshold knob as the fused path (small-heap
-      // drivers / pinning the distributed CC for scaling runs)
-      val mapping = ConnectedComponents.runAdaptive(edges, ccLocalMax)
-      val rewritten = ConnectedComponents.rewrite(linked, mapping)
-      rewritten.write.mode(SaveMode.Overwrite).parquet(s"$dir/triples")
+      canonStage(linked).write.mode(SaveMode.Overwrite).parquet(s"$dir/triples")
       spark.read.parquet(s"$dir/triples").count()
     }
     val canon = spark.read.parquet(s"$outDir/stages/canon/triples")

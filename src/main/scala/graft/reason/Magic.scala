@@ -191,12 +191,11 @@ object Magic {
    * rules; use the [[Rules.LpRuleSet]] overload (or union `rs.axioms`
    * into `triples` yourself) or they are silently absent. */
   def answer(triples: DataFrame, rules: Seq[LpRule],
-      goal: (Option[Term], Term, Option[Term]),
-      localMaxBase: Option[Long] = None): DataFrame = {
+      goal: (Option[Term], Term, Option[Term])): DataFrame = {
     val rs = compile(rules, goal)
     val closed =
       if (rs.rules.isEmpty) triples.select("s", "p", "o").dropDuplicates()
-      else Rules.closure(triples, rs, localMaxBase = localMaxBase)
+      else Rules.closure(triples, rs)
     def eq(c: String, t: Term) =
       col(s"$c.kind") === t.kind && col(s"$c.lex") === t.lex &&
         col(s"$c.dt") === t.dt && col(s"$c.lang") === t.lang

@@ -652,8 +652,7 @@ object Owl {
   }
 
   private def closureWith(df: DataFrame, cs: CompiledSchema,
-      expandDifferentFrom: Boolean,
-      localMaxBase: Option[Long] = None): DataFrame = {
+      expandDifferentFrom: Boolean): DataFrame = {
     val rules0 = microGeneric.rules ++ cs.ground
     val rules1 =
       if (expandDifferentFrom) rules0 else rules0.filterNot(_.name == "distinct1")
@@ -672,14 +671,12 @@ object Owl {
     // the data slice only, with ITS exact dispatch keys (not the base's)
     Rules.closure(df, RuleSet(cs.schemaClosure.toSeq, rules),
       basePreds = cs.dataPreds, baseTypeObjs = cs.dataTypeObjs,
-      axiomsSaturated = true, localMaxBase = localMaxBase)
+      axiomsSaturated = true)
   }
 
   def closure(df: DataFrame, expandDifferentFrom: Boolean = false,
-      schemaCap: Int = 2000000,
-      localMaxBase: Option[Long] = None): DataFrame =
-    closureWith(df, compileSchema(df, schemaCap), expandDifferentFrom,
-      localMaxBase)
+      schemaCap: Int = 2000000): DataFrame =
+    closureWith(df, compileSchema(df, schemaCap), expandDifferentFrom)
 
   // ---- validation (ValidityReport analog) --------------------------------
 

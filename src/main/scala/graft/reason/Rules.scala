@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Term, Triple}
+import graft.ops.Fixpoint
 
 /**
  * Generic forward-chaining rule engine — the Spark-native answer to the
@@ -646,8 +647,14 @@ object Rules {
    * chain (constants as pushed filters, shared vars as join keys); heads
    * project back to triples; the per-round delta is the anti-join of the
    * derivations against the accumulated closure — the same discipline
-   * (and the same lineage-checkpoint cadence) as Graphs.transitiveClosure. */
-  /** @param basePreds when the caller knows the exact predicate set of
+   * (and the same lineage-checkpoint cadence) as Graphs.transitiveClosure.
+   * Like every fixpoint it plans in [[Fixpoint.loopSession]]:
+   * the input lifts in, the loop (axioms included) runs there, and the
+   * flat result lifts back — the caller's session conf is never touched.
+   * A base whose 8× fits the driver budget (`graft.fixpoint.driverRows`,
+   * [[Fixpoint.BudgetKey]]) closes on the driver instead; see
+   * `closure0`.
+   *  @param basePreds when the caller knows the exact predicate set of
    *  ROUND 1's delta — `triples` + `rs.axioms`, or `triples` alone under
    *  `axiomsSaturated` (Owl computes it anyway for its meta-fact
    *  seeding) — round 1's dispatch uses it instead of running unbounded:
@@ -660,34 +667,15 @@ object Rules {
    *  closure as axioms), round 1's delta is the data slice only: a
    *  derivation from axiom facts alone is already an axiom, and every
    *  mixed derivation has a data fact in some position the delta rotation
-   *  covers. Chains only the axioms could feed are then never planned.
-   *  @param localMaxBase overrides `graft.reason.localFixpointMaxBase`
-   *  (the adaptive driver-local threshold; Some(0) forces the
-   *  distributed loop — cross-face specs use it). */
+   *  covers. Chains only the axioms could feed are then never planned. */
   def closure(triples: DataFrame, rs: RuleSet, maxIter: Int = 1000,
       basePreds: Option[Set[String]] = None,
       baseTypeObjs: Option[Set[String]] = None,
-      axiomsSaturated: Boolean = false,
-      localMaxBase: Option[Long] = None): DataFrame = {
-    // same checkpointed-union hazard + fix as Graphs.transitiveClosure:
-    // constraint propagation trips over LogicalRDD unions ("key not
-    // found: attr"); the loop plans are tiny, so switch it off for the
-    // run (session-global, performance-only effect — see Graphs). The
-    // save/toggle/restore races against concurrent closures on the same
-    // conf key, so it shares Graphs' JVM-wide lock.
-    graft.ops.Graphs.closureLock.synchronized {
-      val spark0 = triples.sparkSession
-      val cpKey = "spark.sql.constraintPropagation.enabled"
-      val cpPrev = spark0.conf.getOption(cpKey)
-      spark0.conf.set(cpKey, "false")
-      try closure0(triples, rs, maxIter,
-        basePreds.map(ps => Dispatch(ps, baseTypeObjs)), axiomsSaturated,
-        localMaxBase)
-      finally cpPrev match {
-        case Some(v) => spark0.conf.set(cpKey, v)
-        case None => spark0.conf.unset(cpKey)
-      }
-    }
+      axiomsSaturated: Boolean = false): DataFrame = {
+    val spark = triples.sparkSession
+    val iso = Fixpoint.loopSession(spark)
+    Fixpoint.lift(spark, closure0(Fixpoint.lift(iso, triples), rs, maxIter,
+      basePreds.map(ps => Dispatch(ps, baseTypeObjs)), axiomsSaturated))
   }
 
   // ---- per-round dispatch -------------------------------------------------
@@ -952,10 +940,12 @@ object Rules {
       .dropDuplicates("s", "p", "o")
   }
 
+  /** [[closure]]'s loop, run inside the loop session: the driver face when
+   * `Fixpoint.local(8 × base)` holds (facts capped at the budget), else
+   * the distributed semi-naive rounds. */
   private def closure0(triples: DataFrame, rs: RuleSet, maxIter: Int,
-      baseDispatch: Option[Dispatch] = None,
-      axiomsSaturated: Boolean = false,
-      localMaxBase: Option[Long] = None): DataFrame = {
+      baseDispatch: Option[Dispatch],
+      axiomsSaturated: Boolean): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
 
@@ -973,34 +963,18 @@ object Rules {
     // closure is cheaper tuple-at-a-time on the driver — the same
     // economics as a broadcast-join threshold, and the in-memory mode is
     // exactly how the reference's rule engines run (rulesys/FBRuleInfGraph).
-    // The base is already checkpointed so the count is one cheap job; the
-    // derived-fact cap (8 × max(threshold, base), checked per-derivation)
-    // guards the driver against closures that blow up far past the
-    // configured scale (transitive n²) — on overflow the work falls
-    // back to the distributed loop below. `graft.reason.localFixpointMaxBase`
-    // (session conf): 0 disables, default 100k facts.
-    val localMax = localMaxBase.getOrElse(
-      spark.conf.getOption("graft.reason.localFixpointMaxBase")
-        .map { v =>
-          try v.trim.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"graft.reason.localFixpointMaxBase must be a long fact " +
-                s"count (0 disables the local path), got '$v'")
-          }
-        }.getOrElse(100000L))
-    if (localMax > 0 && base.count() <= localMax) {
+    // The driver budget (Fixpoint.BudgetKey) admits a base when 8× it
+    // fits: a closure legitimately outgrows its base (a chain's
+    // transitive pairs), so the base alone never bounds it. The budget
+    // is also the fact cap, checked per derivation — a closure that
+    // blows up past it (transitive n²) falls back to the distributed
+    // loop below. The base is already checkpointed, so the count is one
+    // cheap job.
+    if (Fixpoint.local(spark, 8 * base.count())) {
       val data = base.as[Triple].collect().toSeq
       try {
-        // cap = 8 × max(threshold, base): the base never bounds the
-        // closure, so the cap rides the CONFIGURED scale (a closure
-        // legitimately 30× a tiny base — e.g. a chain's transitive
-        // pairs — should not bounce to the distributed loop). Saturating
-        // multiply: a huge threshold means "never give up locally".
-        val capBase = math.max(localMax, data.size.toLong)
-        val cap = if (capBase > Long.MaxValue / 8) Long.MaxValue else capBase * 8
         val closed = closureLocal(data, RuleSet(Nil, rs.rules), maxIter,
-          maxFacts = cap)
+          maxFacts = Fixpoint.budget(spark))
         return spark.createDataset(closed.toSeq).toDF()
       } catch { case o: LocalFixpointOverflow =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1128,9 +1102,9 @@ object Rules {
         delta = fresh
       }
     }
-    // the RETURNED frame must be a single LogicalRDD: closure()'s finally
-    // restores constraintPropagation before the caller executes, and that
-    // rule trips over checkpointed-union plans ("key not found: attr")
+    // the RETURNED frame must be a single LogicalRDD: it lifts back to the
+    // caller's session, whose constraint propagation trips over
+    // checkpointed-union plans ("key not found: attr")
     if (flat) all else all.localCheckpoint(true)
   }
 }

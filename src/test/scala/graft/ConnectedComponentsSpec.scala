@@ -3,18 +3,21 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.canon.ConnectedComponents
-import graft.fixtures.CorpusGen
 
 /** CC fixture per FIXTURES.md §4: chains, stars, one giant component,
- * singletons — verified against a driver-side union-find oracle. */
+ * singletons — the distributed face (driver budget 0) verified against
+ * the driver-side union-find. */
 class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  private def distributed(edges: org.apache.spark.sql.DataFrame) =
+    TestSpark.withFixpointBudget(0)(ConnectedComponents.runAdaptive(edges)
+      .collect().map(r => r.getString(0) -> r.getString(1)))
+
   private def check(edges: Seq[(String, String)]): Unit = {
     import spark.implicits._
-    val got = ConnectedComponents.run(edges.toDF("src", "dst"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val want = CorpusGen.connectedComponentsLocal(edges)
+    val got = distributed(edges.toDF("src", "dst")).toMap
+    val want = ConnectedComponents.unionFind(edges)
     assert(got == want, s"got=$got want=$want")
   }
 
@@ -37,10 +40,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     // "a" exists only as a self-loop; "s" has a self-loop AND a real edge
     val edges = Seq(("a", "a"), ("s", "s"), ("s", "t"), ("b", "c"))
-    check(edges) // distributed run() vs the union-find oracle
+    check(edges) // distributed face vs the union-find
     val adaptive = ConnectedComponents.runAdaptive(edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(adaptive == CorpusGen.connectedComponentsLocal(edges))
+    assert(adaptive == ConnectedComponents.unionFind(edges))
     assert(adaptive("a") == "a" && adaptive("t") == "s" && adaptive("s") == "s")
   }
 
@@ -48,10 +51,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (0 until 30).map(i => (f"x${i % 11}%02d", f"x${(i * 5) % 13}%02d"))
       .filter(e => e._1 != e._2)
-    val a = ConnectedComponents.run(edges.toDF("src", "dst").repartition(1))
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val b = ConnectedComponents.run(edges.toDF("src", "dst").repartition(7))
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val a = distributed(edges.toDF("src", "dst").repartition(1)).sorted.toSeq
+    val b = distributed(edges.toDF("src", "dst").repartition(7)).sorted.toSeq
     assert(a == b)
   }
 }

@@ -1607,4 +1607,87 @@ class DifferentialSpec extends AnyFunSuite {
     assert(fs.isEmpty, s"${fs.size} order-differential failures:\n" +
       fs.take(6).mkString("\n"))
   }
+
+  // ------------------------------------------------ fixpoint faces
+  // Rules.closure and ConnectedComponents.runAdaptive each pick a driver
+  // face or a distributed face from one budget (Fixpoint.BudgetKey); the
+  // gate runs both faces on the same seeded inputs (budget 0 pins the
+  // distributed one) and needs the two to give equal sets.
+
+  /** Seeded cases per fixpoint gate; -Dgraft.diff.n overrides (n / 5). */
+  private val fixpointCases =
+    sys.props.get("graft.diff.n").map(_.toInt / 5).getOrElse(12)
+
+  /** One seeded rule case in its own namespace: a random graph (self-loops
+   * and literal objects included) and 1–3 rule templates over its
+   * predicates — transitive, symmetric, a subClassOf chain and a
+   * notEqual guard. Every IRI is case-local, so a batch of
+   * cases closes as one program with no derivation crossing cases. */
+  private def ruleCase(i: Int): (Seq[Triple], Seq[String]) = {
+    val rnd = new Random(7000 + i)
+    def node(k: Int) = iri(s"c$i/n$k")
+    def pred(name: String) = s"<${EX}c$i/$name>"
+    val preds = Seq("p", "q", "type", "sub")
+    val graph = Seq.fill(6 + rnd.nextInt(10)) {
+      val o =
+        if (rnd.nextInt(6) == 0) Term.lit(s"v${rnd.nextInt(3)}", Term.XSD_STRING)
+        else node(rnd.nextInt(6))
+      Triple(node(rnd.nextInt(6)), iri(s"c$i/" + preds(rnd.nextInt(4))), o)
+    }.distinct
+    def pq() = pred(preds(rnd.nextInt(2)))
+    val (tp, sub) = (pred("type"), pred("sub"))
+    val templates = Seq[() => String](
+      () => { val r = pq(); s"[(?a $r ?b), (?b $r ?c) -> (?a $r ?c)]" },
+      () => { val r = pq(); s"[(?a $r ?b) -> (?b $r ?a)]" },
+      () => s"[(?x $tp ?c), (?c $sub ?d) -> (?x $tp ?d)] " +
+        s"[(?a $sub ?b), (?b $sub ?c) -> (?a $sub ?c)]",
+      () => s"[(?a ${pq()} ?b), notEqual(?a, ?b) -> (?b ${pq()} ?a)]")
+    val chosen = rnd.shuffle(templates.indices.toList).take(1 + rnd.nextInt(3))
+    (graph, chosen.map(templates(_)()))
+  }
+
+  test(s"differential: Rules.closure driver face ≡ distributed face on $fixpointCases seeded programs") {
+    import spark.implicits._
+    var derived = 0
+    (0 until fixpointCases).grouped(12).foreach { batch =>
+      val cases = batch.map(ruleCase)
+      val data = cases.flatMap(_._1)
+      val rules = graft.reason.Rules.parse(cases.flatMap(_._2).mkString("\n"))
+      val df = spark.createDataset(data).toDF()
+      def close() = graft.reason.Rules.closure(df, rules).as[Triple].collect().toSet
+      val driver = close()
+      val dist = TestSpark.withFixpointBudget(0)(close())
+      assert(driver == dist, s"cases ${batch.head}..${batch.last}: " +
+        s"driver-only=${(driver -- dist).take(4).map(_.toNTriples)} " +
+        s"distributed-only=${(dist -- driver).take(4).map(_.toNTriples)}")
+      derived += (driver -- data).size
+    }
+    assert(derived > 0, "the seeded programs derived nothing")
+  }
+
+  /** One seeded CC case: a random edge list in its own namespace, with
+   * self-loops (some nodes ONLY self-looped) and node names whose UTF-8
+   * byte order differs from Java's UTF-16 order. */
+  private def ccCase(i: Int): Seq[(String, String)] = {
+    val rnd = new Random(9000 + i)
+    val nodes = 2 + rnd.nextInt(12)
+    val marks = Vector("a", "Z", "\u00e9", "\uFF21", "\uD83D\uDE00")
+    def node(k: Int) = s"c$i/" + marks(k % marks.size) + k
+    Seq.fill(1 + rnd.nextInt(2 * nodes)) {
+      val a = rnd.nextInt(nodes)
+      (node(a), node(if (rnd.nextInt(5) == 0) a else rnd.nextInt(nodes)))
+    }
+  }
+
+  test(s"differential: ConnectedComponents.runAdaptive driver face ≡ distributed face on ${fixpointCases * 5} random graphs") {
+    import spark.implicits._
+    val edges = (0 until fixpointCases * 5).flatMap(ccCase).toDF("src", "dst")
+    def cc() = graft.canon.ConnectedComponents.runAdaptive(edges)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val driver = cc()
+    val dist = TestSpark.withFixpointBudget(0)(cc())
+    assert(driver == dist, s"driver-only=${(driver -- dist).take(6)} " +
+      s"distributed-only=${(dist -- driver).take(6)}")
+    assert(driver.exists { case (n, c) => n != c })
+  }
 }

@@ -125,8 +125,8 @@ class MagicSpec extends AnyFunSuite {
     val want = Set(Triple(n("urn:x"), n("urn:named"), n("urn:iri-obj")))
     assert(Magic.answerLocal(data, rules.rules, goal) == want)
     val df = spark.createDataset(data).toDF()
-    val got = Magic.answer(df, rules.rules, goal, localMaxBase = Some(0L))
-      .as[Triple].collect().toSet
+    val got = TestSpark.withFixpointBudget(0)(
+      Magic.answer(df, rules.rules, goal).as[Triple].collect().toSet)
     assert(got == want)
   }
 
@@ -156,11 +156,10 @@ class MagicSpec extends AnyFunSuite {
     val data = graph(10, 40)
     val df = spark.createDataset(data).toDF()
     val goal = (None, T, Some(n("c0")))
-    // Some(0) forces the distributed loop so the cross-face comparison
-    // stays meaningful under the adaptive local-fixpoint threshold
-    val got = Magic.answer(df, rdfsBackward.rules, goal,
-        localMaxBase = Some(0L))
-      .as[Triple].collect().toSet
+    // budget 0 pins the distributed loop so the cross-face comparison
+    // stays meaningful under the adaptive driver budget
+    val got = TestSpark.withFixpointBudget(0)(
+      Magic.answer(df, rdfsBackward.rules, goal).as[Triple].collect().toSet)
     val want = Magic.answerLocal(data, rdfsBackward.rules, goal)
     assert(got == want && got.nonEmpty)
   }

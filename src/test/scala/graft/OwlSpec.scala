@@ -233,9 +233,10 @@ class OwlSpec extends AnyFunSuite {
       val premises = t.premises.flatMap(loadWg)
       val local = Owl.closureLocal(premises)
       val df = spark.createDataset(premises)(Encoders.product[Triple]).toDF()
-      val dist = Owl.closure(df, expandDifferentFrom = true,
-          localMaxBase = Some(0L)) // force the distributed loop (cross-face)
-        .as(Encoders.product[Triple]).collect().toSet
+      // budget 0 pins the distributed loop (cross-face)
+      val dist = TestSpark.withFixpointBudget(0)(
+        Owl.closure(df, expandDifferentFrom = true)
+          .as(Encoders.product[Triple]).collect().toSet)
       assert(dist === local, s"$rel: DataFrame closure diverges from local " +
         s"(missing=${(local -- dist).take(3).map(_.toNTriples)}, " +
         s"extra=${(dist -- local).take(3).map(_.toNTriples)})")

@@ -130,10 +130,10 @@ class PipelineSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val edges = (1 to 400).map(_ => (s"n${rnd.nextInt(120)}", s"n${rnd.nextInt(120)}"))
       .toDF("src", "dst")
-    val local = graft.canon.ConnectedComponents.runAdaptive(edges, localThreshold = 1000000)
+    def cc() = graft.canon.ConnectedComponents.runAdaptive(edges)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val dist = graft.canon.ConnectedComponents.run(edges.toDF("src", "dst"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val local = cc()
+    val dist = TestSpark.withFixpointBudget(0)(cc())
     assert(local == dist)
   }
 

@@ -522,8 +522,30 @@ class PlanSpec extends AnyFunSuite {
       "rule bodies with shared vars must plan as equi-joins:\n" + p)
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
       "the shared-var join must be a hash/merge equi-join:\n" + p)
-    val df = Rules.closure(base, rules, localMaxBase = Some(0L))
+    val df = TestSpark.withFixpointBudget(0)(Rules.closure(base, rules))
     assert(df.count() == 105) // 55 base + 50 derived (c_k type Top)
+  }
+
+  test("distributed rule closure: a pinned Spark job count over a 13-round chain") {
+    import graft.reason.Rules
+    // a 12-link chain under a linear closure program: round k derives the
+    // k-link paths, so the loop takes 13 rounds. Every rule head has a
+    // constant predicate, so each round's dispatch set rides the
+    // checkpoint job as an observed aggregate; if that Observation stops
+    // surfacing (say, in the loop session) every round falls back to a
+    // second collect job and the count grows by one per round.
+    val chain = (0 until 12).map(k => Triple(Term.iri(EX + "n" + k),
+      Term.iri(EX + "link"), Term.iri(EX + "n" + (k + 1))))
+    val rules = Rules.parse(
+      s"[r1: (?a <${EX}link> ?b) -> (?a <${EX}next> ?b)] " +
+        s"[r2: (?a <${EX}next> ?b), (?b <${EX}link> ?c) -> (?a <${EX}next> ?c)]")
+    val base = spark.createDataset(chain).toDF()
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      df = TestSpark.withFixpointBudget(0)(Rules.closure(base, rules))
+    }
+    assert(df.count() == 12 + 12 * 13 / 2)
+    assert(jobs == 89, s"distributed 13-round rule closure launched $jobs jobs")
   }
 
   test("whole-suite sweep: nested-loop joins ONLY in the declared brute baselines") {

@@ -127,13 +127,11 @@ class RulesSpec extends AnyFunSuite {
     val data = loadRdf("rdfs/tbox1.rdf") ++ loadRdf("rdfs/data2.rdf")
     val withCmp = data ++ Rules.rdfsCmpAxioms(data)
     val want = Rules.closureLocal(withCmp, ruleSet)
-    // localMaxBase = Some(0) forces the DISTRIBUTED loop — the default
-    // adaptive threshold would route this document-sized base to the
-    // local engine and the cross-face comparison would be trivial
-    val got = Rules.closure(
-      spark.createDataset(withCmp).toDF(), ruleSet,
-      localMaxBase = Some(0L))
-      .as[Triple].collect().toSet
+    // budget 0 pins the DISTRIBUTED loop — the default driver budget
+    // would route this document-sized base to the local engine and the
+    // cross-face comparison would be trivial
+    val got = TestSpark.withFixpointBudget(0)(Rules.closure(
+      spark.createDataset(withCmp).toDF(), ruleSet).as[Triple].collect().toSet)
     assert(got == want,
       s"missing=${(want -- got).take(4)} extra=${(got -- want).take(4)}")
     info(s"${got.size} closure triples agree across both faces")
@@ -151,13 +149,13 @@ class RulesSpec extends AnyFunSuite {
     val base = spark.createDataset(chain).toDF()
     val want = Rules.closureLocal(chain, rules)
     assert(want.size == 61 * 60 / 2)
-    // default threshold (100k): the 60-fact base takes the DRIVER path
+    // default budget (1M): the 60-fact base takes the DRIVER path
     val local = Rules.closure(base, rules).as[Triple].collect().toSet
     assert(local == want)
-    // localMaxBase = 100 admits the base but caps derived facts at 800 —
+    // budget 800 admits bases up to 100 facts but caps facts at 800 —
     // the overflow must fall back to the distributed loop, same answer
-    val fellBack = Rules.closure(base, rules, localMaxBase = Some(100L))
-      .as[Triple].collect().toSet
+    val fellBack = TestSpark.withFixpointBudget(800)(
+      Rules.closure(base, rules).as[Triple].collect().toSet)
     assert(fellBack == want)
     // and the local engine alone respects an explicit cap loudly
     intercept[Rules.LocalFixpointOverflow](
