@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
  * jena-arq/.../path/eval/PathEngine.java:96–129 — BFS with a visited set).
  * Frontier-delta semi-naive iteration: each round joins only the NEW pairs
  * against the edge list, so work is proportional to the delta, not the
- * closure; localCheckpoint truncates lineage per round. The loop plans in
- * [[Fixpoint.loopSession]] like every fixpoint; unlike Rules and CC it has
- * no driver-local face yet, so the [[Fixpoint.BudgetKey]] budget
- * (`graft.fixpoint.driverRows`) does not route it. */
+ * closure. The rounds are [[Fixpoint.semiNaive]], the loop the
+ * distributed rule closure runs too; it plans in [[Fixpoint.loopSession]]
+ * like every fixpoint. Unlike Rules and CC it has no driver-local face
+ * yet, so the [[Fixpoint.BudgetKey]] budget (`graft.fixpoint.driverRows`)
+ * does not route it. */
 object Graphs {
 
   /** Rounds taken by the most recent closure loop on this JVM (either
    * [[transitiveClosure]] or [[reachableFrom]]) — a test-only trace hook:
-   * specs assert a seeded cone query stops after cone-depth rounds while
+   * specs assert a seeded cone query stops after cone-depth rounds, whereas
    * the global closure of the same graph needs diameter rounds.
    * Volatile, last-writer-wins; concurrent closures would interleave
    * (single-threaded specs are the only readers). */
@@ -45,12 +46,13 @@ object Graphs {
                     maxIter: Int = 10000): DataFrame =
     closure(edges, Some(seeds), maxIter)
 
-  /** The one frontier-delta loop behind [[transitiveClosure]] (`seeds`
-   * None: the first frontier is every edge, round 0) and [[reachableFrom]]
-   * (the seeds' out-edges, round 1). The edge relation and the seeds are
-   * made distinct, lifted into the [[Fixpoint.loopSession]] and
-   * materialized there; the loop runs isolated and its result lifts back.
-   * Always distributed: it takes no driver-local face. */
+  /** [[transitiveClosure]] (`seeds` None: the first frontier is every
+   * edge, round 0) and [[reachableFrom]] (the seeds' out-edges, round 1)
+   * as one [[Fixpoint.semiNaive]] step: the frontier's one-hop extension.
+   * The edge relation and the seeds are made distinct, lifted into the
+   * [[Fixpoint.loopSession]] and materialized there; the loop runs
+   * isolated and its result lifts back. Always distributed: it takes no
+   * driver-local face. */
   private def closure(edges: DataFrame, seeds: Option[DataFrame],
                       maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -64,45 +66,19 @@ object Graphs {
           .select(col("src"), col("dst")).distinct()
           .localCheckpoint(true), 1)
     }
-    var acc = first
-    var frontier = first
-    var iter = round0
-    var done = frontier.isEmpty
-    while (!done) {
-      iter += 1
-      if (iter > maxIter) throw new IllegalStateException(
-        if (seeds.isEmpty)
-          s"transitiveClosure did not reach a fixpoint within $maxIter rounds " +
-            "(graph diameter exceeds the cap) — raise maxIter"
-        else
-          s"reachableFrom did not reach a fixpoint within $maxIter rounds " +
-            "(cone depth exceeds the cap) — raise maxIter")
-      val next = frontier.alias("f")
+    val (acc, rounds) = Fixpoint.semiNaive(first, first, round0, maxIter,
+      if (seeds.isEmpty)
+        s"transitiveClosure did not reach a fixpoint within $maxIter rounds " +
+          "(graph diameter exceeds the cap) — raise maxIter"
+      else
+        s"reachableFrom did not reach a fixpoint within $maxIter rounds " +
+          "(cone depth exceeds the cap) — raise maxIter") { (_, frontier, _) =>
+      frontier.alias("f")
         .join(e.alias("e"), col("f.dst") === col("e.src"))
         .select(col("f.src").as("src"), col("e.dst").as("dst"))
         .distinct()
-      // semi-naive delta: anti-join the (small) per-round frontier product
-      // against the accumulated closure — unlike exceptAll, which re-sorts
-      // BOTH full sides per round, the left_anti hash probe streams `next`
-      // and scales with the delta, not the closure. The accumulator is
-      // renamed first: in round 1 `acc` IS the edge plan embedded inside
-      // `next`, and a same-name using-columns self-join trips attribute
-      // resolution ("key not found: src#N").
-      val accR = acc.select(col("src").as("__asrc"), col("dst").as("__adst"))
-      // null-SAFE equality: distinct() upstream dedups null endpoints
-      // null-safely, so a plain === here would never anti-match a pair
-      // with a null slot — it would re-enter the delta every round and
-      // the loop would spin to maxIter instead of converging
-      val delta = next.join(accR,
-        col("src") <=> col("__asrc") && col("dst") <=> col("__adst"), "left_anti")
-        .localCheckpoint(true)
-      if (delta.isEmpty) done = true
-      else {
-        acc = acc.union(delta).localCheckpoint(true)
-        frontier = delta
-      }
     }
-    lastClosureRounds = iter
+    lastClosureRounds = rounds
     Fixpoint.lift(spark, acc)
   }
 

@@ -2,7 +2,7 @@ package graft.reason
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Term, Triple}
@@ -645,9 +645,9 @@ object Rules {
   /** Semi-naive forward closure over a triple DataFrame (term-struct
    * columns s, p, o). Each rule × delta-position compiles to an equi-join
    * chain (constants as pushed filters, shared vars as join keys); heads
-   * project back to triples; the per-round delta is the anti-join of the
-   * derivations against the accumulated closure — the same discipline
-   * (and the same lineage-checkpoint cadence) as Graphs.transitiveClosure.
+   * project back to triples; the rounds are [[Fixpoint.semiNaive]], the
+   * one delta loop Graphs.transitiveClosure runs too: the per-round delta
+   * is the anti-join of the derivations against the accumulated closure.
    * Like every fixpoint it plans in [[Fixpoint.loopSession]]:
    * the input lifts in, the loop (axioms included) runs there, and the
    * flat result lifts back — the caller's session conf is never touched.
@@ -942,7 +942,7 @@ object Rules {
 
   /** [[closure]]'s loop, run inside the loop session: the driver face when
    * `Fixpoint.local(8 × base)` holds (facts capped at the budget), else
-   * the distributed semi-naive rounds. */
+   * [[Fixpoint.semiNaive]] with [[deriveOnce]] as its step. */
   private def closure0(triples: DataFrame, rs: RuleSet, maxIter: Int,
       baseDispatch: Option[Dispatch],
       axiomsSaturated: Boolean): DataFrame = {
@@ -983,31 +983,51 @@ object Rules {
       }
     }
 
-    // ---- fused dispatch: ONE Spark job per round ---------------------
+    // ---- distributed rounds: Fixpoint.semiNaive ----------------------
     // From round 1 on the delta is all DERIVED facts, so when every rule
     // head has a CONSTANT predicate (and every rdf:type head a constant
     // class) the per-round dispatch vocabulary is bounded by the PROGRAM
     // (≤ #heads) — tiny. Then the distinct (predicate, type-object) set
-    // can ride the checkpoint materialization as an observed collect_set
-    // aggregate, fusing the dispatch-collect with the checkpoint: one
-    // job per round instead of two. Programs with variable-predicate or
-    // variable-class heads have DATA-bounded vocabularies and keep the
-    // two-job path, whose executor-side distinct+limit caps what reaches
-    // the driver (an observed collect_set has no such cap).
+    // rides the delta's checkpoint job as an observed collect_set next to
+    // the loop's count: no dispatch job at all. Programs with
+    // variable-predicate or variable-class heads have DATA-bounded
+    // vocabularies and collect the set in a job of its own, whose
+    // executor-side distinct+limit caps what reaches the driver (an
+    // observed collect_set has no such cap).
     val fusedDispatchOk = rs.rules.forall(_.heads.forall {
       case Atom(_, RConst(p), o) =>
         p.lex != rdfTypeLex || o.isInstanceOf[RConst]
       case _ => false
     })
+    val pairCols = Seq(col("p.lex").as("p"),
+      when(col("p.lex") === rdfTypeLex, col("o.lex")).as("tobj"))
+    def pairsOf(rows: Seq[Row]) = rows.map(r => (r.getString(0), Option(r.getString(1))))
+    // the next round's dispatch, from the previous delta
+    def dispatchOf(delta: DataFrame, summary: Row): Option[Dispatch] = {
+      val pairs =
+        if (fusedDispatchOk) pairsOf(summary.getSeq[Row](summary.fieldIndex("pairs")))
+        else pairsOf(delta.select(pairCols: _*).distinct()
+          .limit(dispatchTypeObjCap + 1).collect().toSeq)
+      if (pairs.length > dispatchTypeObjCap) {
+        // class vocabulary too wide to collect — predicate-only
+        // dispatch, itself capped: a delta can also have a DATA-sized
+        // predicate vocabulary (rdf:_nnn …), and dispatch is an
+        // optimization, never a correctness gate — past the cap, match
+        // everything instead of collecting unbounded driver state
+        val preds = delta.select(col("p.lex")).distinct()
+          .limit(dispatchPredCap + 1).collect().map(_.getString(0))
+        if (preds.length > dispatchPredCap) None
+        else Some(Dispatch(preds.toSet, None))
+      } else Some(Dispatch(pairs.map(_._1).toSet,
+        Some(pairs.flatMap(_._2).toSet)))
+    }
     // family canonicalization is per-rule-set work: do it once, not once
     // per round (it re-walks every rule AST)
     val compiledFams = familize(rs.rules)
-    var all = base
-    var flat = true // whether `all` is currently a single checkpointed plan
     // round 1's delta: the whole base, or — when the axioms are already
     // a fixpoint — the data slice only (a cheap broadcast anti-join over
     // the cached base; see the `axiomsSaturated` contract)
-    var delta = axiomDf match {
+    val delta0 = axiomDf match {
       case Some(ax) if axiomsSaturated =>
         val axR = ax.select(col("s").as("__as"), col("p").as("__ap"),
           col("o").as("__ao"))
@@ -1016,95 +1036,15 @@ object Rules {
             col("o") === col("__ao"), "left_anti")
       case _ => base
     }
-    var dispatch: Option[Dispatch] = baseDispatch
-    var deltaEmpty = delta.isEmpty
-    var iter = 0
-    while (!deltaEmpty) {
-      iter += 1
-      if (iter > maxIter) throw new IllegalStateException(
-        s"rule closure did not reach a fixpoint within $maxIter rounds")
-      // (An explicit broadcast hint on small deltas was measured a wash
-      // here — AQE already converts the tiny-delta joins at runtime; the
-      // structural lever is ground-rule family batching in deriveOnce.)
-      val derived = deriveOnce(rs, all, delta, dispatch, Some(compiledFams))
-      val allR = all.select(col("s").as("__as"), col("p").as("__ap"),
-        col("o").as("__ao"))
-      val freshPlan = derived.join(allR,
-        col("s") === col("__as") && col("p") === col("__ap") &&
-          col("o") === col("__ao"), "left_anti")
-      // fused path: the dispatch pairs ride the checkpoint job as an
-      // observed aggregate; getOrEmpty never blocks, so if the metric
-      // does not surface (defensive) the two-job collect below runs
-      val (fresh, fusedPairs) =
-        if (fusedDispatchOk) {
-          val obs = org.apache.spark.sql.Observation(s"rules_round_$iter")
-          val observed = freshPlan.observe(obs,
-            collect_set(struct(col("p.lex").as("p"),
-              when(col("p.lex") === rdfTypeLex, col("o.lex")).as("tobj")))
-              .as("pairs"))
-          val cp = observed.localCheckpoint(true)
-          // get() blocks until the observed action's execution event —
-          // normally already fired here (the checkpoint IS the action);
-          // the bounded wait + fallback guard against an event that never
-          // surfaces. A dedicated single-use daemon thread (not the
-          // global pool) runs the blocking get, and shutdownNow interrupts
-          // it on timeout — no thread can be left parked forever.
-          val metric: Option[Seq[(String, Option[String])]] = {
-            val ex = java.util.concurrent.Executors.newSingleThreadExecutor(
-              (r: Runnable) => { val t = new Thread(r, "rules-obs"); t.setDaemon(true); t })
-            try {
-              val fut = ex.submit(new java.util.concurrent.Callable[
-                Map[String, Any]] { def call(): Map[String, Any] = obs.get })
-              val m = fut.get(30, java.util.concurrent.TimeUnit.SECONDS)
-              m.get("pairs").map(_.asInstanceOf[Seq[org.apache.spark.sql.Row]]
-                .map(r => (r.getString(0), Option(r.getString(1)))))
-            } catch {
-              case _: java.util.concurrent.TimeoutException => None
-              case _: java.util.concurrent.ExecutionException => None
-              case e: InterruptedException =>
-                Thread.currentThread().interrupt(); None
-            } finally ex.shutdownNow()
-          }
-          (cp, metric)
-        } else (freshPlan.localCheckpoint(true), None)
-      // two-job fallback: one vocabulary-bounded collect — the distinct
-      // (predicate, rdf:type-object) set doubles as the emptiness check
-      // and the exact-dispatch key set
-      val pairs = fusedPairs.getOrElse {
-        fresh.select(col("p.lex").as("p"),
-            when(col("p.lex") === rdfTypeLex, col("o.lex")).as("tobj"))
-          .distinct().limit(dispatchTypeObjCap + 1)
-          .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSeq
-      }
-      deltaEmpty = pairs.isEmpty
-      dispatch =
-        if (pairs.length > dispatchTypeObjCap) {
-          // class vocabulary too wide to collect — predicate-only
-          // dispatch, itself capped: a delta can also have a DATA-sized
-          // predicate vocabulary (rdf:_nnn …), and dispatch is an
-          // optimization, never a correctness gate — past the cap, match
-          // everything instead of collecting unbounded driver state
-          val preds = fresh.select(col("p.lex")).distinct()
-            .limit(dispatchPredCap + 1).collect().map(_.getString(0))
-          if (preds.length > dispatchPredCap) None
-          else Some(Dispatch(preds.toSet, None))
-        } else Some(Dispatch(pairs.map(_._1).toSet,
-          Some(pairs.flatMap(_._2).toSet)))
-      if (!deltaEmpty) {
-        // `fresh` is already checkpointed — appending it lazily costs one
-        // extra scan per consumer, while re-checkpointing `all` would copy
-        // the WHOLE accumulated closure every round (O(rounds × total)
-        // memory traffic). Flatten every 8 rounds so deep closures keep a
-        // bounded plan width without the per-round full copy.
-        all = all.unionAll(fresh)
-        if (iter % 8 == 0) { all = all.localCheckpoint(true); flat = true }
-        else flat = false
-        delta = fresh
-      }
-    }
-    // the RETURNED frame must be a single LogicalRDD: it lifts back to the
-    // caller's session, whose constraint propagation trips over
-    // checkpointed-union plans ("key not found: attr")
-    if (flat) all else all.localCheckpoint(true)
+    // (An explicit broadcast hint on small deltas was measured a wash
+    // here — AQE already converts the tiny-delta joins at runtime; the
+    // structural lever is ground-rule family batching in deriveOnce.)
+    Fixpoint.semiNaive(base, delta0, 0, maxIter,
+        s"rule closure did not reach a fixpoint within $maxIter rounds",
+        if (fusedDispatchOk) Seq(collect_set(struct(pairCols: _*)).as("pairs"))
+        else Nil) { (all, delta, summary) =>
+      deriveOnce(rs, all, delta,
+        summary.fold(baseDispatch)(dispatchOf(delta, _)), Some(compiledFams))
+    }._1
   }
 }

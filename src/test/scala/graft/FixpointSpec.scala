@@ -4,6 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{Term, Triple}
@@ -63,6 +64,22 @@ class FixpointSpec extends AnyFunSuite {
       assert(pairs == (for (a <- 0 to 12; b <- a + 1 to 12) yield (s"v$a", s"v$b")).toSet)
       assert(Await.result(ruleCount, Duration.Inf) == closedSize(12))
     }
+  }
+
+  test("closures over null endpoints converge to the expected pairs") {
+    // the delta anti-join is null-safe: under `===` a pair with a null
+    // slot never matches the accumulator, so (null, y) would re-enter
+    // every round of the y ⇄ z cycle and the loop would spin to maxIter
+    val edges = Seq[(String, String)](
+      (null, "y"), ("y", "z"), ("z", "y"), ("a", "y"), ("y", null)).toDF("src", "dst")
+    // compared as sorted bags, so a pair accumulated twice fails too
+    def bag(ps: Seq[(String, String)]) = ps.map(_.toString).sorted
+    def pairs(df: DataFrame) = bag(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq)
+    val reach = Seq("y", "z", null)
+    assert(pairs(Graphs.transitiveClosure(edges, maxIter = 50)) ==
+      bag(for (s <- Seq(null, "y", "z", "a"); d <- reach) yield (s, d)))
+    assert(pairs(Graphs.reachableFrom(edges, Seq("a").toDF("n"), maxIter = 50)) ==
+      bag(reach.map(("a", _))))
   }
 
   test("the budget key parses a row count and rejects anything else") {

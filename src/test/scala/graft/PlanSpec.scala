@@ -530,10 +530,11 @@ class PlanSpec extends AnyFunSuite {
     import graft.reason.Rules
     // a 12-link chain under a linear closure program: round k derives the
     // k-link paths, so the loop takes 13 rounds. Every rule head has a
-    // constant predicate, so each round's dispatch set rides the
-    // checkpoint job as an observed aggregate; if that Observation stops
-    // surfacing (say, in the loop session) every round falls back to a
-    // second collect job and the count grows by one per round.
+    // constant predicate, so each round's count and dispatch set ride the
+    // delta's checkpoint job as one observed row; if that Observation
+    // stops surfacing (say, in the loop session) every round waits out
+    // Fixpoint.semiNaive's bound and computes the row with a second
+    // `agg` job, and the count grows by one per round.
     val chain = (0 until 12).map(k => Triple(Term.iri(EX + "n" + k),
       Term.iri(EX + "link"), Term.iri(EX + "n" + (k + 1))))
     val rules = Rules.parse(
@@ -546,6 +547,18 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(df.count() == 12 + 12 * 13 / 2)
     assert(jobs == 89, s"distributed 13-round rule closure launched $jobs jobs")
+  }
+
+  test("transitive closure: a pinned Spark job count over a 12-edge chain") {
+    import graft.ops.Graphs
+    // round k derives the (k + 1)-link paths, so the loop takes 12 rounds
+    // of the one semi-naive loop it shares with the rule closure above
+    val edges = (0 until 12).map(k => (s"v$k", s"v${k + 1}")).toDF("src", "dst")
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { df = Graphs.transitiveClosure(edges) }
+    assert(Graphs.lastClosureRounds == 12)
+    assert(df.count() == 12 * 13 / 2)
+    assert(jobs == 62, s"12-round transitive closure launched $jobs jobs")
   }
 
   test("whole-suite sweep: nested-loop joins ONLY in the declared brute baselines") {
