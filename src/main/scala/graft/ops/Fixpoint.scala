@@ -2,11 +2,13 @@ package graft.ops
 
 import java.util.concurrent.TimeoutException
 
+import scala.annotation.tailrec
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** The two decisions every distributed fixpoint makes, made in one place:
  * WHERE its loop plans ([[loopSession]] + [[lift]]) and WHETHER it runs
@@ -76,47 +78,37 @@ object Fixpoint {
    * the caller's conf untouched for the whole run. Results lift back as
    * self-contained leaves (LogicalRDD or LocalRelation). */
   private[graft] def lift(target: SparkSession, df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.SessionBridge.ofRows(
-      target, df.queryExecution.analyzed)
+    SessionBridge.ofRows(target, df.queryExecution.analyzed)
 
   /** The one semi-naive delta loop, run inside a [[loopSession]]. Round
    * `round0 + 1` starts from `acc0` and `delta0`; each round
    *  1. asks `step(acc, delta, summary)` for its candidate rows (`summary`
    *     is the previous delta's observed row, None in the first round);
-   *  1. anti-joins them against the accumulator on every column,
-   *     null-safe (`<=>`: a pair with a null slot never equals itself
-   *     under `===`, so it would re-enter every delta and the loop would
-   *     spin to `maxIter`);
+   *  1. anti-joins them against the accumulator on every column, null-safe
+   *     (`<=>`: under `===` a pair with a null slot never matches itself,
+   *     re-enters every delta and the loop spins to `maxIter`);
    *  1. localCheckpoints the new delta with ONE observed row — its count
    *     plus the caller's `observed` aggregates — so emptiness (and, for
    *     Rules, the next dispatch set) rides the checkpoint job itself;
-   *  1. stops when the count is 0, else appends the checkpointed delta
-   *     lazily: the anti-join probes a UNION ALL of deltas, flattened to
-   *     one checkpoint every 8 rounds so the plan width stays bounded.
-   * Jobs per round, counted with a listener over 12-link chains (4 cores,
-   * AQE on): one checkpoint job (none for the last, empty delta) plus the
-   * checkpointed plan's AQE jobs — 2 shuffle-map-stage and 2 broadcast
-   * jobs for the `Graphs` step (62 jobs for 12 rounds, about 5 a round),
-   * 3.6 and 2 for PlanSpec's linear rule program (89 for 13 rounds, about
-   * 7 a round) — plus one flatten job every 8 rounds and one at the end.
-   * Emptiness and a fused rule dispatch set take no job; an unfused
-   * dispatch collect adds its own shuffle job. An observed count or
-   * `collect_set` is safe under task retries where it is read (`> 0`,
-   * set contents); an observed sum would not be.
-   * @return one flat checkpoint of the closure (it lifts back as a single
-   *         LogicalRDD) and the last round number */
+   *  1. stops at count 0, else gives the delta that count as statistics
+   *     (joins over it plan as broadcasts up front) and flattens
+   *     `acc ∪ delta` into one checkpoint. Lazily appended deltas
+   *     (flattened every 8 rounds) take fewer jobs but measured slower
+   *     per round on small closures than one flat checkpoint.
+   * Per round, counted over 12-link chains (4 cores, AQE on): one delta
+   * checkpoint (none for the last, empty one), one flatten, about one
+   * shuffle-map-stage job (the step's `distinct`) and two broadcasts — 61
+   * jobs for the 12 rounds of a `Graphs` closure, 66 for the 13 rounds of
+   * PlanSpec's linear rule program; an unfused rule dispatch adds a
+   * collect. An observed count or `collect_set` is safe under task
+   * retries where it is read (`> 0`, set contents); a sum would not be.
+   * @return the closure as one checkpoint and the last round number */
   private[graft] def semiNaive(acc0: DataFrame, delta0: DataFrame, round0: Int,
       maxIter: Int, runaway: => String, observed: Seq[Column] = Nil)(
       step: (DataFrame, DataFrame, Option[Row]) => DataFrame): (DataFrame, Int) = {
     val aggs = count(lit(1)).as("__n") +: observed
-    var acc = acc0
-    var flat = true
-    var delta = delta0
-    var summary: Option[Row] = None
-    var round = round0
-    var done = delta0.isEmpty
-    while (!done) {
-      round += 1
+    @tailrec def rounds(acc: DataFrame, delta: DataFrame, summary: Option[Row],
+                        round: Int): (DataFrame, Int) = {
       if (round > maxIter) throw new IllegalStateException(runaway)
       val cand = step(acc, delta, summary)
       // the accumulator is renamed first: in round 1 it IS a plan embedded
@@ -131,15 +123,12 @@ object Fixpoint {
       // does, one explicit job computes the same row
       val row = try Await.result(obs.future, 30.seconds)
         catch { case _: TimeoutException => cp.agg(aggs.head, aggs.tail: _*).head() }
-      if (row.getLong(0) == 0) done = true
+      if (row.getLong(0) == 0) (acc, round)
       else {
-        acc = acc.unionAll(cp)
-        flat = round % 8 == 0
-        if (flat) acc = acc.localCheckpoint(true)
-        delta = cp
-        summary = Some(row)
+        val next = SessionBridge.withRowCount(cp, row.getLong(0))
+        rounds(acc.unionAll(next).localCheckpoint(true), next, Some(row), round + 1)
       }
     }
-    (if (flat) acc else acc.localCheckpoint(true), round)
+    if (delta0.isEmpty) (acc0, round0) else rounds(acc0, delta0, None, round0 + 1)
   }
 }

@@ -51,8 +51,7 @@ object Graphs {
    * as one [[Fixpoint.semiNaive]] step: the frontier's one-hop extension.
    * The edge relation and the seeds are made distinct, lifted into the
    * [[Fixpoint.loopSession]] and materialized there; the loop runs
-   * isolated and its result lifts back. Always distributed: it takes no
-   * driver-local face. */
+   * isolated and its result lifts back. */
   private def closure(edges: DataFrame, seeds: Option[DataFrame],
                       maxIter: Int): DataFrame = {
     val spark = edges.sparkSession

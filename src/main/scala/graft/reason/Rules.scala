@@ -1036,9 +1036,9 @@ object Rules {
             col("o") === col("__ao"), "left_anti")
       case _ => base
     }
-    // (An explicit broadcast hint on small deltas was measured a wash
-    // here — AQE already converts the tiny-delta joins at runtime; the
-    // structural lever is ground-rule family batching in deriveOnce.)
+    // (Small deltas need no broadcast hint: the loop gives each delta its
+    // observed row count as statistics, so their joins plan as broadcasts;
+    // the structural lever is ground-rule family batching in deriveOnce.)
     Fixpoint.semiNaive(base, delta0, 0, maxIter,
         s"rule closure did not reach a fixpoint within $maxIter rounds",
         if (fusedDispatchOk) Seq(collect_set(struct(pairCols: _*)).as("pairs"))
